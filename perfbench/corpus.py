@@ -4,16 +4,17 @@ Writes the ``documents`` table the dedup queries read, in the layout
 ``greenplum_dwh_spark.sources.tpch`` loads: 500 documents over a
 30-word vocabulary with planted near-duplicates, shaped like the
 repository's sf0.01 test dataset. Every value is a function of the
-seed.
+seed. It is written with pyarrow: a Spark job would be the cold
+session's first and cost ~6 s of the run's budget.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
+import random
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 WORDS = ["join", "hash", "row", "batch", "scan", "column", "customer",
          "filter", "small", "slow", "merge", "order", "vector", "line",
@@ -22,53 +23,36 @@ WORDS = ["join", "hash", "row", "batch", "scan", "column", "customer",
 LANGS = ["en", "en", "en", "zh", "es", "de", "fr"]
 
 
-def _u(seed: int, *cols) -> F.Column:
-    """Seeded uniform integer in [0, 2**31) of the given columns."""
-    return F.abs(F.xxhash64(F.lit(seed), *cols) % F.lit(1 << 31))
+def documents(seed: int, n_docs: int) -> pa.Table:
+    """Docs of 10-95 words; about every 10th doc (from the 10th on)
+    copies one of the 9 docs before it, rewrites one word and appends
+    ``dup``."""
+    rng = random.Random(seed)
+    words: list[list[str]] = []
+    texts = []
+    for d in range(n_docs):
+        if d >= 10 and rng.random() < 0.1:
+            w = list(words[d - 1 - rng.randrange(9)])
+            w[rng.randrange(len(w))] = rng.choice(WORDS)
+            text = " ".join(w) + " dup"
+        else:
+            w = rng.choices(WORDS, k=rng.randint(10, 95))
+            text = " ".join(w)
+        words.append(w)
+        texts.append(text)
+    return pa.table({
+        "doc_id": pa.array(range(n_docs), pa.int64()),
+        "text": texts,
+        "lang": [rng.choice(LANGS) for _ in range(n_docs)],
+        "source": [f"src{d % 20}" for d in range(n_docs)],
+        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+    })
 
 
-def _pick(values: list[str], idx: F.Column) -> F.Column:
-    return F.array(*[F.lit(v) for v in values])[
-        (idx % len(values)).cast("int")]
-
-
-def _documents(spark: SparkSession, seed: int, n_docs: int) -> DataFrame:
-    """Docs of 10-95 words; every 10th doc (by hash) copies an earlier
-    doc, rewrites one word and appends ``dup``."""
-    d = F.col("id")
-    is_dup = (d >= 10) & (_u(seed, d, F.lit("dup")) % 10 == 0)
-    src = F.when(is_dup, d - 1 - _u(seed, d, F.lit("src")) % 9).otherwise(d)
-    n_words = 10 + _u(seed, F.col("src"), F.lit("len")) % 86
-    edit = F.when(F.col("is_dup"), _u(seed, d, F.lit("pos")) % n_words) \
-        .otherwise(-1)
-    words = F.array(*[F.lit(w) for w in WORDS])
-    text = F.array_join(F.transform(
-        F.sequence(F.lit(0), n_words - 1),
-        lambda i: words[(F.when(i == F.col("edit"),
-                                _u(seed, d, i, F.lit("w")))
-                         .otherwise(_u(seed, F.col("src"), i, F.lit("w")))
-                         % len(WORDS)).cast("int")]), " ")
-    return (spark.range(n_docs)
-            .withColumn("is_dup", is_dup).withColumn("src", src)
-            .withColumn("edit", edit)
-            .withColumn("text", F.when(F.col("is_dup"),
-                                       F.concat(text, F.lit(" dup")))
-                        .otherwise(text))
-            .select(d.alias("doc_id"), "text",
-                    _pick(LANGS, _u(seed, d, F.lit("lang"))).alias("lang"),
-                    F.format_string("src%d", d % 20).alias("source"),
-                    F.length("text").cast("long").alias("n_chars")))
-
-
-def write(spark: SparkSession, seed: int, out_dir: str,
-          n_docs: int = 500) -> str:
+def write(seed: int, out_dir: str, n_docs: int = 500) -> str:
     """Write ``out_dir/documents.parquet`` as one file (the DuckDB oracle
     reads single files); returns out_dir."""
-    tmp = os.path.join(out_dir, "_documents")
-    _documents(spark, seed, n_docs).coalesce(1).write.mode(
-        "overwrite").parquet(tmp)
-    part, = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-    os.replace(os.path.join(tmp, part),
-               os.path.join(out_dir, "documents.parquet"))
-    shutil.rmtree(tmp)
+    os.makedirs(out_dir, exist_ok=True)
+    pq.write_table(documents(seed, n_docs),
+                   os.path.join(out_dir, "documents.parquet"))
     return out_dir

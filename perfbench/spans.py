@@ -62,28 +62,14 @@ class Tracer:
             self.sc.setLocalProperty(_DESC, saved[1])
             self.overhead_s += time.perf_counter() - t
 
-    def wrap(self, owner, attr: str, name: str, before=None, after=None):
-        """Replace ``owner.attr`` with a call inside span ``name``.
-
-        ``before(*args)`` runs ahead of the span and its result is
-        passed to ``after(rec, state, *args)`` once the call returns;
-        both are bookkeeping and count as tracing overhead."""
+    def wrap(self, owner, attr: str, name: str) -> None:
+        """Replace ``owner.attr`` with a call inside span ``name``."""
         fn = getattr(owner, attr)
 
         @functools.wraps(fn)
         def traced(*args, **kwargs):
-            if not self.enabled:
+            with self.span(name):
                 return fn(*args, **kwargs)
-            t = time.perf_counter()
-            state = before(*args) if before else None
-            self.overhead_s += time.perf_counter() - t
-            with self.span(name) as rec:
-                out = fn(*args, **kwargs)
-            t = time.perf_counter()
-            if after:
-                after(rec, state, *args)
-            self.overhead_s += time.perf_counter() - t
-            return out
 
         setattr(owner, attr, traced)
 
@@ -106,11 +92,16 @@ class Tracer:
             if parent is None or parent["layer"] != layer:
                 _add(acc, f"{layer}.wall_s", s["wall_s"])
                 _add(acc, f"{layer}.self_s", s["wall_s"] - s["children_s"])
-            _add(acc, f"{s['name']}.wall_s", s["wall_s"])
-            _add(acc, f"{s['name']}.calls", 1)
+            # a span named after its layer ("day", "pass") has no
+            # per-call keys of its own: they would double the layer's
+            per_call = s["name"] != layer
+            if per_call:
+                _add(acc, f"{s['name']}.wall_s", s["wall_s"])
+                _add(acc, f"{s['name']}.calls", 1)
             for k, v in g.items():
                 _add(acc, f"{layer}.{k}", v)
-                _add(acc, f"{s['name']}.{k}", v)
+                if per_call:
+                    _add(acc, f"{s['name']}.{k}", v)
                 _add(acc, f"op.{k}", v)
             for k, v in s.get("counts", {}).items():
                 _add(acc, f"{layer}.{k}", v)

@@ -8,7 +8,8 @@ after another from one process.
   dimension sizes at the end.
 - ``query_mix``: one pass over :data:`QUERIES` per operation, each
   call through the ``noop`` sink; every query is checked against its
-  DuckDB oracle on the untimed warm-up pass.
+  DuckDB oracle on an untimed pass, and an untimed ``noop`` pass warms
+  up the session before the timed ones.
 
 Each workload returns a :class:`Outcome`; ``run.py`` turns it into
 metrics.
@@ -18,6 +19,7 @@ from __future__ import annotations
 
 import dataclasses
 import datetime as dt
+import functools
 import os
 import time
 
@@ -66,11 +68,12 @@ class Outcome:
     notes: dict = dataclasses.field(default_factory=dict)
 
 
-def n_ops(seconds: float, op_seconds: float) -> int:
+def n_ops(seconds: float, op_seconds: float, least: int = 1) -> int:
     """Timed operations in a run of ``seconds``, for an operation that
-    takes about ``op_seconds`` on a 4-core host. The count depends on
-    ``seconds`` only, so a slower program is measured on the same work."""
-    return max(1, int(seconds // op_seconds))
+    takes about ``op_seconds`` on a 4-core host, and at least ``least``.
+    The count depends on ``seconds`` only, so a slower program is
+    measured on the same work."""
+    return max(least, round(seconds / op_seconds))
 
 
 def inventory(root: str) -> dict[str, int]:
@@ -95,17 +98,22 @@ def written(before: dict[str, int], after: dict[str, int]) -> tuple:
 # ---- daily_mart ---------------------------------------------------------
 def instrument_store(tracer: Tracer, store) -> None:
     """Span every data-path method of the warehouse's TableStore, and
-    count commits and rewritten buckets of ``overwrite_versioned``."""
+    count commits and rewritten buckets of ``overwrite_versioned``.
+    Only traced runs call it: untraced days run the store as it is."""
     for attr in ("read", "read_buckets", "read_version", "append",
                  "truncate", "drop", "init_append", "init_versioned",
                  "overwrite_partitions", "compact_append"):
         tracer.wrap(store, attr, f"tablestore.{attr}")
+    fn = store.overwrite_versioned
 
-    def before(name, *_):
-        return store.current_version(name), store.bucket_files(name)
-
-    def after(rec, state, name, *_):
-        v0, files0 = state
+    @functools.wraps(fn)
+    def overwrite_versioned(name, *args, **kwargs):
+        t = time.perf_counter()          # the counting is trace overhead
+        v0, files0 = store.current_version(name), store.bucket_files(name)
+        tracer.overhead_s += time.perf_counter() - t
+        with tracer.span("tablestore.overwrite_versioned") as rec:
+            out = fn(name, *args, **kwargs)
+        t = time.perf_counter()
         files1 = store.bucket_files(name)
         rec["counts"] = {
             "overwrite_calls": 1,
@@ -113,9 +121,10 @@ def instrument_store(tracer: Tracer, store) -> None:
             "buckets_rewritten": sum(
                 files0.get(k) != files1.get(k)
                 for k in files0.keys() | files1.keys())}
+        tracer.overhead_s += time.perf_counter() - t
+        return out
 
-    tracer.wrap(store, "overwrite_versioned",
-                "tablestore.overwrite_versioned", before, after)
+    store.overwrite_versioned = overwrite_versioned
 
 
 def report_counts(wh, run_ts: dt.datetime) -> dict[str, int]:
@@ -226,9 +235,10 @@ def daily_mart(run: Run, seed: int, seconds: float) -> Outcome:
     input_bytes = [sum(inventory(p).values()) for p in paths]
     t1 = time.perf_counter()
     wh = Warehouse(spark, os.path.join(run.work, "warehouse"))
-    instrument_store(tr, wh.store)
     t2 = time.perf_counter()
     traced = tr.enabled
+    if traced:
+        instrument_store(tr, wh.store)
     out = Outcome(setup_s=time.perf_counter() - t0, op_wall_s=[],
                   op_cpu_s=[])
     days = []
@@ -276,21 +286,37 @@ def query_mix(run: Run, seed: int, seconds: float) -> Outcome:
 
     tr, spark = run.tracer, run.spark
     t0 = time.perf_counter()
-    data = corpus.write(spark, seed, os.path.join(run.work, "corpus"))
+    data = corpus.write(seed, os.path.join(run.work, "corpus"))
     t1 = time.perf_counter()
     queries, oracles = entry.queries(), entry.oracle_sql()
     wrong = {}
-    for q in QUERIES:       # untimed warm-up pass: the oracle check
+    for q in QUERIES:       # untimed: the oracle check
         try:
             res = compare(queries[q](spark, data), oracles[q], data)
             if not res["ok"]:
                 wrong[q] = res["detail"]
         except Exception as e:
             wrong[q] = repr(e)
+    t2 = time.perf_counter()
+
+    def noop(q: str) -> None:
+        queries[q](spark, data).write.format("noop").mode("overwrite").save()
+
+    # An untimed warm-up pass through the noop sink, then the timed
+    # passes. On a 4-vCPU host the first noop pass after the oracle
+    # check runs ~15% slower than the next ones, and from the fifth
+    # execution of the queries on the JVM spends ~7 s more CPU a pass
+    # for a pass or two; warm-up plus three timed passes stay between.
+    spark.catalog.clearCache()
+    for q in QUERIES:
+        try:
+            noop(q)
+        except Exception as e:
+            wrong.setdefault(q, repr(e))
     out = Outcome(setup_s=time.perf_counter() - t0, op_wall_s=[],
                   op_cpu_s=[], setup_ok=not wrong)
 
-    for i in range(n_ops(seconds, 7)):
+    for i in range(n_ops(seconds, 6, least=3)):
         spark.catalog.clearCache()
         tr.op, overhead = i, tr.overhead_s
         cpu0, t = procstat.cpu_seconds(run.pid), time.perf_counter()
@@ -299,8 +325,7 @@ def query_mix(run: Run, seed: int, seconds: float) -> Outcome:
                 out.attempted += 1
                 try:
                     with tr.span(f"operators.{q}"):
-                        (queries[q](spark, data).write.format("noop")
-                         .mode("overwrite").save())
+                        noop(q)
                     out.failed += q in wrong
                 except Exception as e:
                     out.failed += 1
@@ -312,7 +337,8 @@ def query_mix(run: Run, seed: int, seconds: float) -> Outcome:
         out.per_op.append({"trace.overhead_s": tr.overhead_s - overhead})
     out.notes = {"wrong": wrong, "queries": QUERIES,
                  "setup_phases_s": {"generate": t1 - t0,
-                                    "oracle_pass": out.setup_s - (t1 - t0)}}
+                                    "oracle_pass": t2 - t1,
+                                    "warm_up_pass": out.setup_s - (t2 - t0)}}
     return out
 
 
