@@ -210,8 +210,8 @@ def bench_cdc_pruned_scaling(spark, tmp: str) -> dict:
     bases (1× and 10× rows), identical single-bucket change batches
     applied through (a) the pruned handler (read_buckets +
     only_buckets commit — the production path) and (b) a full-diff
-    twin (read whole table, fingerprint both sides entirely — the
-    pre-round-6 path).  Handlers are invoked directly (foreachBatch
+    twin (read the whole table, merge, fingerprint the whole
+    result).  Handlers are invoked directly (foreachBatch
     calling convention) so the row measures the merge+commit, not
     trigger overhead.  Expected shape: pruned per-batch wall ~flat
     across bases, full-diff wall growing with the base."""

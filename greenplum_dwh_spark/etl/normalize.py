@@ -12,6 +12,13 @@ Scale notes:
   append-only, embarrassingly parallel.
 - dim rewrites shuffle only dim-sized data; the staged side of every
   join is broadcast.
+- a dim whose batch changes nothing is skipped by a call-site probe
+  (``scd2_changes(...).isEmpty()`` / ``scd1_is_noop``) and never
+  reaches the store; a changed dim's commit fingerprints only the new
+  dim — the committed side's fingerprints come from its manifest.
+- the returned dim counts are manifest sums (``Warehouse.row_count``),
+  not ``count()`` jobs, and opening a dim starts no job: the store
+  reads it under its stored schema.
 - re-running without a new landing batch double-loads the fact, exactly
   like the reference (no dedup at ETL.sql:121-130); the landing truncate
   is what makes the pipeline idempotent-ish (SURVEY.md §2.11.7).
@@ -44,12 +51,11 @@ def normalize_transactions(wh) -> dict:
         # on `changes`) — skip the copy-on-write rewrite entirely. The
         # emptiness probe is a dim-sized anti-join, orders cheaper than
         # rewriting the dim at scale.
-        if scd2.scd2_changes(staged, dim, attr_cols).isEmpty():
-            counts[meta["hist"]] = dim.count()
-            continue
-        new_dim = scd2.scd2_apply(dim, staged, meta["key"], attr_cols)
-        wh.overwrite_dim(meta["hist"], new_dim)
-        counts[meta["hist"]] = wh.read(meta["hist"]).count()
+        if not scd2.scd2_changes(staged, dim, attr_cols).isEmpty():
+            wh.overwrite_dim(meta["hist"],
+                             scd2.scd2_apply(dim, staged, meta["key"],
+                                             attr_cols))
+        counts[meta["hist"]] = wh.row_count(meta["hist"])
 
     # ---- fact append (ETL.sql:121-130) ------------------------------
     fact = landing.select(
@@ -67,14 +73,12 @@ def normalize_transactions(wh) -> dict:
     for name, meta in schemas.DIMENSIONS.items():
         staged = staging.scd1_staging(landing, meta)
         dim = wh.read(meta["scd1"])
-        if scd1.scd1_is_noop(dim, staged, meta["key"],
-                             scd1.UPDATE_ATTRS[name]):
-            counts[meta["scd1"]] = dim.count()
-            continue
-        new_dim = scd1.scd1_apply(dim, staged, meta["key"],
-                                  scd1.UPDATE_ATTRS[name])
-        wh.overwrite_dim(meta["scd1"], new_dim)
-        counts[meta["scd1"]] = wh.read(meta["scd1"]).count()
+        if not scd1.scd1_is_noop(dim, staged, meta["key"],
+                                 scd1.UPDATE_ATTRS[name]):
+            wh.overwrite_dim(meta["scd1"],
+                             scd1.scd1_apply(dim, staged, meta["key"],
+                                             scd1.UPDATE_ATTRS[name]))
+        counts[meta["scd1"]] = wh.row_count(meta["scd1"])
 
     # ---- truncate landing (ETL.sql:447) -----------------------------
     landing.unpersist()

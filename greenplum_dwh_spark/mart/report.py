@@ -11,7 +11,8 @@ injected instead of ``current_timestamp`` so runs are deterministic
 The staging DataFrame is cached once and shared by all four rules —
 the Spark analogue of the reference's temp-table reuse + its
 "using with to prevent unnecessary recomputing" comment
-(Data_mart.sql:20-21).
+(Data_mart.sql:20-21). The rules' output is persisted too, so the
+row count and the report append compute it once.
 """
 
 from __future__ import annotations
@@ -40,11 +41,14 @@ def add_report_data(wh, scd_type: str,
         set_based = (rules_expired(stg, run_ts)
                      .unionByName(rule_city_hop(stg, run_ts)))
         chains = detect_amount_guessing(stg, run_ts)
-        batch = set_based.unionByName(chains)
-        n = batch.count()
-        if n:
-            wh.append("report", batch)
-        return n
+        batch = set_based.unionByName(chains).persist()
+        try:
+            n = batch.count()
+            if n:
+                wh.append("report", batch)
+            return n
+        finally:
+            batch.unpersist()
     finally:
         stg.unpersist()
 

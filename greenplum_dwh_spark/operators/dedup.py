@@ -127,10 +127,8 @@ def last_band_guard_metrics() -> dict | None:
         m = dict(obs.get)
     except Exception:
         # AQE pruned the observed subtree — recompute from the
-        # registration site's metric-free fallback aggregate (each
-        # site supplies the aggregate matching its own row shape:
-        # per-membership rows for _guarded_bands, per-bucket rows
-        # for _banded_candidates)
+        # registration's metric-free fallback aggregate (every site
+        # registers through _guarded_bands, over per-membership rows)
         m = fallback.first().asDict()
     # each row of a dropped bucket contributes 1/_bn → buckets count
     m["dropped_buckets"] = int(round(m.pop("dropped_buckets_frac") or 0.0))

@@ -12,12 +12,24 @@ append-only zlib tables for landing/fact/report (DDL.sql:37-39,53-58,
 - **versioned tables** (dimensions): UPDATE/MERGE is emulated with
   **bucket-granular copy-on-write** — rows are hash-bucketed on the
   dimension's natural key into ``b=K/v=M`` directories, and each commit
-  writes a JSON *manifest* mapping bucket → the version whose files
-  carry it. A merge fingerprints each bucket on both sides (sum of
-  64-bit row hashes + row count) and rewrites **only the buckets whose
-  content changed**; untouched buckets' parquet files are reused
-  byte-identical by reference from the new manifest. A batch that
-  changes nothing commits nothing. This is the file-granularity
+  writes a JSON *manifest* ``m_<v>.json``:
+
+  - ``buckets``: bucket → the version whose ``b=K/v=M`` dir carries it;
+  - ``fps``: bucket → ``[fingerprint, rows]`` of that bucket's content
+    (sum of 64-bit row hashes, row count).
+
+  ``_meta.json`` holds the bucket key, the bucket count and the
+  table's declared schema; every read passes that schema to the
+  parquet reader, so opening a versioned table starts no Spark job.
+
+  A merge fingerprints only the NEW side and diffs it against the
+  fingerprints the current manifest carries: the committed side is
+  never re-scanned, so a commit costs O(new dim), not O(new + old).
+  It rewrites **only the buckets whose content changed**; untouched
+  buckets' parquet files are reused byte-identical by reference from
+  the new manifest. A batch that changes nothing commits nothing, and
+  a table's row count is a sum over its manifest (``row_count``).
+  This is the file-granularity
   mechanism Delta/Iceberg use for MERGE: at 100 TB a daily SCD batch
   touching 0.1% of a multi-GB dimension rewrites ~0.1% of its files
   instead of all of them, while the atomic pointer flip keeps
@@ -335,15 +347,39 @@ class TableStore:
         with open(self._path(name, _META)) as f:
             return json.load(f)
 
-    def _manifest(self, name: str, version: int) -> dict[int, int]:
-        """bucket id -> version whose ``b=K/v=M`` dir carries its rows."""
+    def _schema(self, name: str) -> T.StructType:
+        """The declared schema ``init_versioned`` stored in
+        ``_meta.json``.  A table initialised before the schema was
+        stored there falls back to the anchor's footer (one inference
+        job per call)."""
+        meta = self._table_meta(name)
+        if "schema" in meta:
+            return T.StructType.fromJson(meta["schema"])
+        return self.spark.read.parquet(self._path(name, _ANCHOR)).schema
+
+    def _manifest_doc(self, name: str, version: int) -> dict:
+        """The parsed ``m_<version>.json``: ``buckets`` (bucket id ->
+        version whose ``b=K/v=M`` dir carries its rows) and ``fps``
+        (bucket id -> ``[fingerprint, rows]``)."""
         path = self._path(name, f"m_{version}.json")
         if not os.path.isfile(path):
             raise ValueError(
                 f"manifest for version {version} of {name} not available "
                 f"(current={self._current_version(name)}, vacuum keeps 2)")
         with open(path) as f:
-            return {int(k): v for k, v in json.load(f)["buckets"].items()}
+            return json.load(f)
+
+    def _manifest(self, name: str, version: int) -> dict[int, int]:
+        """bucket id -> version whose ``b=K/v=M`` dir carries its rows."""
+        return {int(k): v for k, v in
+                self._manifest_doc(name, version)["buckets"].items()}
+
+    @staticmethod
+    def _stored_fingerprints(doc: dict) -> dict[int, tuple[int, int]]:
+        """bucket id -> committed ``(fingerprint, rows)`` of a manifest
+        document.  A manifest written before fingerprints were stored
+        has no ``fps``; its buckets are missing here."""
+        return {int(k): (fp, n) for k, (fp, n) in doc.get("fps", {}).items()}
 
     def _bucket_col(self, name: str) -> F.Column:
         meta = self._table_meta(name)
@@ -360,18 +396,21 @@ class TableStore:
         # natural key first; callers pass it explicitly from schema meta
         key = key_col or schema.fields[0].name
         with open(self._path(name, _META), "w") as f:
-            json.dump({"key": key, "n_buckets": n_buckets}, f)
+            json.dump({"key": key, "n_buckets": n_buckets,
+                       "schema": schema.jsonValue()}, f)
         # 0-row schema anchor: keeps reads typed when no bucket has rows
         self._empty(self.spark, schema).write.mode("overwrite") \
             .parquet(self._path(name, _ANCHOR))
-        self._commit(name, 0, {})
+        self._commit(name, 0, {}, {})
 
-    def _commit(self, name: str, version: int,
-                buckets: dict[int, int]) -> None:
+    def _commit(self, name: str, version: int, buckets: dict[int, int],
+                fps: dict[int, tuple[int, int]]) -> None:
         """Write manifest, flip the pointer (atomic commit), vacuum."""
         with open(self._path(name, f"m_{version}.json"), "w") as f:
             json.dump({"buckets": {str(k): v
-                                   for k, v in sorted(buckets.items())}}, f)
+                                   for k, v in sorted(buckets.items())},
+                       "fps": {str(k): list(e)
+                               for k, e in sorted(fps.items())}}, f)
         ptr = self._path(name, _POINTER)
         tmp = ptr + ".tmp"
         with open(tmp, "w") as f:
@@ -399,7 +438,8 @@ class TableStore:
                         shutil.rmtree(os.path.join(root, d, vd),
                                       ignore_errors=True)
 
-    def _fingerprints(self, df: DataFrame, bucket: F.Column) -> dict:
+    def _fingerprints(self, df: DataFrame,
+                      bucket: F.Column) -> dict[int, tuple[int, int]]:
         """bucket -> (sum of xxhash64 over all columns, row count).
         Order-insensitive 64-bit content fingerprint per bucket; the sum
         is carried in decimal(38) so it never overflows (ANSI-safe)."""
@@ -408,35 +448,47 @@ class TableStore:
                      .alias("fp"),
                      F.count(F.lit(1)).alias("n"))
                 .collect())
-        return {r["__b"]: (r["fp"], r["n"]) for r in rows}
+        return {r["__b"]: (int(r["fp"]), r["n"]) for r in rows}
 
     def overwrite_versioned(self, name: str, df: DataFrame,
                             only_buckets: list[int] | None = None) -> None:
-        """MERGE-shaped commit: diff per-bucket fingerprints against the
-        current version and rewrite only changed buckets. Identical
-        content commits nothing (steady-state no-op).
+        """MERGE-shaped commit: fingerprint ``df`` per bucket, diff it
+        against the fingerprints the current manifest stores, and
+        rewrite only changed buckets. Identical content commits nothing
+        (steady-state no-op).
 
-        ``only_buckets`` is the PRUNED leg (round-5 verdict item 6):
-        ``df`` carries the new content of ONLY those buckets, every
-        other bucket is carried forward by manifest reference without
-        being read, fingerprinted, or rewritten — so a commit's cost
-        scales with the buckets its keys touch, not the base size
-        (the 100 TB replacement for the full-diff leg, which scans
-        both sides entirely).  A ``df`` row hashing OUTSIDE
+        The committed side is never read: its per-bucket
+        ``(fingerprint, rows)`` come from the current ``m_<v>.json``,
+        and the new manifest stores the same pair for every live
+        bucket.  ``df`` is cast to the schema in ``_meta.json`` before
+        it is fingerprinted, so the stored value equals what a fresh
+        scan of the written files computes.  A manifest bucket with no
+        stored fingerprint (a manifest written before they were
+        stored) counts as changed: it is rewritten once, and stored
+        from then on.
+
+        ``only_buckets`` is the PRUNED leg: ``df`` carries the new
+        content of ONLY those buckets, every other bucket is carried
+        forward by manifest reference without being fingerprinted or
+        rewritten — so a commit's cost scales with the buckets its
+        keys touch, not the base size.  A ``df`` row hashing OUTSIDE
         ``only_buckets`` raises: it would otherwise vanish from the
         table while its bucket's manifest entry kept the stale
         version."""
         v_cur = self._current_version(name)
         bucket = self._bucket_col(name)
-        # pin the anchor's column order: bucket files from different
-        # commits must share one parquet schema, and the content
-        # fingerprint hashes columns in a fixed order
-        anchor_cols = [
-            f.name for f in
-            self.spark.read.parquet(self._path(name, _ANCHOR)).schema]
-        df = df.select(*anchor_cols).persist()
+        # pin the stored schema: bucket files from different commits
+        # share one parquet schema, and the content fingerprint hashes
+        # the columns in a fixed order with their stored types
+        df = df.select(*[F.col(f.name).cast(f.dataType)
+                         for f in self._schema(name)]).persist()
         try:
             new_fp = self._fingerprints(df, bucket)
+            doc = (self._manifest_doc(name, v_cur) if v_cur >= 0
+                   else {"buckets": {}})
+            manifest = {int(k): m for k, m in doc["buckets"].items()}
+            fps = self._stored_fingerprints(doc)
+            candidates = new_fp.keys() | manifest.keys()
             if only_buckets is not None:
                 allowed = {int(b) for b in only_buckets}
                 stray = set(new_fp) - allowed
@@ -445,16 +497,9 @@ class TableStore:
                         f"pruned commit to {name}: df rows hash into "
                         f"buckets {sorted(stray)} outside "
                         f"only_buckets={sorted(allowed)}")
-                # bucket-pruned old-side scan: only the listed buckets
-                # are read and hashed (read_buckets can't leak others)
-                old_fp = (self._fingerprints(
-                    self.read_buckets(name, sorted(allowed)), bucket)
-                    if v_cur >= 0 else {})
-            else:
-                old_fp = (self._fingerprints(self.read(name), bucket)
-                          if v_cur >= 0 else {})
-            changed = {k for k in new_fp.keys() | old_fp.keys()
-                       if new_fp.get(k) != old_fp.get(k)}
+                candidates &= allowed
+            changed = {k for k in candidates
+                       if k not in fps or fps[k] != new_fp.get(k)}
             if not changed and v_cur >= 0:
                 return
             v = v_cur + 1
@@ -472,28 +517,45 @@ class TableStore:
                         shutil.rmtree(dst, ignore_errors=True)
                         os.replace(src, dst)
                 shutil.rmtree(stage, ignore_errors=True)
-            manifest = ({} if v_cur < 0
-                        else dict(self._manifest(name, v_cur)))
             for k in changed:
                 if k in new_fp:
-                    manifest[k] = v
-                else:
-                    manifest.pop(k, None)        # bucket vanished
-            self._commit(name, v, manifest)
+                    manifest[k], fps[k] = v, new_fp[k]
+                else:                            # bucket vanished
+                    manifest.pop(k, None)
+                    fps.pop(k, None)
+            self._commit(name, v, manifest, fps)
         finally:
             df.unpersist()
 
+    def row_count(self, name: str) -> int:
+        """Rows in the current version of a versioned table, summed
+        from the manifest's per-bucket counts: no Spark job.  Buckets
+        of a manifest written before counts were stored are counted by
+        a bucket-pruned scan."""
+        doc = self._manifest_doc(name, self._current_version(name))
+        fps = self._stored_fingerprints(doc)
+        missing = [int(k) for k in doc["buckets"] if int(k) not in fps]
+        return (sum(n for _, n in fps.values())
+                + (self.read_buckets(name, missing).count()
+                   if missing else 0))
+
     # ---- reads -----------------------------------------------------------
-    def _read_manifest_paths(self, name: str, version: int) -> list[str]:
-        return [self._path(name, _ANCHOR)] + [
+    def _read_versioned(self, name: str, version: int,
+                        buckets: set[int] | None = None) -> DataFrame:
+        """Scan ``version``'s bucket dirs (all, or those in
+        ``buckets``) plus the 0-row anchor, under the stored schema:
+        no inference job, and an empty bucket list still yields a
+        typed frame."""
+        paths = [self._path(name, _ANCHOR)] + [
             self._path(name, f"b={k}", f"v={m}")
-            for k, m in sorted(self._manifest(name, version).items())]
+            for k, m in sorted(self._manifest(name, version).items())
+            if buckets is None or k in buckets]
+        return self.spark.read.schema(self._schema(name)).parquet(*paths)
 
     def read(self, name: str) -> DataFrame:
         v = self._current_version(name)
         if v >= 0:
-            return self.spark.read.parquet(
-                *self._read_manifest_paths(name, v))
+            return self._read_versioned(name, v)
         sidecar = self._path(name, "_schema.json")
         if os.path.isfile(sidecar):
             # partitioned append table: supply the declared schema so
@@ -524,14 +586,10 @@ class TableStore:
             # control; a raw Parquet PATH_NOT_FOUND would obscure it)
             anchor = self._path(name, _ANCHOR)
             if os.path.isdir(anchor):
-                return self.spark.read.parquet(anchor)
+                return self.spark.read.schema(self._schema(name)) \
+                    .parquet(anchor)
             raise ValueError(f"{name} is not a versioned table")
-        manifest = self._manifest(name, v)
-        want = {int(b) for b in buckets}
-        paths = [self._path(name, _ANCHOR)] + [
-            self._path(name, f"b={k}", f"v={m}")
-            for k, m in sorted(manifest.items()) if k in want]
-        return self.spark.read.parquet(*paths)
+        return self._read_versioned(name, v, {int(b) for b in buckets})
 
     def read_version(self, name: str, version: int) -> DataFrame:
         """Time travel on a versioned table (the retained previous
@@ -541,8 +599,7 @@ class TableStore:
             raise ValueError(
                 f"version {version} of {name} not available "
                 f"(current={self._current_version(name)}, vacuum keeps 2)")
-        return self.spark.read.parquet(
-            *self._read_manifest_paths(name, version))
+        return self._read_versioned(name, version)
 
     def current_version(self, name: str) -> int:
         return self._current_version(name)

@@ -92,5 +92,9 @@ class Warehouse:
     def overwrite_dim(self, name: str, df: DataFrame) -> None:
         self.store.overwrite_versioned(name, df)
 
+    def row_count(self, name: str) -> int:
+        """Rows of a versioned table, from its manifest (no Spark job)."""
+        return self.store.row_count(name)
+
     def truncate(self, name: str) -> None:
         self.store.truncate(name, TABLES[name][0])

@@ -279,10 +279,12 @@ def main() -> None:
             # CPU-budget throttling is invisible to loadavg and can
             # START mid-leg): bracket every leg with throughput
             # readings against the calm reference; a leg whose AFTER
-            # reading is degraded was measured inside a burst — retry
-            # it once after the box recovers, and if still degraded
-            # record the bracket verdict so the artifact carries its
-            # own contamination signal instead of a judge exercise
+            # reading is degraded was measured inside a burst — run
+            # it up to three times (``range(3)``), each attempt first
+            # waiting up to 15 min for a calm reading, so the worst
+            # case is ~45 min per leg; if still degraded, record the
+            # bracket verdict so the artifact carries its own
+            # contamination signal instead of a judge exercise
             for attempt in range(3):
                 # actively WAIT for a calm before-reading: the budget
                 # drained by the previous saturating leg refills in

@@ -1,14 +1,23 @@
-"""Drive the engine end-to-end through the public package API."""
-import datetime as dt, sys, tempfile
-sys.path.insert(0, "/root/repo")
+"""Drive the engine end-to-end through the public package API, and
+print the Spark jobs each pipeline day starts, per phase.
+
+    python scripts/drive_pipeline.py
+
+Jobs are read from one job group per phase (``session.job_group``).
+"""
+import datetime as dt, os, sys, tempfile
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import greenplum_dwh_spark as g
+from greenplum_dwh_spark.session import job_group
 from greenplum_dwh_spark.warehouse import Warehouse
 from greenplum_dwh_spark.sources import load_landing_file
 from greenplum_dwh_spark.etl import normalize_transactions
 from greenplum_dwh_spark.mart import add_report_data
 from greenplum_dwh_spark.mart.report import report_pivot
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 import bank_fixture as bf
 
 spark = g.get_spark("verify-drive", extra_conf={"spark.ui.enabled": "false",
@@ -17,10 +26,15 @@ tmp = tempfile.mkdtemp()
 wh = Warehouse(spark, tmp + "/wh")
 paths = bf.write_extracts(spark, tmp + "/extracts")
 for i, p in enumerate(paths):
-    n = load_landing_file(wh, p)
-    c = normalize_transactions(wh)
-    r = add_report_data(wh, "scd2", run_ts=dt.datetime(2020, 5, 2 + i, 23, 0))
-    print(f"day{i+1}: loaded={n} fact_total={c.get('fact_appended')} report_appended={r}")
+    with job_group(spark, "load") as load_jobs:
+        n = load_landing_file(wh, p)
+    with job_group(spark, "normalize") as etl_jobs:
+        c = normalize_transactions(wh)
+    with job_group(spark, "mart") as mart_jobs:
+        r = add_report_data(wh, "scd2", run_ts=dt.datetime(2020, 5, 2 + i, 23, 0))
+    jobs = {"load": len(load_jobs), "normalize": len(etl_jobs), "mart": len(mart_jobs)}
+    print(f"day{i+1}: loaded={n} fact_total={c.get('fact_appended')} report_appended={r}"
+          f" spark_jobs={sum(jobs.values())} {jobs}")
 
 print("\n=== report sample (day-3 run) ===")
 rep = wh.read("report")

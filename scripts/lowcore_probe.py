@@ -72,6 +72,7 @@ def main() -> None:
         # predicted and what the brackets exist to catch)
         # 15% tolerance: ambient multi-reading spread is ±12% calm;
         # the burst class collapses to 21–54% (round-11 forensics)
+        r = None
         for attempt in range(3):
             before = steal_reading()
             if not SP.is_calm(ref, before, pct=15.0):
@@ -94,6 +95,10 @@ def main() -> None:
                   f"(single {after['single']}); idle + retry",
                   file=sys.stderr, flush=True)
             time.sleep(240)
+        if r is None:
+            raise SystemExit(
+                f"lowcore_probe: {tag} leg refused — host not calm "
+                f"before any of 3 attempts; no leg was run")
         legs[tag] = r
         print(f"{tag} leg (cpus={cpus}, master={r['env']['master']}): "
               f"total {r['value']}s, bracket calm_after="

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from greenplum_dwh_spark.etl.scd1 import scd1_apply
@@ -319,3 +320,157 @@ def test_read_buckets_prunes_and_pruned_commit_matches_full(spark, tmp_path):
     bad = spark.createDataFrame([(stray_key, 1)], "k long, v long")
     with pytest.raises(ValueError, match="outside"):
         store.overwrite_versioned("t", bad, only_buckets=[some_bucket])
+
+
+# ---- commit-carried fingerprints and row counts ------------------------
+def _versioned_tables():
+    from greenplum_dwh_spark.warehouse import TABLES
+    return sorted(n for n, (_, kind) in TABLES.items()
+                  if kind == "versioned")
+
+
+@pytest.fixture(scope="module")
+def three_days(spark, tmp_path_factory):
+    """The 3-day bank fixture pipeline; per day, the dim counts
+    ``normalize_transactions`` returned next to a fresh ``count()``."""
+    from greenplum_dwh_spark.etl import normalize_transactions
+    from greenplum_dwh_spark.sources import load_landing_file
+    from greenplum_dwh_spark.warehouse import Warehouse
+    from tests import bank_fixture as bf
+
+    root = tmp_path_factory.mktemp("three_days")
+    wh = Warehouse(spark, str(root / "wh"))
+    per_day = []
+    for p in bf.write_extracts(spark, str(root / "ex")):
+        load_landing_file(wh, p)
+        got = normalize_transactions(wh)
+        per_day.append((
+            {n: got[n] for n in _versioned_tables()},
+            {n: wh.read(n).count() for n in _versioned_tables()}))
+    return wh, per_day
+
+
+def _assert_manifest_matches_scan(store, name):
+    """The current manifest stores, for exactly its live buckets, the
+    (fingerprint, rows) a fresh scan of the table computes."""
+    v = store.current_version(name)
+    stored = store._stored_fingerprints(store._manifest_doc(name, v))
+    assert set(stored) == set(store._manifest(name, v)), name
+    fresh = store._fingerprints(store.read(name), store._bucket_col(name))
+    assert stored == fresh, name
+    assert store.row_count(name) == sum(n for _, n in fresh.values())
+
+
+def test_stored_fingerprints_equal_fresh_scan(three_days):
+    """After the 3-day pipeline, and after one ``only_buckets``
+    commit, every versioned table's manifest carries the per-bucket
+    fingerprint and row count a fresh scan computes — and the commit
+    fingerprints only its new side (one ``_fingerprints`` call)."""
+    from tests import bank_fixture as bf
+
+    wh, _ = three_days
+    store = wh.store
+    for name in _versioned_tables():
+        _assert_manifest_matches_scan(store, name)
+
+    table = "dim_clients"
+    hot = (wh.read(table).filter(F.col("client_id") == bf.SCD_CLIENT)
+           .select(store._bucket_col(table).alias("b")).first()["b"])
+    merged = store.read_buckets(table, [hot]).withColumn(
+        "phone", F.when(F.col("client_id") == bf.SCD_CLIENT,
+                        F.lit("+70000000000")).otherwise(F.col("phone")))
+    calls = []
+    fingerprints = store._fingerprints
+
+    def counted(*args):
+        calls.append(1)
+        return fingerprints(*args)
+
+    store._fingerprints = counted
+    v0 = store.current_version(table)
+    try:
+        store.overwrite_versioned(table, merged, only_buckets=[hot])
+    finally:
+        del store._fingerprints
+    assert len(calls) == 1
+    assert store.current_version(table) == v0 + 1
+    _assert_manifest_matches_scan(store, table)
+
+
+def test_manifest_without_fingerprints_is_rewritten_once(spark, tmp_path):
+    """A table as written before fingerprints and schemas were stored
+    (no ``fps`` in its manifest, no ``schema`` in ``_meta.json``):
+    ``row_count`` still counts it, the next commit rewrites every
+    bucket, drops a bucket that vanished, and ends equal to a clean
+    run, fingerprints included."""
+    import json
+    import os
+
+    from pyspark.sql import types as T
+
+    from greenplum_dwh_spark.tablestore import TableStore
+
+    schema = T.StructType([T.StructField("k", T.LongType()),
+                           T.StructField("v", T.LongType())])
+    base = spark.range(200).select(F.col("id").alias("k"),
+                                   (F.col("id") * 10).alias("v"))
+
+    def run(root, strip):
+        store = TableStore(spark, str(root))
+        store.init_versioned("t", schema, key_col="k")
+        store.overwrite_versioned("t", base)
+        v = store.current_version("t")
+        if strip:
+            for doc_name, key in ((f"m_{v}.json", "fps"),
+                                  ("_meta.json", "schema")):
+                path = os.path.join(str(root), "t", doc_name)
+                with open(path) as f:
+                    doc = json.load(f)
+                del doc[key]
+                with open(path, "w") as f:
+                    json.dump(doc, f)
+            assert store.row_count("t") == 200
+        bucket = store._bucket_col("t")
+        gone = base.filter(F.col("k") == 3).select(
+            bucket.alias("b")).first()["b"]
+        nxt = (base.filter(bucket != gone)
+               .withColumn("v", F.when(F.col("k") == 7, F.lit(-1))
+                           .otherwise(F.col("v"))))
+        store.overwrite_versioned("t", nxt)
+        return store, v + 1, gone
+
+    stripped, v, gone = run(tmp_path / "stripped", strip=True)
+    clean, _, _ = run(tmp_path / "clean", strip=False)
+    manifest = stripped._manifest("t", v)
+    assert gone not in manifest
+    assert set(manifest.values()) == {v}          # every bucket rewritten
+    assert set(clean._manifest("t", v).values()) != {v}
+    assert sorted(stripped.read("t").collect()) == \
+        sorted(clean.read("t").collect())
+    assert stripped._stored_fingerprints(stripped._manifest_doc("t", v)) \
+        == clean._stored_fingerprints(clean._manifest_doc("t", v))
+    _assert_manifest_matches_scan(stripped, "t")
+    # stored from now on: the same content again commits nothing
+    stripped.overwrite_versioned("t", stripped.read("t"))
+    assert stripped.current_version("t") == v
+
+
+def test_versioned_reads_and_dim_counts_start_no_job(spark, three_days):
+    """Opening a versioned table and counting its rows from the
+    manifest start no Spark job; on every fixture day the dim counts
+    ``normalize_transactions`` returns equal a fresh ``count()``."""
+    from greenplum_dwh_spark.session import job_group
+
+    wh, per_day = three_days
+    for day, (got, want) in enumerate(per_day):
+        assert got == want, day
+    for name in _versioned_tables():
+        with job_group(spark, "read") as jobs:
+            wh.read(name)
+        assert jobs == [], name
+        with job_group(spark, "row_count") as jobs:
+            n = wh.row_count(name)
+        assert jobs == [], name
+        with job_group(spark, "count") as jobs:
+            assert wh.read(name).count() == n
+        assert jobs, name      # the group does see a block's jobs
