@@ -12,9 +12,7 @@ DuckDB oracle comparisons are deterministic.
 
 from __future__ import annotations
 
-import contextlib
 import os
-import uuid
 
 from pyspark.sql import SparkSession
 
@@ -81,25 +79,3 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
-
-
-@contextlib.contextmanager
-def job_group(spark: SparkSession, name: str):
-    """Put the Spark jobs the block starts into a fresh job group named
-    after ``name``; yields a list that holds their ids once the block
-    exits.  The previous group of the calling thread is restored."""
-    sc = spark.sparkContext
-    keys = ("spark.jobGroup.id", "spark.job.description")
-    prev = [sc.getLocalProperty(k) for k in keys]
-    group = f"{name}-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, name)
-    jobs: list[int] = []
-    try:
-        yield jobs
-    finally:
-        for k, v in zip(keys, prev):
-            sc.setLocalProperty(k, v)
-        # the status tracker is fed by the listener bus: drain it so
-        # every job the block started is visible
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))

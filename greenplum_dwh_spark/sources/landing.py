@@ -113,11 +113,8 @@ def last_day_filter(df: DataFrame) -> DataFrame:
 def load_landing_file(wh, path: str) -> int:
     """Full loader entry point: read extract → last-day filter → append
     to landing. Returns rows loaded."""
-    # persisted so the count and the append compute the extract once
-    day = last_day_filter(read_extract(wh.spark, path)).persist()
-    try:
-        n = day.count()
-        wh.append("landing", day)
-        return n
-    finally:
-        day.unpersist()
+    df = read_extract(wh.spark, path)
+    day = last_day_filter(df)
+    n = day.count()
+    wh.append("landing", day)
+    return n

@@ -21,6 +21,9 @@ append-only zlib tables for landing/fact/report (DDL.sql:37-39,53-58,
   ``_meta.json`` holds the bucket key, the bucket count and the
   table's declared schema; every read passes that schema to the
   parquet reader, so opening a versioned table starts no Spark job.
+  A table written before the schema and fingerprints were stored is
+  upgraded once, by ``init_versioned``: it stores the schema and
+  recommits the table, which rewrites every bucket with its ``fps``.
 
   A merge fingerprints only the NEW side and diffs it against the
   fingerprints the current manifest carries: the committed side is
@@ -349,13 +352,8 @@ class TableStore:
 
     def _schema(self, name: str) -> T.StructType:
         """The declared schema ``init_versioned`` stored in
-        ``_meta.json``.  A table initialised before the schema was
-        stored there falls back to the anchor's footer (one inference
-        job per call)."""
-        meta = self._table_meta(name)
-        if "schema" in meta:
-            return T.StructType.fromJson(meta["schema"])
-        return self.spark.read.parquet(self._path(name, _ANCHOR)).schema
+        ``_meta.json``."""
+        return T.StructType.fromJson(self._table_meta(name)["schema"])
 
     def _manifest_doc(self, name: str, version: int) -> dict:
         """The parsed ``m_<version>.json``: ``buckets`` (bucket id ->
@@ -390,6 +388,17 @@ class TableStore:
                        key_col: str | None = None,
                        n_buckets: int = N_BUCKETS) -> None:
         if self._current_version(name) >= 0:
+            meta = self._table_meta(name)
+            if "schema" not in meta:
+                # written before the schema and the per-bucket
+                # fingerprints were stored: store the schema, then
+                # recommit the table's own content once — its buckets
+                # have no stored fingerprint, so each is rewritten and
+                # gets its (fingerprint, rows)
+                meta["schema"] = schema.jsonValue()
+                with open(self._path(name, _META), "w") as f:
+                    json.dump(meta, f)
+                self.overwrite_versioned(name, self.read(name))
             return
         os.makedirs(self._path(name), exist_ok=True)
         # key defaults to the first schema column: every dim has its
@@ -529,15 +538,16 @@ class TableStore:
 
     def row_count(self, name: str) -> int:
         """Rows in the current version of a versioned table, summed
-        from the manifest's per-bucket counts: no Spark job.  Buckets
-        of a manifest written before counts were stored are counted by
-        a bucket-pruned scan."""
+        from the manifest's per-bucket counts: no Spark job."""
         doc = self._manifest_doc(name, self._current_version(name))
         fps = self._stored_fingerprints(doc)
-        missing = [int(k) for k in doc["buckets"] if int(k) not in fps]
-        return (sum(n for _, n in fps.values())
-                + (self.read_buckets(name, missing).count()
-                   if missing else 0))
+        missing = sorted(int(k) for k in doc["buckets"]
+                         if int(k) not in fps)
+        if missing:
+            raise ValueError(
+                f"{name}: buckets {missing} have no stored row count; "
+                f"the next commit stores them")
+        return sum(n for _, n in fps.values())
 
     # ---- reads -----------------------------------------------------------
     def _read_versioned(self, name: str, version: int,

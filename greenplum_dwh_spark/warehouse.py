@@ -40,7 +40,10 @@ class Warehouse:
         ONE seam every ETL/mart call site goes through — the
         Delta/Iceberg slot-in point (their MERGE replaces
         ``overwrite_versioned``, their transaction log replaces the
-        manifest+pointer commit).  ``tests/test_store_backends.py``
+        manifest+pointer commit, and ``row_count`` — which
+        ``normalize_transactions`` calls for every dimension — sums
+        the per-file ``numRecords`` statistics their log keeps, as
+        this store sums its manifest).  ``tests/test_store_backends.py``
         proves the swap: the SCD golden suite runs unchanged through a
         second backend without touching ``etl/``."""
         self.spark = spark

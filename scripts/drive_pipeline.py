@@ -3,14 +3,13 @@ print the Spark jobs each pipeline day starts, per phase.
 
     python scripts/drive_pipeline.py
 
-Jobs are read from one job group per phase (``session.job_group``).
+Jobs are read from one job group per phase (``tests/job_groups.py``).
 """
 import datetime as dt, os, sys, tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 import greenplum_dwh_spark as g
-from greenplum_dwh_spark.session import job_group
 from greenplum_dwh_spark.warehouse import Warehouse
 from greenplum_dwh_spark.sources import load_landing_file
 from greenplum_dwh_spark.etl import normalize_transactions
@@ -19,6 +18,7 @@ from greenplum_dwh_spark.mart.report import report_pivot
 
 sys.path.insert(0, os.path.join(REPO, "tests"))
 import bank_fixture as bf
+from job_groups import job_group
 
 spark = g.get_spark("verify-drive", extra_conf={"spark.ui.enabled": "false",
                                                 "spark.sql.shuffle.partitions": "8"})

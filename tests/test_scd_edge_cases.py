@@ -397,23 +397,34 @@ def test_stored_fingerprints_equal_fresh_scan(three_days):
     _assert_manifest_matches_scan(store, table)
 
 
-def test_manifest_without_fingerprints_is_rewritten_once(spark, tmp_path):
-    """A table as written before fingerprints and schemas were stored
-    (no ``fps`` in its manifest, no ``schema`` in ``_meta.json``):
-    ``row_count`` still counts it, the next commit rewrites every
-    bucket, drops a bucket that vanished, and ends equal to a clean
-    run, fingerprints included."""
-    import json
-    import os
-
+def _kv_table(spark):
     from pyspark.sql import types as T
-
-    from greenplum_dwh_spark.tablestore import TableStore
 
     schema = T.StructType([T.StructField("k", T.LongType()),
                            T.StructField("v", T.LongType())])
     base = spark.range(200).select(F.col("id").alias("k"),
                                    (F.col("id") * 10).alias("v"))
+    return schema, base
+
+
+def _strip(path, key):
+    """Delete ``key`` from the JSON document at ``path``."""
+    import json
+
+    with open(path) as f:
+        doc = json.load(f)
+    del doc[key]
+    with open(path, "w") as f:
+        json.dump(doc, f)
+
+
+def test_manifest_without_fingerprints_is_rewritten_once(spark, tmp_path):
+    """A manifest that stores no ``fps``: ``row_count`` refuses it, the
+    next commit rewrites every bucket, drops a bucket that vanished,
+    and ends equal to a clean run, fingerprints included."""
+    from greenplum_dwh_spark.tablestore import TableStore
+
+    schema, base = _kv_table(spark)
 
     def run(root, strip):
         store = TableStore(spark, str(root))
@@ -421,15 +432,9 @@ def test_manifest_without_fingerprints_is_rewritten_once(spark, tmp_path):
         store.overwrite_versioned("t", base)
         v = store.current_version("t")
         if strip:
-            for doc_name, key in ((f"m_{v}.json", "fps"),
-                                  ("_meta.json", "schema")):
-                path = os.path.join(str(root), "t", doc_name)
-                with open(path) as f:
-                    doc = json.load(f)
-                del doc[key]
-                with open(path, "w") as f:
-                    json.dump(doc, f)
-            assert store.row_count("t") == 200
+            _strip(root / "t" / f"m_{v}.json", "fps")
+            with pytest.raises(ValueError, match="no stored row count"):
+                store.row_count("t")
         bucket = store._bucket_col("t")
         gone = base.filter(F.col("k") == 3).select(
             bucket.alias("b")).first()["b"]
@@ -455,11 +460,37 @@ def test_manifest_without_fingerprints_is_rewritten_once(spark, tmp_path):
     assert stripped.current_version("t") == v
 
 
+def test_table_without_stored_schema_is_upgraded_once(spark, tmp_path):
+    """A table as written before schemas and fingerprints were stored
+    (no ``schema`` in ``_meta.json``, no ``fps`` in its manifest):
+    ``init_versioned`` stores the declared schema and recommits the
+    table once, every bucket rewritten with its fingerprint and row
+    count; a second ``init_versioned`` does nothing."""
+    from greenplum_dwh_spark.tablestore import TableStore
+
+    schema, base = _kv_table(spark)
+    store = TableStore(spark, str(tmp_path))
+    store.init_versioned("t", schema, key_col="k")
+    store.overwrite_versioned("t", base)
+    v = store.current_version("t")
+    _strip(tmp_path / "t" / f"m_{v}.json", "fps")
+    _strip(tmp_path / "t" / "_meta.json", "schema")
+
+    store.init_versioned("t", schema, key_col="k")
+    assert store._schema("t") == schema
+    assert store.current_version("t") == v + 1
+    assert set(store._manifest("t", v + 1).values()) == {v + 1}
+    _assert_manifest_matches_scan(store, "t")
+    assert sorted(store.read("t").collect()) == sorted(base.collect())
+    store.init_versioned("t", schema, key_col="k")
+    assert store.current_version("t") == v + 1
+
+
 def test_versioned_reads_and_dim_counts_start_no_job(spark, three_days):
     """Opening a versioned table and counting its rows from the
     manifest start no Spark job; on every fixture day the dim counts
     ``normalize_transactions`` returns equal a fresh ``count()``."""
-    from greenplum_dwh_spark.session import job_group
+    from tests.job_groups import job_group
 
     wh, per_day = three_days
     for day, (got, want) in enumerate(per_day):
