@@ -1,7 +1,8 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four members, each a different point on the exactness/scale frontier
-(BASELINE.json north star; PAPERS.md set-similarity-join literature):
+The family's members sit at different points on the exactness/scale
+frontier (BASELINE.json north star; PAPERS.md set-similarity-join
+literature).  The core joins:
 
 - ``dedup_exact`` — hash-groupBy on content digest. One shuffle on the
   digest; at 100 TB this is the classic first pass (map-side combine on
@@ -15,16 +16,28 @@ Four members, each a different point on the exactness/scale frontier
   scale path is checked against the exact answer.
 - ``dedup_simhash`` — 60-bit simhash over shingle hashes, 10×6-bit
   band join (pigeonhole-complete for hamming ≤ 9) + exact hamming
-  verify at ≤ 8. Again: banded plan, ground-truth output.
+  verify at ≤ 8. Again: banded plan, ground-truth output.  It runs on
+  the hamming-band kernel (``_hamming_pairs``, recall probe
+  ``_hamming_guard_probe``), whose only per-family input is the band
+  layout; image dHash (``multimodal_ops``) is its other user.
 - ``dedup_jaccard_prefix`` — exact word-2-gram jaccard join via
   PPJoin-style prefix + size-ratio + positional filtering. Fully
   exact, no probabilistic step; the positional (overlap upper-bound)
   filter keeps the candidate set near-linear even on this synthetic
   corpus's tiny uniform vocabulary, which is the worst case for the
   prefix filter alone.
+- ``dedup_char_jaccard`` — char-4-gram jaccard: the PPJoin prefix
+  path plus a minhash-banded dense leg.
+- ``dedup_containment`` — the ``|A∩B| / min(|A|,|B|)`` subset join.
+- ``dedup_incremental`` — new docs probed against the corpus's bands
+  (the asymmetric band probe the streaming ingest shares).
 - ``neardup_clusters`` — connected components over the verified pair
   graph via alternating large-star/small-star contraction (O(log² n)
   rounds, lineage truncated per round).
+
+Built on those: ``knn_doc_graph``, ``dedup_keep_best``,
+``split_leakage_safe``, ``dedup_source_overlap``; plus the
+suffix-array ``dedup_repeated_spans``.
 
 All hot paths are pure Spark SQL expressions (whole-stage codegen);
 no Python UDFs.
@@ -145,7 +158,7 @@ def last_band_guard_metrics() -> dict | None:
     entry = next((e for e in reversed(_SPLIT_STAGE1)
                   if e[0] is obs), None)
     if entry is not None:
-        _, stage1, hot_plan = entry
+        _, stage1, stage1_fallback = entry
         try:
             s = dict(stage1.get)
         except Exception:
@@ -153,12 +166,22 @@ def last_band_guard_metrics() -> dict | None:
             # retained hot plan instead of reporting 0 — an artifact
             # that reads "no saturation" exactly when the metric was
             # lost is the misreading this surface exists to prevent
-            s = hot_plan.agg(
-                F.count(F.lit(1)).alias("rerouted_rows"),
-                F.max("_bn").alias("max_raw_band_size")).first().asDict()
+            s = stage1_fallback.first().asDict()
         m["rerouted_rows"] = int(s.get("rerouted_rows") or 0)
         m["max_raw_band_size"] = int(s.get("max_raw_band_size") or 0)
     return m
+
+
+def _guard_aggs(band_cap: int) -> list:
+    """Over-cap memberships, over-cap buckets (each member adds
+    1/``_bn``) and the largest bucket of a ``_bn``-counted band
+    table."""
+    dropped = F.col("_bn") > band_cap
+    return [
+        F.sum(F.when(dropped, 1).otherwise(0)).alias("dropped_rows"),
+        F.sum(F.when(dropped, 1.0 / F.col("_bn"))
+              .otherwise(0.0)).alias("dropped_buckets_frac"),
+        F.max("_bn").alias("max_band_size")]
 
 
 def _guarded_bands(bands: DataFrame, band_cap: int):
@@ -173,17 +196,39 @@ def _guarded_bands(bands: DataFrame, band_cap: int):
     from pyspark.sql import Observation
     w = Window.partitionBy("band")
     obs = Observation()
-    dropped = F.col("_bn") > band_cap
     counted = bands.withColumn("_bn", F.count(F.lit(1)).over(w))
-    guard_aggs = [
-        F.sum(F.when(dropped, 1).otherwise(0)).alias("dropped_rows"),
-        F.sum(F.when(dropped, 1.0 / F.col("_bn"))
-              .otherwise(0.0)).alias("dropped_buckets_frac"),
-        F.max("_bn").alias("max_band_size")]
+    guard_aggs = _guard_aggs(band_cap)
     observed = counted.observe(obs, *guard_aggs)
     _GUARD_OBSERVATIONS.append((obs, band_cap, counted.agg(*guard_aggs)))
     del _GUARD_OBSERVATIONS[:-_GUARD_KEEP]
     return observed, counted, F.col("_bn") <= band_cap
+
+
+def _new_vs_base_candidates(tagged: DataFrame,
+                            band_cap: int) -> DataFrame:
+    """The asymmetric band probe: (doc_id, band, is_new) memberships
+    → distinct (doc_a = new, doc_b = base) pairs sharing an under-cap
+    band; never new-new pairs.  The cap counts each band's COMBINED
+    new + base occupancy (:func:`_guarded_bands`, Observation on the
+    new side), so it trips where the self-join's does: a base-only
+    count would keep a band the new docs push over the cap."""
+    observed, counted, keep = _guarded_bands(tagged, band_cap)
+    new_side = observed.filter(keep & F.col("is_new"))
+    base_side = counted.filter(keep & ~F.col("is_new"))
+    return (new_side.alias("a")
+            .join(base_side.alias("b"), "band")
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
+            .distinct())
+
+
+def _band_self_join(a: DataFrame, b: DataFrame) -> DataFrame:
+    """(doc_id, band) memberships ``a`` ⋈ ``b`` on band → (doc_a,
+    doc_b) pairs with doc_a < doc_b, one row per shared band."""
+    return (a.alias("a").join(b.alias("b"), "band")
+            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b")))
 
 
 def _banded_candidates(bands: DataFrame,
@@ -233,13 +278,7 @@ def _banded_candidates(bands: DataFrame,
         # plan (a CollectMetrics duplicated by the self-join breaks
         # metric retrieval), so only the left side carries it
         observed, counted, keep = _guarded_bands(bands, band_cap)
-        cool_a = observed.filter(keep).select("doc_id", "band")
-        cool_b = counted.filter(keep).select("doc_id", "band")
-        out = (cool_a.alias("a")
-               .join(cool_b.alias("b"), "band")
-               .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-               .select(F.col("a.doc_id").alias("doc_a"),
-                       F.col("b.doc_id").alias("doc_b")))
+        out = _band_self_join(observed.filter(keep), counted.filter(keep))
         return out.distinct() if distinct else out
     # Round 12 (guide §5 memory / §2.5 skew): the cap filter runs
     # BEFORE the per-band array is built.  The previous shape
@@ -357,17 +396,8 @@ def incremental_minhash_pairs(docs: DataFrame, is_new,
 
     Returns (new_doc, base_doc, jac) with jac ≥ ``threshold``."""
     bands, sets_df = _minhash_bands(docs)
-    tagged = bands.withColumn("is_new", is_new)
-    # same observed guard as the self-join: cap drops are visible via
-    # last_band_guard_metrics(), never silent recall loss
-    observed, counted, keep = _guarded_bands(tagged, band_cap)
-    new_side = observed.filter(keep & F.col("is_new"))
-    base_side = counted.filter(keep & ~F.col("is_new"))
-    cand = (new_side.alias("a")
-            .join(base_side.alias("b"), "band")
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
+    cand = _new_vs_base_candidates(bands.withColumn("is_new", is_new),
+                                   band_cap)
     return (_pairs_with_jaccard(docs, cand, sets_df)
             .filter(F.col("jac") >= threshold)
             .select(F.col("doc_a").alias("new_doc"),
@@ -421,33 +451,63 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     return agg.select("doc_id", F.expr(f"({fp}) AS fp"))
 
 
-def _simhash_bands(fps: DataFrame) -> DataFrame:
-    """(doc_id, band) rows from a fingerprint table — 10×6-bit bands,
-    shared by the self-join and the band-guard recall probe."""
-    n_bands = H.SIMHASH_BITS // H.SIMHASH_BAND_BITS
-    mask = (1 << H.SIMHASH_BAND_BITS) - 1
-    entries = ", ".join(
-        f"concat_ws(':', '{b}', CAST(shiftright(fp, "
-        f"{b * H.SIMHASH_BAND_BITS}) & {mask} AS STRING))"
-        for b in range(n_bands))
-    return fps.select(
-        "doc_id", F.expr(f"explode(array({entries})) AS band"))
+#: simhash's hamming band layout: (hash columns, bits per column,
+#: bits per band) — one 60-bit column in 10 bands of 6 bits
+_SIMHASH_LAYOUT = (("fp",), H.SIMHASH_BITS, H.SIMHASH_BAND_BITS)
 
 
-#: (stage-2 guard Observation, stage-1 Observation, hot plan) triples
+def _hamming_bands(fps: DataFrame, cols, col_bits: int,
+                   band_bits: int) -> DataFrame:
+    """(doc_id, band) rows from a (doc_id, *cols) hash table: each
+    column cut into ``col_bits // band_bits`` bands, numbered across
+    the columns, keyed ``"<i>:<value>"`` — the bands of the
+    hamming-band kernel's join, hotness decision and recall probe,
+    and of the streaming dHash index probe."""
+    per_col = col_bits // band_bits
+    mask = (1 << band_bits) - 1
+    keys = [
+        F.concat_ws(":", F.lit(str(i * per_col + b)),
+                    F.shiftrightunsigned(F.col(c), band_bits * b)
+                    .bitwiseAND(mask).cast("string"))
+        for i, c in enumerate(cols) for b in range(per_col)]
+    return fps.select("doc_id", F.explode(F.array(*keys)).alias("band"))
+
+
+def _hamming_verify(cand: DataFrame, cols, max_dist: int,
+                    fps: DataFrame,
+                    base: DataFrame | None = None) -> DataFrame:
+    """(doc_a, doc_b) candidates → (doc_a, doc_b, hamming) pairs within
+    ``max_dist``: hashes of doc_a from ``fps``, of doc_b from ``base``
+    (default ``fps``), distance = JVM-side xor + popcount summed over
+    ``cols`` — one verify for every hamming-band join."""
+    base = fps if base is None else base
+    fa = fps.select(F.col("doc_id").alias("doc_a"),
+                    *[F.col(c).alias(f"{c}_a") for c in cols])
+    fb = base.select(F.col("doc_id").alias("doc_b"),
+                     *[F.col(c).alias(f"{c}_b") for c in cols])
+    bits = [F.bit_count(F.col(f"{c}_a").bitwiseXOR(F.col(f"{c}_b")))
+            for c in cols]
+    dist = sum(bits[1:], bits[0])
+    return (cand.join(fa, "doc_a").join(fb, "doc_b")
+            .select("doc_a", "doc_b", dist.cast("int").alias("hamming"))
+            .filter(F.col("hamming") <= max_dist))
+
+
+#: (stage-2 guard Observation, stage-1 Observation, fallback) triples
 #: for the hot-band split's saturation metrics — paired by the
 #: stage-2 obs OBJECT IDENTITY (an index into _GUARD_OBSERVATIONS
 #: would go stale the moment the registry's truncation clamps its
 #: length), so last_band_guard_metrics consults a stage-1 observation
 #: only for the exact split plan whose stage-2 entry it is reporting.
-#: The retained hot plan is the recompute fallback when the stage-1
-#: Observation never fired (e.g. AQE pruned the observed node).
+#: The fallback, the same aggregates over the metric-free hot plan,
+#: recomputes them when the stage-1 Observation never fired (e.g. AQE
+#: pruned the observed node).
 _SPLIT_STAGE1: list = []
 
 #: (fps-plan semanticHash, band_cap) → bool(hot), so repeated
-#: simhash_pairs calls on the same fingerprint relation decide the
+#: hamming-band calls on the same fingerprint relation decide the
 #: hot-split plan shape without re-running the decision jobs (see the
-#: memo discussion in :func:`simhash_pairs`); insertion-ordered dict
+#: memo discussion in :func:`_bands_hot`); insertion-ordered dict
 #: doubles as a bounded FIFO
 _HOTNESS_MEMO: dict[tuple, bool] = {}
 _HOTNESS_MEMO_MAX = 64
@@ -460,13 +520,13 @@ def _split_routing(bands: DataFrame, band_cap: int,
     probe's rescued-pair leg, so the probe can never drift into
     grading a join the operator no longer runs.
 
-    Returns ``(cool, comp, obs, hot)``: under-cap (doc_id, band)
+    Returns ``(cool, comp, obs, fallback)``: under-cap (doc_id, band)
     memberships; over-cap memberships re-keyed by the composite (hot
     band value, each of the doc's other band values) under the SAME
     ``band`` column name; the stage-1 Observation (or None); and the
-    counted hot plan itself (the metrics fallback recomputes
-    rerouted_rows/max_raw_band_size from it when the Observation
-    never fired).  The per-band size table is alphabet-bounded
+    rerouted_rows/max_raw_band_size aggregate over the metric-free
+    hot plan (the metrics fallback when the Observation never
+    fired).  The per-band size table is alphabet-bounded
     (≤ n_bands · 2^bits rows), so it broadcasts — the routing costs
     no corpus shuffle on top of the join's own.  ``observe_hot``
     attaches the stage-1 saturation Observation
@@ -475,19 +535,17 @@ def _split_routing(bands: DataFrame, band_cap: int,
     sizes = bands.groupBy("band").agg(F.count(F.lit(1)).alias("_bn"))
     bz = bands.join(F.broadcast(sizes), "band")
     cool = bz.filter(F.col("_bn") <= band_cap).select("doc_id", "band")
-    # keep the observation-free twin as the metrics-fallback plan —
+    hot = bz.filter(F.col("_bn") > band_cap)
+    stage1_aggs = [F.count(F.lit(1)).alias("rerouted_rows"),
+                   F.max("_bn").alias("max_raw_band_size")]
+    # the fallback aggregates the observation-free hot plan —
     # recomputing through the SAME Observation object is exactly the
     # path that already failed when the fallback fires
-    hot_counted = bz.filter(F.col("_bn") > band_cap)
-    hot = hot_counted
+    fallback = hot.agg(*stage1_aggs)
+    obs = None
     if observe_hot:
         obs = Observation()
-        hot = hot_counted.observe(
-            obs,
-            F.count(F.lit(1)).alias("rerouted_rows"),
-            F.max("_bn").alias("max_raw_band_size"))
-    else:
-        obs = None
+        hot = hot.observe(obs, *stage1_aggs)
     other = bands.select("doc_id", F.col("band").alias("band2"))
     # band strings carry their band index ("<i>:<value>"), so
     # band2 != band excludes exactly the same-index row of the doc
@@ -495,7 +553,7 @@ def _split_routing(bands: DataFrame, band_cap: int,
             .filter(F.col("band2") != F.col("band"))
             .select("doc_id",
                     F.concat_ws("|", "band", "band2").alias("band")))
-    return cool, comp, obs, hot_counted
+    return cool, comp, obs, fallback
 
 
 def _split_banded_candidates(bands: DataFrame,
@@ -508,12 +566,10 @@ def _split_banded_candidates(bands: DataFrame,
     Buckets at or under ``band_cap`` self-join as before.  Members of
     an over-cap bucket are NOT dropped: each hot membership is
     re-keyed by the composite (hot band value, each of the doc's
-    other 9 band values) and the composite buckets join under the
+    other band values) and the composite buckets join under the
     same cap (:func:`_split_routing`).  Pigeonhole keeps this EXACT
-    for qualifying pairs: both endpoints share the hot band's value,
-    so all ≤ max_dist differing bits lie in the other ``n_bands − 1``
-    bands, and with ``max_dist < n_bands − 1`` at least one other
-    band agrees — the pair meets on that composite key.  The
+    for qualifying pairs within the split's bound
+    (:func:`_hamming_rules`): they meet on a composite key.  The
     composite alphabet is the band alphabet SQUARED (×band-pair
     choice), so saturation needs ~2¹² × the corpus that saturates a
     single band; residual drops (composite bucket still over cap —
@@ -524,19 +580,113 @@ def _split_banded_candidates(bands: DataFrame,
     :func:`last_band_guard_metrics` so artifact readers see the
     saturation signal AND the residual exposure, not one renamed as
     the other."""
-    cool, comp, obs, hot_plan = _split_routing(bands, band_cap,
+    cool, comp, obs, fallback = _split_routing(bands, band_cap,
                                                observe_hot=True)
-    cool_cand = (cool.alias("a").join(cool.alias("b"), "band")
-                 .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-                 .select(F.col("a.doc_id").alias("doc_a"),
-                         F.col("b.doc_id").alias("doc_b")))
+    cool_cand = _band_self_join(cool, cool)
     # composite re-keys of an already-saturated alphabet: buckets run
     # right up to the cap, so the streaming join expansion applies
     hot_cand = _banded_candidates(comp, band_cap, distinct=False,
                                   expand="join")
-    _SPLIT_STAGE1.append((_GUARD_OBSERVATIONS[-1][0], obs, hot_plan))
+    _SPLIT_STAGE1.append((_GUARD_OBSERVATIONS[-1][0], obs, fallback))
     del _SPLIT_STAGE1[:-_GUARD_KEEP]
     return cool_cand.unionByName(hot_cand)
+
+
+def _hamming_rules(layout, max_dist: int) -> bool:
+    """The plan rules of a hamming band layout, from its band count.
+    Plain banding is pigeonhole-complete only for ``max_dist`` ≤
+    n_bands − 1, so a larger distance raises.  The hot-split
+    composite re-key needs ``max_dist`` ≤ n_bands − 2 (both endpoints
+    share the hot band, so one of the OTHER bands must agree); the
+    return value says whether the split may run.  Past it the
+    operator keeps the plain drop guard (drops observed) and the
+    recall probe credits no split-rescued pairs."""
+    cols, col_bits, band_bits = layout
+    n_bands = len(cols) * (col_bits // band_bits)
+    if max_dist > n_bands - 1:
+        raise ValueError(
+            f"{n_bands}×{band_bits}-bit banding is complete only for "
+            f"hamming ≤ {n_bands - 1}, got {max_dist}")
+    return max_dist <= n_bands - 2
+
+
+def _bands_hot(fps: DataFrame, bands: DataFrame, band_cap: int,
+               band_bits: int) -> bool:
+    """Whether any band bucket of ``bands`` holds more than
+    ``band_cap`` docs — the hot-split plan choice.
+
+    A bounded driver decision, same class as the fuzzy block-count
+    in training_data.py.  On an unsaturated corpus the split's
+    routing aggregate + broadcast + two-leg union is pure overhead
+    (measured +0.9 s at sf0.1 on simhash, r07 verdict item 3), so the
+    single-leg plan is built when no band is hot — output is
+    identical both ways because the hot leg would be empty.  The
+    decision costs almost nothing at either extreme because
+    pigeonhole settles it from the DOC COUNT alone: every band
+    partitions the n fingerprints into ≤ 2^bits buckets, so
+    n > cap·2^bits forces an over-cap bucket in EVERY band (split
+    needed — the 100 TB branch, no corpus job beyond a count), while
+    n ≤ cap cannot fill any bucket past the cap.  Only inside the
+    bounded window between (cap < n ≤ cap·2^bits, i.e. a ≤64k-doc
+    simhash corpus at the default cap) does the exact
+    alphabet-bounded size aggregate run — small by construction
+    exactly where it runs (measured 0.4 s at sf0.1; the r08.0
+    version ran it unconditionally and paid 21 s of fingerprint
+    build at sf10 for a decision pigeonhole already knew).
+
+    The result is memoized on (fingerprint plan semantic hash, cap):
+    the decision is a pure function of the fps relation, and a memo
+    hit is valid exactly as long as the caller's fps cache is (both
+    assume the source doesn't mutate under an unchanged plan
+    mid-session).  Worst case on a (≈2⁻³³) semantic-hash collision
+    the single-leg plan runs on a hot corpus — whose guard OBSERVES
+    the drops, so even the pathological miss is visible, never
+    silent."""
+    mkey = (fps.semanticHash(), band_cap)
+    hot = _HOTNESS_MEMO.get(mkey)
+    if hot is None:
+        n = fps.count()
+        if n <= band_cap:
+            hot = False
+        elif n > band_cap << band_bits:
+            hot = True
+        else:
+            max_bn = (bands.groupBy("band")
+                      .agg(F.count(F.lit(1)).alias("_bn"))
+                      .agg(F.max("_bn")).first()[0]) or 0
+            hot = max_bn > band_cap
+        _HOTNESS_MEMO[mkey] = hot
+        while len(_HOTNESS_MEMO) > _HOTNESS_MEMO_MAX:
+            _HOTNESS_MEMO.pop(next(iter(_HOTNESS_MEMO)))
+    return hot
+
+
+def _hamming_pairs(fps: DataFrame, layout, max_dist: int,
+                   band_cap: int, hot_split: bool = True) -> DataFrame:
+    """The hamming-band kernel: (doc_id, *hash cols) → (doc_a, doc_b,
+    hamming) pairs within ``max_dist`` under ``layout`` = (hash
+    columns, bits per column, bits per band).  Bands → hot-band
+    decision (:func:`_bands_hot`) → the hot split
+    (:func:`_split_banded_candidates`) when some bucket is over cap
+    and :func:`_hamming_rules` allows it, else the plain guarded join
+    → exact verify.  ``fps`` is read several times; the caller caches
+    it and owns that cache."""
+    split_ok = _hamming_rules(layout, max_dist)
+    bands = _hamming_bands(fps, *layout)
+    if hot_split and split_ok and _bands_hot(fps, bands, band_cap,
+                                             layout[2]):
+        cand = _split_banded_candidates(bands, band_cap)
+    else:
+        # small band alphabets → cap-sized buckets: streaming join wins
+        cand = _banded_candidates(bands, band_cap, distinct=False,
+                                  expand="join")
+    # small band alphabets collide often on random fingerprints
+    # (~n²/2⁷ candidate rows per 6-bit band), so verify-then-distinct:
+    # the hamming check is an XOR+popcount per hash column against the
+    # (doc-count-sized) fingerprint table, and only the tiny verified
+    # survivor set pays the distinct shuffle — measured 4.0 s → 2.7 s
+    # at sf0.1 on simhash vs distinct-then-verify.
+    return _hamming_verify(cand, layout[0], max_dist, fps).distinct()
 
 
 def simhash_pairs(docs: DataFrame,
@@ -544,99 +694,19 @@ def simhash_pairs(docs: DataFrame,
                   band_cap: int = BAND_CAP,
                   fps: DataFrame | None = None,
                   hot_split: bool = True) -> DataFrame:
-    """Pairs within hamming ``max_dist`` of 60-bit simhash.  Plain
-    banding is pigeonhole-complete for dist ≤ n_bands − 1 = 9; the
-    ``hot_split`` composite re-key is complete only for dist ≤
-    n_bands − 2 = 8 (both endpoints share the hot band, so all
-    differing bits lie in the other 9 bands and at least one of those
-    must agree — which needs dist < 9).  At ``max_dist`` ≥ 9 the
-    split would silently lose pairs its residual guard cannot see, so
-    it auto-falls back to the plain drop guard (drops observed, never
-    unobserved recall loss).  With the split active, over-cap buckets
-    re-key through :func:`_split_banded_candidates` instead of
-    dropping — the only remaining recall trade is a composite bucket
-    still over cap, observed by the guard.  ``fps`` lets a caller
-    that already built (and cached) the fingerprint table reuse it —
-    the band-guard probe's emitted-count leg — instead of paying a
+    """Pairs within hamming ``max_dist`` of 60-bit simhash — the
+    hamming-band kernel (:func:`_hamming_pairs`) over 10×6-bit bands:
+    ``max_dist`` ≤ 9, and the ``hot_split`` composite re-key of
+    over-cap buckets runs at ≤ 8 (:func:`_hamming_rules`); the only
+    remaining recall trade is a composite bucket still over cap,
+    observed by the guard.  ``fps`` lets a caller that already built
+    (and cached) the fingerprint table reuse it instead of paying a
     second corpus fingerprint pass; the caller then owns that cache's
     lifecycle."""
     if fps is None:
         fps = simhash_fingerprints(docs).cache()
-    bands = _simhash_bands(fps)
-    n_bands = H.SIMHASH_BITS // H.SIMHASH_BAND_BITS
-    if max_dist > n_bands - 2:
-        # composite re-key incomplete at this distance (see docstring)
-        # — the plain guard is still detection-complete and its drops
-        # are observed, so recall loss can never be silent
-        hot_split = False
-    if hot_split:
-        # bounded driver decision, same class as the fuzzy block-count
-        # at training_data.py:358.  On an unsaturated corpus the
-        # split's routing aggregate + broadcast + two-leg union is
-        # pure overhead (measured +0.9 s at sf0.1, r07 verdict
-        # item 3), so build the single-leg plan when no band is hot —
-        # output is identical both ways because the hot leg would be
-        # empty.  The decision costs almost nothing at either extreme
-        # because pigeonhole settles it from the DOC COUNT alone:
-        # every band partitions the n fingerprints into ≤ 2^bits
-        # buckets, so n > cap·2^bits forces an over-cap bucket in
-        # EVERY band (split needed — this is the 100 TB branch, no
-        # corpus job at all beyond a column-pruned count), while
-        # n ≤ cap cannot fill any bucket past the cap.  Only inside
-        # the bounded window between (cap < n ≤ cap·2^bits, i.e. a
-        # ≤64k-doc corpus at the default cap) does the exact
-        # alphabet-bounded size aggregate run — small by construction
-        # exactly where it runs (measured 0.4 s at sf0.1; the r08.0
-        # version ran it unconditionally and paid 21 s of fingerprint
-        # build at sf10 for a decision pigeonhole already knew).
-        # The result is memoized on (fingerprint plan semantic hash,
-        # cap): the decision is a pure function of the fps relation,
-        # and a memo hit is valid exactly as long as the .cache()
-        # above is (both assume the source doesn't mutate under an
-        # unchanged plan mid-session).  Worst case on a (≈2⁻³³)
-        # semantic-hash collision the single-leg plan runs on a hot
-        # corpus — whose guard OBSERVES the drops, so even the
-        # pathological miss is visible, never silent.
-        mkey = (fps.semanticHash(), band_cap)
-        hot = _HOTNESS_MEMO.get(mkey)
-        if hot is None:
-            alphabet = 1 << H.SIMHASH_BAND_BITS
-            n = (docs if docs is not None else fps).count()
-            if n <= band_cap:
-                hot = False
-            elif n > band_cap * alphabet:
-                hot = True
-            else:
-                max_bn = (bands.groupBy("band")
-                          .agg(F.count(F.lit(1)).alias("_bn"))
-                          .agg(F.max("_bn")).first()[0]) or 0
-                hot = max_bn > band_cap
-            _HOTNESS_MEMO[mkey] = hot
-            while len(_HOTNESS_MEMO) > _HOTNESS_MEMO_MAX:
-                _HOTNESS_MEMO.pop(next(iter(_HOTNESS_MEMO)))
-        hot_split = hot
-    # 6-bit band alphabets collide often on random fingerprints
-    # (~n²/2⁷ candidate rows per band), so verify-then-distinct: the
-    # hamming check is one XOR+popcount against the (doc-count-sized)
-    # fingerprint table, and only the tiny verified survivor set pays
-    # the distinct shuffle — measured 4.0 s → 2.7 s at sf0.1 vs
-    # distinct-then-verify.
-    if hot_split:
-        cand = _split_banded_candidates(bands, band_cap)
-    else:
-        # 6-bit alphabet → cap-sized buckets: streaming join wins
-        cand = _banded_candidates(bands, band_cap, distinct=False,
-                                  expand="join")
-    fa = fps.select(F.col("doc_id").alias("doc_a"),
-                    F.col("fp").alias("fp_a"))
-    fb = fps.select(F.col("doc_id").alias("doc_b"),
-                    F.col("fp").alias("fp_b"))
-    return (cand.join(fa, "doc_a").join(fb, "doc_b")
-            .select("doc_a", "doc_b",
-                    F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-                    .cast("int").alias("hamming"))
-            .filter(F.col("hamming") <= max_dist)
-            .distinct())
+    return _hamming_pairs(fps, _SIMHASH_LAYOUT, max_dist, band_cap,
+                          hot_split)
 
 
 #: ceiling on the banded leg's per-pair miss probability at the join
@@ -706,29 +776,30 @@ def _binom_count_ub(x: int, p: float, alpha: float = 0.05) -> int:
     return lo
 
 
-def simhash_band_guard_probe(docs: DataFrame,
-                             max_dist: int = SIMHASH_MAX_DIST,
-                             band_cap: int = BAND_CAP,
-                             sample_mod: int = 4,
-                             count_emitted: bool = True) -> dict:
-    """Grade the hot-band guard's recall loss instead of only counting
-    it (round-4 verdict item 2: at sf1 the cap drops 58k rows and
-    nobody knew how many true pairs that cost).
+def _hamming_guard_probe(fps: DataFrame, layout, max_dist: int,
+                         band_cap: int, sample_mod: int = 4,
+                         count_emitted: bool = True) -> dict:
+    """Grade the hamming-band guard's recall loss instead of only
+    counting it (round-4 verdict item 2: at sf1 the simhash cap drops
+    58k rows and nobody knew how many true pairs that cost) — the one
+    recall probe of the hamming-band kernel, over a (doc_id, *hash
+    cols) table ``fps`` (cached for the probe, released on return)
+    and its band ``layout``.
 
     Estimator: deterministically hash-sample DOCS at rate 1/``sample_mod``
     (``pmod(xxhash64(doc_id), mod) = 0`` — partitioning-independent),
     take all sampled-member pairs *within each over-cap bucket*, dedupe
     across buckets, verify exactly (hamming ≤ ``max_dist``), and drop
     pairs that also share an under-cap band (those are NOT lost — the
-    guarded join still emits them) or an under-cap COMPOSITE bucket
-    (those the round-7 hot-band split leg emits —
-    :func:`_split_banded_candidates`; ``raw_overcap_rows`` counts
-    stage-1 raw over-cap memberships — the quantity
-    :func:`last_band_guard_metrics` reports as ``rerouted_rows``,
-    deliberately NOT named ``dropped_rows``, which in the guard
-    metrics means the stage-2 composite residual — while the loss
-    estimate reflects what the production plan actually fails to
-    emit).
+    guarded join still emits them) or, when the operator would split
+    (:func:`_hamming_rules`), an under-cap COMPOSITE bucket (those the
+    round-7 hot-band split leg emits — :func:`_split_banded_candidates`;
+    ``raw_overcap_rows`` counts stage-1 raw over-cap memberships — the
+    quantity :func:`last_band_guard_metrics` reports as
+    ``rerouted_rows``, deliberately NOT named ``dropped_rows``, which
+    in the guard metrics means the stage-2 composite residual — while
+    the loss estimate reflects what the production plan actually fails
+    to emit).
     Because sampling is per-doc, a
     lost pair enters the sample iff BOTH endpoints are sampled —
     probability 1/mod² regardless of how many hot buckets it collides
@@ -746,70 +817,53 @@ def simhash_band_guard_probe(docs: DataFrame,
     additionally runs the guarded operator to turn point estimate and
     bound into ``est_recall`` / ``est_recall_lb`` =
     ``emitted / (emitted + loss)``."""
-    fps = simhash_fingerprints(docs).cache()
-    bands = _simhash_bands(fps)
+    split_ok = _hamming_rules(layout, max_dist)
+    fps = fps.cache()
+    bands = _hamming_bands(fps, *layout)
     w = Window.partitionBy("band")
     counted = bands.withColumn("_bn", F.count(F.lit(1)).over(w)).cache()
     hot = counted.filter(F.col("_bn") > band_cap)
-    stats = counted.agg(
-        F.sum(F.when(F.col("_bn") > band_cap, 1).otherwise(0))
-        .alias("raw_overcap_rows"),
-        F.sum(F.when(F.col("_bn") > band_cap, 1.0 / F.col("_bn"))
-              .otherwise(0.0)).alias("overcap_buckets_frac"),
-        F.max("_bn").alias("max_band_size")).first()
-    out = {"raw_overcap_rows": int(stats["raw_overcap_rows"] or 0),
+    stats = counted.agg(*_guard_aggs(band_cap)).first()
+    out = {"raw_overcap_rows": int(stats["dropped_rows"] or 0),
            "overcap_buckets": int(round(
-               stats["overcap_buckets_frac"] or 0.0)),
+               stats["dropped_buckets_frac"] or 0.0)),
            "max_band_size": int(stats["max_band_size"] or 0),
            "sample_mod": sample_mod}
-    sampled = (hot.filter(
+    sampled = hot.filter(
         F.pmod(F.xxhash64("doc_id"), F.lit(sample_mod)) == 0)
-        .select("doc_id", "band"))
-    cand = (sampled.alias("a").join(sampled.alias("b"), "band")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
-    fa = fps.select(F.col("doc_id").alias("doc_a"),
-                    F.col("fp").alias("fp_a"))
-    fb = fps.select(F.col("doc_id").alias("doc_b"),
-                    F.col("fp").alias("fp_b"))
-    verified = (cand.join(fa, "doc_a").join(fb, "doc_b")
-                .filter(F.bit_count(F.col("fp_a")
-                                    .bitwiseXOR(F.col("fp_b")))
-                        <= max_dist)
+    cand = _band_self_join(sampled, sampled).distinct()
+    verified = (_hamming_verify(cand, layout[0], max_dist, fps)
                 .select("doc_a", "doc_b"))
-    cool = (counted.filter(F.col("_bn") <= band_cap)
-            .select("doc_id", "band"))
-    escaped = (verified
-               .join(cool.select(F.col("doc_id").alias("doc_a"),
-                                 "band"), "doc_a")
-               .join(cool.select(F.col("doc_id").alias("doc_b"),
-                                 "band"), ["doc_b", "band"])
-               .select("doc_a", "doc_b").distinct())
-    # pairs the hot-band SPLIT leg still emits (round-7): a sampled
-    # hot pair sharing an under-cap composite bucket is NOT lost.
-    # The composite memberships come from the SAME _split_routing the
-    # operator runs — the probe cannot drift into grading a join that
-    # no longer exists.  Composite bucket sizes are computed over ALL
-    # docs — the sample only selects which pairs get verified, never
-    # how big the production plan's buckets are.
-    comp = (_split_routing(bands, band_cap)[1]
-            .withColumnRenamed("band", "ckey"))
-    wc = Window.partitionBy("ckey")
-    comp_cool = (comp.withColumn("_cn", F.count(F.lit(1)).over(wc))
-                 .filter(F.col("_cn") <= band_cap)
-                 .select("doc_id", "ckey"))
-    rescued = (verified
-               .join(comp_cool.select(F.col("doc_id").alias("doc_a"),
-                                      "ckey"), "doc_a")
-               .join(comp_cool.select(F.col("doc_id").alias("doc_b"),
-                                      "ckey"), ["doc_b", "ckey"])
-               .select("doc_a", "doc_b").distinct())
-    sampled_lost = (verified
-                    .join(escaped, ["doc_a", "doc_b"], "left_anti")
-                    .join(rescued, ["doc_a", "doc_b"], "left_anti")
-                    .count())
+
+    def minus_emitted(pairs: DataFrame, counted: DataFrame) -> DataFrame:
+        # pairs minus those whose docs share an under-cap bucket of a
+        # _bn-counted (doc_id, band) table: a guarded join emits those
+        members = (counted.filter(F.col("_bn") <= band_cap)
+                   .select("doc_id", "band"))
+        shared = (pairs
+                  .join(members.withColumnRenamed("doc_id", "doc_a"),
+                        "doc_a")
+                  .join(members.withColumnRenamed("doc_id", "doc_b"),
+                        ["doc_b", "band"])
+                  .select("doc_a", "doc_b").distinct())
+        return pairs.join(shared, ["doc_a", "doc_b"], "left_anti")
+
+    lost = minus_emitted(verified, counted)
+    if split_ok:
+        # pairs the hot-band SPLIT leg still emits (round-7): a sampled
+        # hot pair sharing an under-cap composite bucket is NOT lost.
+        # The composite memberships come from the SAME _split_routing
+        # the operator runs — the probe cannot drift into grading a
+        # join that no longer exists.  Composite bucket sizes are
+        # computed over ALL docs — the sample only selects which pairs
+        # get verified, never how big the production plan's buckets
+        # are.  Past the split's bound the operator keeps the plain
+        # drop guard, so crediting rescued pairs there would overstate
+        # est_recall for a plan that never runs.
+        comp = _split_routing(bands, band_cap)[1]
+        lost = minus_emitted(
+            lost, comp.withColumn("_bn", F.count(F.lit(1)).over(w)))
+    sampled_lost = lost.count()
     out["sampled_lost_pairs"] = int(sampled_lost)
     out["est_pairs_lost"] = int(sampled_lost * sample_mod * sample_mod)
     # 95% upper bound on the true loss, not just the point estimate
@@ -821,11 +875,11 @@ def simhash_band_guard_probe(docs: DataFrame,
         else _binom_count_ub(int(sampled_lost),
                              1.0 / (sample_mod * sample_mod)))
     if count_emitted:
-        # reuse this probe's cached fingerprints — a fresh
-        # simhash_pairs(docs) would rebuild AND pin a second
-        # corpus-sized fingerprint cache
-        emitted = simhash_pairs(docs, max_dist, band_cap,
-                                fps=fps).count()
+        # reuse this probe's cached fingerprints — a fresh operator
+        # call on docs would rebuild AND pin a second corpus-sized
+        # fingerprint cache
+        emitted = _hamming_pairs(fps, layout, max_dist,
+                                 band_cap).count()
         out["emitted_pairs"] = int(emitted)
         denom = emitted + out["est_pairs_lost"]
         out["est_recall"] = (1.0 if denom == 0
@@ -836,6 +890,19 @@ def simhash_band_guard_probe(docs: DataFrame,
     counted.unpersist()
     fps.unpersist()
     return out
+
+
+def simhash_band_guard_probe(docs: DataFrame,
+                             max_dist: int = SIMHASH_MAX_DIST,
+                             band_cap: int = BAND_CAP,
+                             sample_mod: int = 4,
+                             count_emitted: bool = True) -> dict:
+    """Recall probe of :func:`simhash_pairs`' hot-band guard: the
+    kernel's :func:`_hamming_guard_probe` over the corpus' simhash
+    fingerprints."""
+    return _hamming_guard_probe(simhash_fingerprints(docs),
+                                _SIMHASH_LAYOUT, max_dist, band_cap,
+                                sample_mod, count_emitted)
 
 
 def jaccard_prefix_pairs(docs: DataFrame,

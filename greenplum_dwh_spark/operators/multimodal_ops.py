@@ -31,6 +31,7 @@ from greenplum_dwh_spark.multimodal.codec import (av_stats,
                                                   pack_image_payloads,
                                                   pack_payloads,
                                                   resize_images)
+from greenplum_dwh_spark.operators import dedup as D
 from greenplum_dwh_spark.sources.tpch import Tables
 
 
@@ -76,6 +77,9 @@ def multimodal_av(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: is EXACT and the DuckDB brute-force twin is a true oracle.
 PHASH_MAX_DIST = 6
 PHASH_BAND_BITS = 16
+#: the hamming-band kernel's layout: (hash columns, bits per column,
+#: bits per band)
+_PHASH_LAYOUT = (("h1", "h2"), 64, PHASH_BAND_BITS)
 #: planted near-dup twins: every 50th doc long enough for ≥ 8 BMP
 #: rows gets a copy with its LAST character swapped — one byte moves
 #: one grayscale cell, sampled by ≤ 2 of the 16 grid rows at h ≥ 8,
@@ -104,29 +108,6 @@ def _planted_image_docs(t: Tables) -> DataFrame:
     return base.unionByName(twins)
 
 
-def _phash_bands(fps: DataFrame) -> DataFrame:
-    """(doc_id, band) rows from a (doc_id, h1, h2) hash table —
-    8×16-bit hamming bands, shared by the candidate join and the
-    recall probe (the simhash discipline: the probe grades the join
-    the operator actually runs)."""
-    mask = (1 << PHASH_BAND_BITS) - 1
-    keys = [
-        F.concat_ws(":", F.lit(str(i * 4 + b)),
-                    F.shiftrightunsigned(F.col(col), PHASH_BAND_BITS * b)
-                    .bitwiseAND(mask).cast("string"))
-        for i, col in enumerate(("h1", "h2")) for b in range(4)]
-    return (fps.filter(F.col("h1").isNotNull())
-            .select("doc_id", F.explode(F.array(*keys)).alias("band")))
-
-
-def _phash_hamming(a_prefix: str = "a", b_prefix: str = "b"):
-    """hamming(h1_a,h2_a ; h1_b,h2_b) as a JVM column expression."""
-    return (F.bit_count(F.col(f"h1_{a_prefix}")
-                        .bitwiseXOR(F.col(f"h1_{b_prefix}")))
-            + F.bit_count(F.col(f"h2_{a_prefix}")
-                          .bitwiseXOR(F.col(f"h2_{b_prefix}"))))
-
-
 def image_phash_pairs(docs: DataFrame,
                       max_dist: int = PHASH_MAX_DIST,
                       fps: DataFrame | None = None) -> DataFrame:
@@ -136,79 +117,32 @@ def image_phash_pairs(docs: DataFrame,
 
     Plan: ONE Arrow pass packs each doc into a real 24-bit BMP and
     dHashes the pixel grid (:func:`codec.image_dhashes` — the only
-    Python stage); the candidate join is the simhash hamming-band
-    machinery over 8×16-bit bands (hot-bucket guard + observables,
-    and the hot-band SPLIT once any bucket passes the cap), and the
-    verify predicate is JVM-side ``bit_count(xor)`` per half.
-    Plain banding is pigeonhole-complete for ``max_dist`` ≤ 7; the
-    composite hot-split re-key is complete for ``max_dist`` ≤ 6
-    (n_bands − 2, both endpoints share the hot band) — the default
-    contract distance, so recall stays EXACT through band
-    saturation.  Saturation is real, not hypothetical: at sf1,
+    Python stage); the rest is the hamming-band kernel shared with
+    simhash (:func:`dedup._hamming_pairs`) over 8×16-bit bands, with
+    a JVM-side ``bit_count(xor)`` verify per half.  ``max_dist`` ≤ 7,
+    and the hot-band split runs at ≤ 6 (:func:`dedup._hamming_rules`)
+    — the default contract distance, so recall stays EXACT through
+    band saturation.  Saturation is real, not hypothetical: at sf1,
     structured gradient patterns (alternating-bit bands like 0xAAAA
     from short repeated-row images) put >6k docs in one 16-bit
     bucket — the round-10 probe caught the plain guard dropping 27k
     memberships there, and the split reroutes them instead.  At
-    ``max_dist`` 7 the split would silently lose pairs, so it
-    auto-falls back to the plain drop guard (drops observed, never
-    unobserved recall loss — the simhash rule).  At 100 TB: band
-    keys are 16-bit over two int64 columns (16 bytes/doc through
-    the band exchange — the hashed-paragraph posture: pixels never
-    shuffle), and giant IDENTICAL-hash clusters (the only composite
-    bucket that can still exceed the cap; sf1's largest is 24 docs)
-    surface as observed stage-2 drops rather than silently
-    quadratic output."""
-    from greenplum_dwh_spark.operators import dedup as D
-    if max_dist > 7:
-        raise ValueError("8×16-bit banding is complete only for "
-                         f"hamming ≤ 7, got {max_dist}")
+    100 TB: band keys are 16-bit over two int64 columns (16 bytes/doc
+    through the band exchange — the hashed-paragraph posture: pixels
+    never shuffle), and giant IDENTICAL-hash clusters (the only
+    composite bucket that can still exceed the cap; sf1's largest is
+    24 docs) surface as observed stage-2 drops rather than silently
+    quadratic output.  Rows without a hash (no decodable image) never
+    pair."""
     if fps is None:
-        # ``fps`` lets the recall probe reuse its cached hash table
-        # (the simhash fps= recipe) instead of paying a second
-        # corpus pack+hash pass; the caller then owns the cache
+        # ``fps`` lets a caller reuse its cached hash table (the
+        # simhash fps= recipe) instead of paying a second corpus
+        # pack+hash pass; the caller then owns the cache
         fps = image_dhashes(pack_image_payloads(docs, width=16)).cache()
-    bands = _phash_bands(fps)
-    # hotness decision: the simhash pigeonhole shortcut on the doc
-    # count (memoized on the fingerprint plan) — only inside the
-    # bounded window cap < n ≤ cap·2¹⁶ does the exact alphabet-
-    # bounded size aggregate run
-    hot = False
-    if max_dist <= 6:  # composite re-key incomplete past n_bands − 2
-        mkey = (fps.semanticHash(), D.BAND_CAP, "phash")
-        hot = D._HOTNESS_MEMO.get(mkey)
-        if hot is None:
-            n = fps.count()
-            if n <= D.BAND_CAP:
-                hot = False
-            elif n > D.BAND_CAP * (1 << PHASH_BAND_BITS):
-                hot = True
-            else:
-                mx = (bands.groupBy("band")
-                      .agg(F.count(F.lit(1)).alias("_bn"))
-                      .agg(F.max("_bn")).first()[0]) or 0
-                hot = mx > D.BAND_CAP
-            D._HOTNESS_MEMO[mkey] = hot
-            while len(D._HOTNESS_MEMO) > D._HOTNESS_MEMO_MAX:
-                D._HOTNESS_MEMO.pop(next(iter(D._HOTNESS_MEMO)))
-    # verify-then-distinct (the simhash ordering): the hamming check
-    # is two XOR+popcounts against the doc-count-sized hash table,
-    # and only the verified survivors pay the distinct shuffle
-    if hot:
-        cand = D._split_banded_candidates(bands, D.BAND_CAP)
-    else:
-        # pass the LIVE cap so the guard and the hotness decision
-        # above can never disagree if BAND_CAP is retuned at runtime
-        cand = D._banded_candidates(bands, D.BAND_CAP, distinct=False,
-                                    expand="join")
-    fa = fps.select(F.col("doc_id").alias("doc_a"),
-                    F.col("h1").alias("h1_a"), F.col("h2").alias("h2_a"))
-    fb = fps.select(F.col("doc_id").alias("doc_b"),
-                    F.col("h1").alias("h1_b"), F.col("h2").alias("h2_b"))
-    return (cand.join(fa, "doc_a").join(fb, "doc_b")
-            .select("doc_a", "doc_b",
-                    _phash_hamming().cast("int").alias("hamming"))
-            .filter(F.col("hamming") <= max_dist)
-            .distinct())
+    # the LIVE cap, read at call time, so a runtime retune of
+    # BAND_CAP reaches the guard and the hotness decision alike
+    return D._hamming_pairs(fps.filter(F.col("h1").isNotNull()),
+                            _PHASH_LAYOUT, max_dist, D.BAND_CAP)
 
 
 def image_phash_guard_probe(docs: DataFrame,
@@ -217,100 +151,16 @@ def image_phash_guard_probe(docs: DataFrame,
                             sample_mod: int = 4,
                             count_emitted: bool = True) -> dict:
     """Grade the phash split plan's residual recall loss instead of
-    only counting dropped memberships — the
-    :func:`dedup.simhash_band_guard_probe` estimator ported to the
-    two-half hash: deterministically sample docs at 1/``sample_mod``,
-    take sampled-member pairs within over-cap RAW buckets, verify
-    hamming exactly, then subtract pairs the production plan still
-    emits — via an under-cap raw band (``escaped``) or an under-cap
-    composite bucket of the SAME :func:`dedup._split_routing` the
-    operator runs (``rescued``).  A lost pair is sampled with
-    probability 1/mod² regardless of how many hot buckets it shares,
-    so ``sampled_lost · mod²`` is unbiased and
-    :func:`dedup._binom_count_ub` turns the count into a 95% upper
-    bound (a sampled zero is not a bound of zero).  Work is
-    O(Σ hot_bucket²/mod²) — a diagnostics pass over exactly the
-    buckets the plan refuses to join."""
-    from pyspark.sql import Window
-
-    from greenplum_dwh_spark.operators import dedup as D
-    band_cap = D.BAND_CAP if band_cap is None else band_cap
-    fps = (image_dhashes(pack_image_payloads(docs, width=16))
-           .filter(F.col("h1").isNotNull()).cache())
-    bands = _phash_bands(fps)
-    w = Window.partitionBy("band")
-    counted = bands.withColumn("_bn", F.count(F.lit(1)).over(w)).cache()
-    hot = counted.filter(F.col("_bn") > band_cap)
-    stats = counted.agg(
-        F.sum(F.when(F.col("_bn") > band_cap, 1).otherwise(0))
-        .alias("raw_overcap_rows"),
-        F.max("_bn").alias("max_band_size")).first()
-    out = {"raw_overcap_rows": int(stats["raw_overcap_rows"] or 0),
-           "max_band_size": int(stats["max_band_size"] or 0),
-           "sample_mod": sample_mod}
-    sampled = (hot.filter(
-        F.pmod(F.xxhash64("doc_id"), F.lit(sample_mod)) == 0)
-        .select("doc_id", "band"))
-    cand = (sampled.alias("a").join(sampled.alias("b"), "band")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
-    fa = fps.select(F.col("doc_id").alias("doc_a"),
-                    F.col("h1").alias("h1_a"), F.col("h2").alias("h2_a"))
-    fb = fps.select(F.col("doc_id").alias("doc_b"),
-                    F.col("h1").alias("h1_b"), F.col("h2").alias("h2_b"))
-    verified = (cand.join(fa, "doc_a").join(fb, "doc_b")
-                .filter(_phash_hamming() <= max_dist)
-                .select("doc_a", "doc_b"))
-    cool = (counted.filter(F.col("_bn") <= band_cap)
-            .select("doc_id", "band"))
-    escaped = (verified
-               .join(cool.select(F.col("doc_id").alias("doc_a"),
-                                 "band"), "doc_a")
-               .join(cool.select(F.col("doc_id").alias("doc_b"),
-                                 "band"), ["doc_b", "band"])
-               .select("doc_a", "doc_b").distinct())
-    if max_dist <= 6:
-        comp = (D._split_routing(bands, band_cap)[1]
-                .withColumnRenamed("band", "ckey"))
-        wc = Window.partitionBy("ckey")
-        comp_cool = (comp.withColumn("_cn", F.count(F.lit(1)).over(wc))
-                     .filter(F.col("_cn") <= band_cap)
-                     .select("doc_id", "ckey"))
-        rescued = (verified
-                   .join(comp_cool.select(F.col("doc_id").alias("doc_a"),
-                                          "ckey"), "doc_a")
-                   .join(comp_cool.select(F.col("doc_id").alias("doc_b"),
-                                          "ckey"), ["doc_b", "ckey"])
-                   .select("doc_a", "doc_b").distinct())
-    else:
-        # mirror the operator's plan selection: past n_bands − 2 the
-        # split is incomplete, image_phash_pairs falls back to the
-        # plain drop guard, so crediting split-rescued pairs here
-        # would overstate est_recall for a plan that never runs
-        rescued = verified.limit(0)
-    sampled_lost = (verified
-                    .join(escaped, ["doc_a", "doc_b"], "left_anti")
-                    .join(rescued, ["doc_a", "doc_b"], "left_anti")
-                    .count())
-    out["sampled_lost_pairs"] = int(sampled_lost)
-    out["est_pairs_lost"] = int(sampled_lost * sample_mod * sample_mod)
-    out["est_pairs_lost_ub"] = (
-        0 if out["raw_overcap_rows"] == 0
-        else D._binom_count_ub(int(sampled_lost),
-                               1.0 / (sample_mod * sample_mod)))
-    if count_emitted:
-        emitted = image_phash_pairs(docs, max_dist, fps=fps).count()
-        out["emitted_pairs"] = int(emitted)
-        denom = emitted + out["est_pairs_lost"]
-        out["est_recall"] = round(emitted / denom, 6) if denom else 1.0
-        denom_ub = emitted + out["est_pairs_lost_ub"]
-        out["est_recall_lb"] = (round(emitted / denom_ub, 6)
-                                if denom_ub else 1.0)
-    fps.unpersist()
-    counted.unpersist()
-    return out
+    only counting dropped memberships: the hamming-band kernel's
+    recall probe (:func:`dedup._hamming_guard_probe`, shared with
+    :func:`dedup.simhash_band_guard_probe`) over the two-half hash of
+    the docs' images.  ``band_cap`` defaults to the live
+    ``dedup.BAND_CAP``."""
+    return D._hamming_guard_probe(
+        image_dhashes(pack_image_payloads(docs, width=16))
+        .filter(F.col("h1").isNotNull()), _PHASH_LAYOUT, max_dist,
+        D.BAND_CAP if band_cap is None else band_cap, sample_mod,
+        count_emitted)
 
 
 def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:

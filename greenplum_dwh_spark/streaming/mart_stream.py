@@ -594,7 +594,8 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
     checkpoint commit reaches the same accept/reject decisions instead
     of rejecting docs against their own half-committed bands."""
     from greenplum_dwh_spark.operators.dedup import (
-        BAND_CAP, JACCARD_THRESHOLD, _minhash_bands, _pairs_with_jaccard)
+        BAND_CAP, JACCARD_THRESHOLD, _minhash_bands,
+        _new_vs_base_candidates, _pairs_with_jaccard)
 
     thr = JACCARD_THRESHOLD if threshold is None else threshold
     cap = BAND_CAP if band_cap is None else band_cap
@@ -624,38 +625,26 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
                 .dropDuplicates(["doc_id"]))
         bands, sets = _minhash_bands(docs)
         bands = bands.cache()
-        from greenplum_dwh_spark.operators.dedup import _guarded_bands
         batch_ids = docs.select("doc_id")
         idx = (store.read(index_table)
                .join(F.broadcast(batch_ids), "doc_id", "left_anti")
                .join(F.broadcast(bands.select("band").distinct()),
                      "band", "semi"))
-        # hot-band cap over the COMBINED corpus+batch occupancy via
-        # the SAME _guarded_bands the batch operator uses — the cap
-        # trips at identical band sizes in both faces (an index-only
-        # count would keep a band the batch itself pushes over the
-        # cap and diverge from the batch fold), the window's exchange
-        # is the one the band join needs anyway (one shuffle, one
-        # pass over the index subtree), and the per-batch drop counts
-        # surface through last_band_guard_metrics like every other
-        # banded path
+        # the SAME asymmetric band probe as the batch operator, so
+        # the cap trips at identical band sizes in both faces; its
+        # window's exchange is the one the band join needs anyway
+        # (one shuffle, one pass over the index subtree)
         tagged = (bands.select("doc_id", "band")
                   .withColumn("is_new", F.lit(True))
                   .unionByName(idx.select("doc_id", "band")
                                .withColumn("is_new", F.lit(False))))
-        observed, counted, keep = _guarded_bands(tagged, cap)
-        new_side = observed.filter(keep & F.col("is_new"))
-        base_side = counted.filter(keep & ~F.col("is_new"))
         # localCheckpoint: the rejects plan consumes cand TWICE (the
-        # verify join and the base-doc semi-join), and _guarded_bands'
+        # verify join and the base-doc semi-join), and the guard's
         # CollectMetrics node must execute exactly once per plan or
         # metric retrieval breaks — materializing the (small)
         # candidate list runs the guard once and hands both consumers
         # plain rows
-        cand = (new_side.alias("a").join(base_side.alias("b"), "band")
-                .select(F.col("a.doc_id").alias("doc_a"),
-                        F.col("b.doc_id").alias("doc_b"))
-                .distinct()).localCheckpoint()
+        cand = _new_vs_base_candidates(tagged, cap).localCheckpoint()
         base = (store.read(corpus_table)
                 .join(cand.select(F.col("doc_b").alias("doc_id"))
                       .distinct(), "doc_id", "semi")
@@ -721,8 +710,8 @@ def phash_ingest_foreach_batch(store, corpus_table: str,
     no corpus fetch at all, unlike the minhash face's re-shingle of
     matched base docs.  Pixels never shuffle and the corpus text is
     never re-read.  The hot-band cap runs over COMBINED corpus+batch
-    band occupancy via the same :func:`dedup._guarded_bands` as every
-    banded path (drops observable via ``last_band_guard_metrics``);
+    band occupancy via the same asymmetric band probe as the minhash
+    face (drops observable via ``last_band_guard_metrics``);
     banding is pigeonhole-complete for ``max_dist`` ≤ 7, the batch
     operator's contract.
 
@@ -736,12 +725,10 @@ def phash_ingest_foreach_batch(store, corpus_table: str,
     offline via ``store.compact_append`` when file counts matter."""
     from greenplum_dwh_spark.operators import dedup as D
     from greenplum_dwh_spark.operators.multimodal_ops import (
-        PHASH_MAX_DIST, _phash_bands, _phash_hamming)
+        _PHASH_LAYOUT, PHASH_MAX_DIST)
 
     dist = PHASH_MAX_DIST if max_dist is None else max_dist
-    if dist > 7:
-        raise ValueError("8×16-bit banding is complete only for "
-                         f"hamming ≤ 7, got {dist}")
+    D._hamming_rules(_PHASH_LAYOUT, dist)  # raises past hamming 7
     cap = D.BAND_CAP if band_cap is None else band_cap
 
     from pyspark.sql import types as T
@@ -771,40 +758,27 @@ def phash_ingest_foreach_batch(store, corpus_table: str,
         docs = (batch_df.select("doc_id", "text")
                 .dropDuplicates(["doc_id"]))
         # one Arrow pass over the batch payloads; pinned so the band
-        # probe, the verify and the index append share one hash run
+        # probe, the verify and the index append share one hash run.
+        # Null-hash rows (not a decodable 24-bit BMP) are accepted but
+        # never banded or indexed — no pixels to be near anything;
+        # unreachable for text packed by pack_image_payloads,
+        # load-bearing for raw-payload sources
         fps = (image_dhashes(pack_image_payloads(docs, width=16))
+               .filter(F.col("h1").isNotNull())
                .localCheckpoint())
-        bands_new = _phash_bands(fps)
+        bands_new = D._hamming_bands(fps, *_PHASH_LAYOUT)
         idx = (store.read(index_table)
                .filter(F.col("_batch_id") != int(batch_id))
                .select("doc_id", "h1", "h2"))
-        bands_idx = (_phash_bands(idx)
+        bands_idx = (D._hamming_bands(idx, *_PHASH_LAYOUT)
                      .join(F.broadcast(bands_new.select("band")
                                        .distinct()), "band", "semi"))
-        # combined-occupancy hot-band cap, identical to the batch
-        # face (an index-only count would diverge near the cap —
-        # the round-5 minhash lesson); CollectMetrics on the left
-        # side only
         tagged = (bands_new.withColumn("is_new", F.lit(True))
                   .unionByName(bands_idx
                                .withColumn("is_new", F.lit(False))))
-        observed, counted, keep = D._guarded_bands(tagged, cap)
-        new_side = observed.filter(keep & F.col("is_new"))
-        base_side = counted.filter(keep & ~F.col("is_new"))
-        cand = (new_side.alias("a").join(base_side.alias("b"), "band")
-                .select(F.col("a.doc_id").alias("doc_a"),
-                        F.col("b.doc_id").alias("doc_b"))
-                .distinct()).localCheckpoint()
-        fa = fps.select(F.col("doc_id").alias("doc_a"),
-                        F.col("h1").alias("h1_a"),
-                        F.col("h2").alias("h2_a"))
-        fb = idx.select(F.col("doc_id").alias("doc_b"),
-                        F.col("h1").alias("h1_b"),
-                        F.col("h2").alias("h2_b"))
-        rejects = (cand.join(fa, "doc_a").join(fb, "doc_b")
-                   .select("doc_a", "doc_b",
-                           _phash_hamming().cast("int").alias("hamming"))
-                   .filter(F.col("hamming") <= dist)
+        cand = D._new_vs_base_candidates(tagged, cap).localCheckpoint()
+        rejects = (D._hamming_verify(cand, _PHASH_LAYOUT[0], dist, fps,
+                                     base=idx)
                    .select(F.col("doc_a").alias("new_doc"),
                            F.col("doc_b").alias("base_doc"), "hamming")
                    .localCheckpoint())  # decisions pinned before any
@@ -819,14 +793,9 @@ def phash_ingest_foreach_batch(store, corpus_table: str,
         store.overwrite_partitions(
             corpus_table, accepted.withColumn("_batch_id", bid),
             "_batch_id")
-        # null-hash rows (not a decodable 24-bit BMP) are accepted but
-        # never indexed — no pixels to be near anything; unreachable
-        # for text packed by pack_image_payloads, load-bearing for
-        # raw-payload sources
         store.overwrite_partitions(
             index_table,
-            fps.filter(F.col("h1").isNotNull())
-            .join(accepted.select("doc_id"), "doc_id", "semi")
+            fps.join(accepted.select("doc_id"), "doc_id", "semi")
             .withColumn("_batch_id", bid),
             "_batch_id")
 

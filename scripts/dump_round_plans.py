@@ -1,10 +1,11 @@
 """Dump `.explain("formatted")` for headline queries into
-plans/r11/<query>_<suffix>.txt — the optimization round's before/after
-plan evidence (the judge checks plan claims against these files).
+plans/r<round>/<query>_<suffix>.txt — an optimization round's
+before/after plan evidence (plan claims are checked against these
+files).
 
 Usage:
-  python scripts/dump_r11_plans.py before [query,query,...]
-  python scripts/dump_r11_plans.py after  [query,query,...]
+  python scripts/dump_round_plans.py <round> before [query,query,...]
+  python scripts/dump_round_plans.py <round> after  [query,query,...]
 
 With no query list, dumps every bench headline query.  SF dir comes
 from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) so the plans
@@ -20,12 +21,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit("usage: dump_round_plans.py <round> before|after "
+                 "[query,query,...]")
+    rnd, suffix = int(sys.argv[1]), sys.argv[2]
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import bench
     from greenplum_dwh_spark.session import get_spark
-    spark = get_spark("dump_r11_plans",
+    spark = get_spark("dump_round_plans",
                       extra_conf={"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     qs = bench.bench_queries()
@@ -39,7 +43,7 @@ def main() -> None:
                 qs[m] = allq[m]
         qs = {k: v for k, v in qs.items() if k in only}
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    outdir = os.path.join(repo, "plans", "r11")
+    outdir = os.path.join(repo, "plans", f"r{rnd}")
     os.makedirs(outdir, exist_ok=True)
     for name, fn in qs.items():
         try:

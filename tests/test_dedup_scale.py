@@ -833,6 +833,56 @@ def test_simhash_split_falls_back_beyond_pigeonhole_bound(spark):
     assert (1, 2) not in got
 
 
+def test_simhash_probe_mirrors_split_fallback(spark):
+    """The recall probe credits split-rescued pairs only where the
+    operator splits.  A hamming-8 pair shares only bands 0 and 1, and
+    two extra docs per band push each over cap 3.  At max_dist 8 the
+    split emits the pair through the composite (band 0, band 1) key,
+    so nothing is lost; at max_dist 9 the operator keeps the plain
+    drop guard and emits nothing, and the probe must report that
+    loss instead of crediting a split that never runs."""
+    def fp(bands6):
+        return sum(v << (6 * j) for j, v in enumerate(bands6))
+
+    hot = (0b111000, 0b000111)
+    rows = [(1, fp(list(hot) + list(range(20, 28)))),
+            (2, fp(list(hot) + [v ^ 1 for v in range(20, 28)]))]
+    for i, base in enumerate((3, 7, 13, 31)):
+        bands = [(base + 5 * k) % 64 for k in range(10)]
+        bands[i // 2] = hot[i // 2]
+        rows.append((3 + i, fp(bands)))
+    # the pair is the corpus's only one within hamming 9
+    assert {(a, b) for ai, (a, x) in enumerate(rows)
+            for b, y in rows[ai + 1:]
+            if bin(x ^ y).count("1") <= 9} == {(1, 2)}
+    fps = spark.createDataFrame(rows, "doc_id long, fp long")
+
+    def probe(max_dist):
+        return dedup._hamming_guard_probe(
+            fps, dedup._SIMHASH_LAYOUT, max_dist, band_cap=3,
+            sample_mod=1)
+
+    r8 = probe(8)
+    assert r8["raw_overcap_rows"] == 8 and r8["overcap_buckets"] == 2
+    assert r8["emitted_pairs"] == 1
+    assert r8["est_pairs_lost"] == 0 and r8["est_recall"] == 1.0
+    r9 = probe(9)
+    assert r9["emitted_pairs"] == 0
+    assert r9["est_pairs_lost"] == 1 and r9["est_recall"] == 0.0
+
+
+def test_simhash_rejects_incomplete_banding_distance(spark):
+    """10×6-bit banding is pigeonhole-complete only up to hamming 9:
+    a dist-10 pair can differ in every band and never become a
+    candidate, unobserved by any guard — operator and probe refuse."""
+    import pytest
+    docs = _docs_df(spark, ["a b c d", "a b c e"])
+    with pytest.raises(ValueError):
+        dedup.simhash_pairs(docs, max_dist=10)
+    with pytest.raises(ValueError):
+        dedup.simhash_band_guard_probe(docs, max_dist=10)
+
+
 def test_simhash_hot_band_split_random_sweep(spark):
     """Property sweep for the split's exactness claim: on seeded
     random fingerprint corpora with planted near-dup clusters and

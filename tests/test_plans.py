@@ -344,3 +344,26 @@ def test_image_phash_is_banded_single_python_stage(spark, sf_dir):
     # so the Python kernel executes once per corpus, not per consumer
     assert "InMemoryTableScan" in plan
     assert "MapInPandas" in plan
+
+
+def test_hamming_band_plan_shapes_pinned(spark, sf_dir):
+    """Pinned plan shapes of the two hamming-band queries at sf0.01:
+    shuffle exchanges, join kinds, Window nodes and the cached hash
+    table.  Each query runs once first, so its fingerprint cache is
+    materialized and the pin reads the same warm plan whatever ran
+    earlier in the session."""
+    import os
+
+    from greenplum_dwh_spark.operators.dedup import dedup_simhash
+    from greenplum_dwh_spark.operators.multimodal_ops import (
+        dedup_image_phash)
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    want = {dedup_simhash: (11, 3, 0, 2), dedup_image_phash: (3, 3, 0, 2)}
+    for query, (exchanges, bhj, smj, windows) in want.items():
+        query(spark, sf01).count()
+        df = query(spark, sf01)
+        plan = checks.physical_plan(df)
+        assert (checks.exchange_count(df), plan.count("BroadcastHashJoin"),
+                plan.count("SortMergeJoin"), plan.count("Window [")) == (
+            exchanges, bhj, smj, windows), query.__name__
+        assert "InMemoryTableScan" in plan, query.__name__
