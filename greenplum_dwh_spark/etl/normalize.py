@@ -7,6 +7,18 @@ Pipeline per batch: landing → (4× SCD2 staging+apply) → fact append →
 Scale notes:
 - the landing batch is read once and cached; every staging derivation is
   a map-side-combinable groupBy on it (8 aggregations share the scan).
+- the four dims of a phase are independent tables, so each phase merges
+  them concurrently, one driver thread per dim
+  (``session.run_concurrently``): a dim merge on a small batch is a few
+  short jobs, so a sequential phase leaves most cores idle.  Each phase
+  is a barrier — every dim of the phase has committed or failed before
+  the next step starts — so the fact append runs only after all four
+  SCD2 merges committed, and the SCD1 phase only after the append.  A
+  failed merge is re-raised once its phase has ended (the first failure
+  in ``schemas.DIMENSIONS`` order); the other dims of that phase keep
+  their commits, and the landing batch is not truncated.  A rerun of
+  the same batch re-applies it: the SCD merges are idempotent, the fact
+  append is not (see the double-load note below).
 - the fact append is a pure projection (no shuffle) written
   ``partitionBy(day)`` — at 100 TB this is the only big write and it is
   append-only, embarrassingly parallel.
@@ -26,11 +38,41 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import functions as F
 
 from greenplum_dwh_spark import schemas
 from greenplum_dwh_spark.etl import scd1, scd2, staging
+from greenplum_dwh_spark.session import run_concurrently
 from greenplum_dwh_spark.tablestore import with_day_partition
+
+
+def _merge_scd2(wh, landing, meta) -> None:
+    """Apply the batch to one SCD2 hist dim (ETL.sql:11-237)."""
+    staged = staging.scd2_staging(landing, meta)
+    dim = wh.read(meta["hist"])
+    attr_cols = [dst for _, dst in meta["attrs"]]
+    # steady-state short-circuit: a batch with no new attribute
+    # tuples is a semantic no-op (close-out + insert both act only
+    # on `changes`) — skip the copy-on-write rewrite entirely. The
+    # emptiness probe is a dim-sized anti-join, orders cheaper than
+    # rewriting the dim at scale.
+    if not scd2.scd2_changes(staged, dim, attr_cols).isEmpty():
+        wh.overwrite_dim(meta["hist"],
+                         scd2.scd2_apply(dim, staged, meta["key"],
+                                         attr_cols))
+
+
+def _merge_scd1(wh, landing, name, meta) -> None:
+    """Apply the batch to one SCD1 dim (ETL.sql:243-445)."""
+    staged = staging.scd1_staging(landing, meta)
+    dim = wh.read(meta["scd1"])
+    if not scd1.scd1_is_noop(dim, staged, meta["key"],
+                             scd1.UPDATE_ATTRS[name]):
+        wh.overwrite_dim(meta["scd1"],
+                         scd1.scd1_apply(dim, staged, meta["key"],
+                                         scd1.UPDATE_ATTRS[name]))
 
 
 def normalize_transactions(wh) -> dict:
@@ -40,21 +82,13 @@ def normalize_transactions(wh) -> dict:
     if counts["landing"] == 0:
         landing.unpersist()
         return counts
+    dims = schemas.DIMENSIONS
 
     # ---- SCD2 (ETL.sql:11-237) --------------------------------------
-    for name, meta in schemas.DIMENSIONS.items():
-        staged = staging.scd2_staging(landing, meta)
-        dim = wh.read(meta["hist"])
-        attr_cols = [dst for _, dst in meta["attrs"]]
-        # steady-state short-circuit: a batch with no new attribute
-        # tuples is a semantic no-op (close-out + insert both act only
-        # on `changes`) — skip the copy-on-write rewrite entirely. The
-        # emptiness probe is a dim-sized anti-join, orders cheaper than
-        # rewriting the dim at scale.
-        if not scd2.scd2_changes(staged, dim, attr_cols).isEmpty():
-            wh.overwrite_dim(meta["hist"],
-                             scd2.scd2_apply(dim, staged, meta["key"],
-                                             attr_cols))
+    run_concurrently(wh.spark, *[
+        functools.partial(_merge_scd2, wh, landing, meta)
+        for meta in dims.values()])
+    for meta in dims.values():
         counts[meta["hist"]] = wh.row_count(meta["hist"])
 
     # ---- fact append (ETL.sql:121-130) ------------------------------
@@ -70,14 +104,10 @@ def normalize_transactions(wh) -> dict:
     counts["fact_appended"] = counts["landing"]
 
     # ---- SCD1 (ETL.sql:243-445) -------------------------------------
-    for name, meta in schemas.DIMENSIONS.items():
-        staged = staging.scd1_staging(landing, meta)
-        dim = wh.read(meta["scd1"])
-        if not scd1.scd1_is_noop(dim, staged, meta["key"],
-                                 scd1.UPDATE_ATTRS[name]):
-            wh.overwrite_dim(meta["scd1"],
-                             scd1.scd1_apply(dim, staged, meta["key"],
-                                             scd1.UPDATE_ATTRS[name]))
+    run_concurrently(wh.spark, *[
+        functools.partial(_merge_scd1, wh, landing, name, meta)
+        for name, meta in dims.items()])
+    for meta in dims.values():
         counts[meta["scd1"]] = wh.row_count(meta["scd1"])
 
     # ---- truncate landing (ETL.sql:447) -----------------------------

@@ -13,8 +13,10 @@ DuckDB oracle comparisons are deterministic.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 #: Defaults chosen for local[32] testing but expressed so they transfer
 #: to a 1000-executor cluster: AQE handles post-shuffle coalescing and
@@ -73,6 +75,30 @@ def get_spark(app_name: str = "greenplum_dwh_spark", master: str | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_concurrently(spark: SparkSession, *thunks) -> None:
+    """Call the thunks concurrently, on as many threads as thunks.
+
+    Each thread inherits the caller's Spark local properties and tags
+    (job group included), so the jobs a thunk starts are attributed as
+    if the caller had run it.  Every thunk runs to its end before this
+    returns; the first failure in submission order is then re-raised,
+    so nothing a thunk started is still running when the caller sees
+    it."""
+    def inherit(thunk):
+        # one wrapper per thunk: each copies the caller's properties, so
+        # a thread that sets its own job group does not set it for the
+        # others.  With pinned-thread mode off (PYSPARK_PIN_THREAD=false)
+        # pyspark hands the session back instead, and local properties
+        # are not tied to Python threads: there is nothing to carry over
+        wrap = inheritable_thread_target(spark)
+        return thunk if wrap is spark else wrap(thunk)
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inherit(t)) for t in thunks]
+    for f in futures:
+        f.result()
 
 
 def stop_spark() -> None:

@@ -6,10 +6,14 @@ dims, 4 SCD1 dims, report) over a :class:`TableStore` root directory.
 
 from __future__ import annotations
 
+import functools
+
+import pyspark.sql.types as T
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from greenplum_dwh_spark import schemas
+from greenplum_dwh_spark.session import run_concurrently
 from greenplum_dwh_spark.tablestore import TableStore
 
 #: name -> (schema, kind); kind "append" | "versioned"
@@ -24,6 +28,18 @@ TABLES = {
 }
 
 FACT_PARTITION_COLS = ["trans_dt_day"]
+
+
+def _stored_schema(name: str) -> T.StructType:
+    """``name``'s schema as stored: the fact also carries its
+    physical-only partition column."""
+    schema = TABLES[name][0]
+    if name == "fact_transactions":
+        schema = T.StructType(
+            list(schema.fields)
+            + [T.StructField("trans_dt_day", T.DateType(), True)])
+    return schema
+
 
 #: versioned table -> natural-key column (bucket key for the
 #: bucket-granular copy-on-write merge in TableStore)
@@ -51,20 +67,24 @@ class Warehouse:
         self.init_all()
 
     def init_all(self) -> None:
-        """CREATE TABLE IF NOT EXISTS for the full schema (DDL.sql)."""
-        for name, (schema, kind) in TABLES.items():
+        """CREATE TABLE IF NOT EXISTS for the full schema (DDL.sql).
+
+        The tables are independent, so they are created concurrently,
+        one thread each (``session.run_concurrently``); every table is
+        created or has failed before this returns, and the first
+        failure in ``TABLES`` order is raised."""
+        def create(name: str, kind: str) -> None:
             if kind == "append":
-                parts = FACT_PARTITION_COLS if name == "fact_transactions" else None
-                if name == "fact_transactions":
-                    # partition column is physical-only, add to schema copy
-                    import pyspark.sql.types as T
-                    schema = T.StructType(
-                        list(schema.fields)
-                        + [T.StructField("trans_dt_day", T.DateType(), True)])
-                self.store.init_append(name, schema, parts)
+                parts = (FACT_PARTITION_COLS
+                         if name == "fact_transactions" else None)
+                self.store.init_append(name, _stored_schema(name), parts)
             else:
-                self.store.init_versioned(name, schema,
+                self.store.init_versioned(name, TABLES[name][0],
                                           key_col=DIM_KEYS[name])
+
+        run_concurrently(self.spark, *[
+            functools.partial(create, name, kind)
+            for name, (_, kind) in TABLES.items()])
 
     # convenience accessors -----------------------------------------------
     def read(self, name: str) -> DataFrame:
@@ -80,13 +100,7 @@ class Warehouse:
         except AnalysisException:
             # an empty partitioned append table has no parquet footers
             # to infer from — fall back to a typed empty DataFrame
-            import pyspark.sql.types as T
-            schema, _ = TABLES[name]
-            if name == "fact_transactions":
-                schema = T.StructType(
-                    list(schema.fields)
-                    + [T.StructField("trans_dt_day", T.DateType(), True)])
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], _stored_schema(name))
 
     def append(self, name: str, df: DataFrame) -> None:
         parts = FACT_PARTITION_COLS if name == "fact_transactions" else None

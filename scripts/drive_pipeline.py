@@ -1,11 +1,12 @@
 """Drive the engine end-to-end through the public package API, and
-print the Spark jobs each pipeline day starts, per phase.
+print the Spark jobs each pipeline day starts and the wall time it
+takes, per phase.
 
     python scripts/drive_pipeline.py
 
 Jobs are read from one job group per phase (``tests/job_groups.py``).
 """
-import datetime as dt, os, sys, tempfile
+import contextlib, datetime as dt, os, sys, tempfile, time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -20,21 +21,40 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 import bank_fixture as bf
 from job_groups import job_group
 
+
+@contextlib.contextmanager
+def phase(name, out):
+    """Run the block in job group ``name``; ``out[name]`` is then its
+    (jobs, wall seconds)."""
+    t = time.perf_counter()
+    with job_group(spark, name) as jobs:
+        yield
+    out[name] = (len(jobs), time.perf_counter() - t)
+
+
+def show(phases):
+    return (f"spark_jobs={sum(n for n, _ in phases.values())} "
+            + " ".join(f"{k}={n}j/{s:.1f}s" for k, (n, s) in phases.items()))
+
+
 spark = g.get_spark("verify-drive", extra_conf={"spark.ui.enabled": "false",
                                                 "spark.sql.shuffle.partitions": "8"})
 tmp = tempfile.mkdtemp()
-wh = Warehouse(spark, tmp + "/wh")
+init = {}
+with phase("init", init):
+    wh = Warehouse(spark, tmp + "/wh")
+print(f"warehouse: {show(init)}")
 paths = bf.write_extracts(spark, tmp + "/extracts")
 for i, p in enumerate(paths):
-    with job_group(spark, "load") as load_jobs:
+    phases = {}
+    with phase("load", phases):
         n = load_landing_file(wh, p)
-    with job_group(spark, "normalize") as etl_jobs:
+    with phase("normalize", phases):
         c = normalize_transactions(wh)
-    with job_group(spark, "mart") as mart_jobs:
+    with phase("mart", phases):
         r = add_report_data(wh, "scd2", run_ts=dt.datetime(2020, 5, 2 + i, 23, 0))
-    jobs = {"load": len(load_jobs), "normalize": len(etl_jobs), "mart": len(mart_jobs)}
     print(f"day{i+1}: loaded={n} fact_total={c.get('fact_appended')} report_appended={r}"
-          f" spark_jobs={sum(jobs.values())} {jobs}")
+          f" {show(phases)}")
 
 print("\n=== report sample (day-3 run) ===")
 rep = wh.read("report")
