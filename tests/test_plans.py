@@ -346,24 +346,49 @@ def test_image_phash_is_banded_single_python_stage(spark, sf_dir):
     assert "MapInPandas" in plan
 
 
-def test_hamming_band_plan_shapes_pinned(spark, sf_dir):
-    """Pinned plan shapes of the two hamming-band queries at sf0.01:
-    shuffle exchanges, join kinds, Window nodes and the cached hash
-    table.  Each query runs once first, so its fingerprint cache is
-    materialized and the pin reads the same warm plan whatever ran
-    earlier in the session."""
+def _run_plan_counts(df) -> tuple:
+    """(shuffle exchanges, BroadcastHashJoin, SortMergeJoin, Window,
+    InMemoryTableScan) among the operators a run of ``df`` executes.
+    Only children are walked: a cached table's build plan is an inner
+    child of its scan, planned adaptively once when the cache fills,
+    and its join choices vary from run to run with the order its
+    stages finish in (a count over the plan text read 30 or 32
+    exchanges for the same warm dedup_jaccard_prefix plan)."""
+    counts = dict.fromkeys(("Exchange", "BroadcastHashJoin",
+                            "SortMergeJoin", "Window",
+                            "InMemoryTableScan"), 0)
+    stack = [df._jdf.queryExecution().executedPlan().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in counts:
+            counts[node.nodeName()] += 1
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return tuple(counts.values())
+
+
+def test_near_dup_plan_shapes_pinned(spark, sf_dir):
+    """Pinned plan shapes of the banded and prefix-filtered near-dup
+    queries at sf0.01: shuffle exchanges, join kinds, Window nodes and
+    cached-table scans of the warm plan.  Each query runs once first,
+    so its caches are materialized and the pin reads the plan every
+    later run executes, whatever ran earlier in the session."""
     import os
 
-    from greenplum_dwh_spark.operators.dedup import dedup_simhash
+    from greenplum_dwh_spark.operators import dedup
     from greenplum_dwh_spark.operators.multimodal_ops import (
         dedup_image_phash)
+    from greenplum_dwh_spark.operators.similarity import (
+        dedup_embedding_lsh)
     sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
-    want = {dedup_simhash: (11, 3, 0, 2), dedup_image_phash: (3, 3, 0, 2)}
-    for query, (exchanges, bhj, smj, windows) in want.items():
+    want = {dedup.dedup_simhash: (3, 3, 0, 2, 4),
+            dedup_image_phash: (3, 3, 0, 2, 4),
+            dedup.dedup_minhash_lsh: (2, 2, 0, 1, 3),
+            dedup.dedup_incremental: (3, 3, 0, 2, 4),
+            dedup.dedup_jaccard_prefix: (0, 5, 0, 0, 6),
+            dedup.dedup_char_jaccard: (4, 9, 0, 1, 11),
+            dedup.dedup_containment: (0, 5, 0, 0, 6),
+            dedup_embedding_lsh: (2, 2, 0, 1, 0)}
+    for query, shape in want.items():
         query(spark, sf01).count()
-        df = query(spark, sf01)
-        plan = checks.physical_plan(df)
-        assert (checks.exchange_count(df), plan.count("BroadcastHashJoin"),
-                plan.count("SortMergeJoin"), plan.count("Window [")) == (
-            exchanges, bhj, smj, windows), query.__name__
-        assert "InMemoryTableScan" in plan, query.__name__
+        assert _run_plan_counts(query(spark, sf01)) == shape, query.__name__
