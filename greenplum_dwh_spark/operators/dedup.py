@@ -39,6 +39,18 @@ Built on those: ``knn_doc_graph``, ``dedup_keep_best``,
 ``split_leakage_safe``, ``dedup_source_overlap``; plus the
 suffix-array ``dedup_repeated_spans``.
 
+Every candidate path is filter → verify, with one implementation per
+step.  Banded candidates come from the hot-band guard
+(``_guarded_bands``, metrics via ``last_band_guard_metrics``) and one
+of two expansions, each called directly by its family: the group
+expansion ``_banded_candidates`` (wide alphabets: minhash, embedding
+SRP in ``similarity``, the char dense leg) or the bucket self-join
+``_guarded_band_join`` (the hamming kernel's narrow alphabets).  The
+PPJoin family (word and char jaccard, containment) shares one prefix
+index (``_prefix_index``) and one two-stage verify
+(``_verified_pairs``: signature pre-filter, then exact set measure,
+counted into ``last_ppjoin_metrics``).
+
 All hot paths are pure Spark SQL expressions (whole-stage codegen);
 no Python UDFs.
 """
@@ -81,34 +93,25 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
                  F.min("doc_id").alias("rep_doc_id")))
 
 
-def _pairs_with_jaccard(docs: DataFrame, pairs: DataFrame,
-                        sets_df: DataFrame,
-                        broadcast_sets: bool = True,
-                        measure=None, out_col: str = "jac") -> DataFrame:
-    """pairs (doc_a, doc_b) × per-doc shingle sets → exact set
-    measure (default jaccard; pass ``measure=(a, b) -> Column`` for
-    another, e.g. containment).
+def _pairs_with_jaccard(pairs: DataFrame,
+                        sets_df: DataFrame) -> DataFrame:
+    """pairs (doc_a, doc_b) × per-doc shingle sets → exact jaccard.
 
-    The per-doc set index is BROADCAST by default: a shuffle join here
-    moves one shingle *array* per candidate row (~1 KB each — measured
-    16 GB shuffled and 90 s for 10.9 M candidates at the derived sf1),
-    while the index itself is one row per doc (~1 KB/doc — 50 MB at
-    50 k docs).  Broadcast attaches the arrays map-side and the select
+    The per-doc set index is BROADCAST: a shuffle join here moves one
+    shingle *array* per candidate row (~1 KB each — measured 16 GB
+    shuffled and 90 s for 10.9 M candidates at the derived sf1), while
+    the index itself is one row per doc (~1 KB/doc — 50 MB at 50 k
+    docs).  Broadcast attaches the arrays map-side and the select
     drops them immediately after the measure, so nothing array-sized
-    is ever exchanged.  For corpora whose set index outgrows executor
-    memory, pass ``broadcast_sets=False`` to fall back to the shuffle
-    join (the candidate side is then the thing to shard on)."""
-    if measure is None:
-        measure = H.jaccard
-    sets = F.broadcast(sets_df) if broadcast_sets else sets_df
+    is ever exchanged."""
+    sets = F.broadcast(sets_df)
     a = sets.alias("sa")
     b = sets.alias("sb")
     return (pairs
             .join(a, F.col("doc_a") == F.col("sa.doc_id"))
             .join(b, F.col("doc_b") == F.col("sb.doc_id"))
             .select("doc_a", "doc_b",
-                    measure(F.col("sa.s"), F.col("sb.s"))
-                    .alias(out_col)))
+                    H.jaccard(F.col("sa.s"), F.col("sb.s")).alias("jac")))
 
 
 #: guard observations from the most recent banded-LSH actions, newest
@@ -232,71 +235,41 @@ def _band_self_join(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def _banded_candidates(bands: DataFrame,
-                       band_cap: int = BAND_CAP,
-                       distinct: bool = True,
-                       expand: str = "group") -> DataFrame:
-    """(doc_id, band) → candidate pairs, with the hot-band guard:
-    buckets above ``band_cap`` members are dropped entirely (see
-    :data:`BAND_CAP`).  Two physical expansions, chosen by the CALLER
-    from its band-alphabet shape (guide §2.4/§3.1 — the planner cannot
-    know the bucket-size distribution, the caller can):
+                       band_cap: int = BAND_CAP) -> DataFrame:
+    """(doc_id, band) → candidate pairs (doc_a < doc_b) by GROUP
+    expansion, with the hot-band guard: buckets above ``band_cap``
+    members are dropped entirely (see :data:`BAND_CAP`), and the
+    dropped rows are *observed*, not silently lost (readable afterwards
+    via :func:`last_band_guard_metrics`).
 
-    - ``expand="group"`` (default): ONE groupBy(band) gathers each
-      bucket into a sorted array and pairs are expanded with
-      posexplode + slice.  Fewest exchanges and a SINGLE reference to
-      the band subtree — right for wide band alphabets (concat
-      minhash / SRP keys) whose buckets are small, where the previous
-      windowed-count + self-join paid a Window sort plus a duplicated
-      band pipeline (the CollectMetrics node may appear only once in
-      the executed plan, so the join's other side was a metric-free
-      twin Spark could not exchange-reuse — on minhash that twin
-      re-ran the 64-perm signature aggregation).
-    - ``expand="join"``: the hot-band-guarded window count + streaming
-      bucket self-join — right for small fixed alphabets (simhash's
-      6-bit bands, the composite re-keys of the hot split) whose
-      buckets approach the cap: the join STREAMS pair emission with no
-      per-bucket array slicing (the group expansion copies O(c) array
-      cells per member, quadratic per bucket) and AQE can skew-split
-      the probe side.
+    ONE groupBy(band) gathers each bucket into a sorted array and pairs
+    are expanded with posexplode + slice: the fewest exchanges and a
+    SINGLE reference to the band subtree — right for wide band
+    alphabets (concat minhash / SRP keys) whose buckets are small.  A
+    self-join there pays a Window sort plus a duplicated band pipeline
+    (the CollectMetrics node may appear only once in the executed
+    plan, so the join's other side is a metric-free twin Spark cannot
+    exchange-reuse — on minhash that twin re-runs the 64-perm
+    signature aggregation).  Small fixed alphabets, whose buckets
+    approach the cap, join instead (:func:`_guarded_band_join`).
 
-    Measured at sf0.1, best-of-5 warm, full verify chains: simhash
-    0.90 s join vs 1.25 s group; minhash 0.83 s group vs 1.29 s join.
+    Returns the candidate MULTISET, one row per shared under-cap
+    bucket: a caller dedupes where it is cheapest (minhash and SRP
+    before their verify, the char dense leg after its signature
+    filter).
 
-    The rows the guard drops are *observed*, not silently lost
-    (readable afterwards via :func:`last_band_guard_metrics`; the
-    group branch records exact per-bucket aggregates, the join branch
-    the per-membership equivalents from :func:`_guarded_bands`).
-
-    ``distinct=False`` lets a caller with a CHEAP verify predicate
-    defer deduplication until after verification: when band collisions
-    are frequent (small band alphabets), shuffling the raw candidate
-    multiset for distinct costs more than verifying duplicates twice.
-    Both branches emit the same multiplicity (one row per shared
-    under-cap bucket)."""
-    if expand == "join":
-        # the observe node must appear exactly ONCE in the executed
-        # plan (a CollectMetrics duplicated by the self-join breaks
-        # metric retrieval), so only the left side carries it
-        observed, counted, keep = _guarded_bands(bands, band_cap)
-        out = _band_self_join(observed.filter(keep), counted.filter(keep))
-        return out.distinct() if distinct else out
-    # Round 12 (guide §5 memory / §2.5 skew): the cap filter runs
-    # BEFORE the per-band array is built.  The previous shape
-    # collect_list'd EVERY band — including over-cap ones — into a
-    # single non-spillable aggregation buffer and only then filtered
-    # on _bn, so one degenerate band (empty-shingle docs, a constant
-    # column) at 100 TB put millions of doc_ids into one buffer →
-    # executor OOM.  The windowed count (_guarded_bands — same
-    # Observation metrics as the join branch) buffers each band in a
-    # SPILLABLE window group, the filter drops over-cap and singleton
-    # bands, and only then does collect_list build arrays — every
-    # buffer now ≤ band_cap elements by construction.  The window
-    # rides the same hash-partitioning the groupBy needs (one
-    # exchange total), and the band subtree is still referenced
-    # exactly ONCE — the property the round-11 rewrite bought (a
-    # count-then-join two-pass was rejected here: it references the
-    # band pipeline twice, re-running the 64-perm minhash signature
-    # aggregation on uncached callers).
+    The cap filter runs BEFORE the per-band array is built:
+    collect_list's aggregation buffer is not spillable, so one
+    degenerate band (empty-shingle docs, a constant column) collected
+    whole puts millions of doc_ids into one buffer → executor OOM.
+    The windowed count (:func:`_guarded_bands`) buffers each band in a
+    SPILLABLE window group, the filter drops over-cap and singleton
+    bands, and only then does collect_list build arrays — every buffer
+    ≤ ``band_cap`` elements by construction.  The window rides the
+    same hash partitioning the groupBy needs (one exchange total), and
+    the band subtree is still referenced once (a count-then-join
+    two-pass references it twice, re-running the minhash signature
+    aggregation on uncached callers)."""
     observed, counted, keep = _guarded_bands(bands, band_cap)
     grouped = (observed
                .filter(keep & (F.col("_bn") >= 2))
@@ -306,15 +279,30 @@ def _banded_candidates(bands: DataFrame,
     # the element after doc_a and the over-long length argument
     # truncates.  The trailing doc_a < doc_b filter is
     # belt-and-braces: with unique (doc_id, band) memberships the
-    # sorted expansion already emits only ascending pairs, exactly
-    # like the join branch's a.doc < b.doc predicate.
-    out = (grouped
-           .select(F.posexplode("_ds").alias("i", "doc_a"), F.col("_ds"))
-           .select("doc_a",
-                   F.explode(F.expr("slice(_ds, i + 2, size(_ds))"))
-                   .alias("doc_b"))
-           .filter(F.col("doc_a") < F.col("doc_b")))
-    return out.distinct() if distinct else out
+    # sorted expansion already emits only ascending pairs.
+    return (grouped
+            .select(F.posexplode("_ds").alias("i", "doc_a"), F.col("_ds"))
+            .select("doc_a",
+                    F.explode(F.expr("slice(_ds, i + 2, size(_ds))"))
+                    .alias("doc_b"))
+            .filter(F.col("doc_a") < F.col("doc_b")))
+
+
+def _guarded_band_join(bands: DataFrame, band_cap: int) -> DataFrame:
+    """(doc_id, band) → candidate MULTISET (doc_a < doc_b, one row per
+    shared under-cap bucket) by streaming bucket self-join under the
+    hot-band guard — the expansion for small fixed band alphabets
+    (hamming bands, the hot split's composite re-keys) whose buckets
+    approach the cap: the join streams pair emission with no
+    per-bucket array slicing (:func:`_banded_candidates` copies O(c)
+    array cells per member, quadratic per bucket) and AQE can
+    skew-split the probe side.  Measured at sf0.1, best-of-5 warm,
+    full verify chains: simhash 0.90 s join vs 1.25 s group; minhash
+    0.83 s group vs 1.29 s join.  Only the probe side carries the
+    guard's Observation: a CollectMetrics node duplicated by the
+    self-join breaks metric retrieval."""
+    observed, counted, keep = _guarded_bands(bands, band_cap)
+    return _band_self_join(observed.filter(keep), counted.filter(keep))
 
 
 def _set_bands(sets_df: DataFrame,
@@ -372,8 +360,8 @@ def minhash_pairs(docs: DataFrame,
     """Near-duplicate pairs (doc_a, doc_b, jac) of a (doc_id, text)
     DataFrame via minhash-LSH + exact verification."""
     bands, sets_df = _minhash_bands(docs)
-    cand = _banded_candidates(bands, band_cap)
-    return (_pairs_with_jaccard(docs, cand, sets_df)
+    cand = _banded_candidates(bands, band_cap).distinct()
+    return (_pairs_with_jaccard(cand, sets_df)
             .filter(F.col("jac") >= threshold))
 
 
@@ -398,7 +386,7 @@ def incremental_minhash_pairs(docs: DataFrame, is_new,
     bands, sets_df = _minhash_bands(docs)
     cand = _new_vs_base_candidates(bands.withColumn("is_new", is_new),
                                    band_cap)
-    return (_pairs_with_jaccard(docs, cand, sets_df)
+    return (_pairs_with_jaccard(cand, sets_df)
             .filter(F.col("jac") >= threshold)
             .select(F.col("doc_a").alias("new_doc"),
                     F.col("doc_b").alias("base_doc"), "jac"))
@@ -558,12 +546,12 @@ def _split_routing(bands: DataFrame, band_cap: int,
 
 def _split_banded_candidates(bands: DataFrame,
                              band_cap: int) -> DataFrame:
-    """Hot-band AUTO-SPLIT candidate generation (round-6 verdict
-    item 5 — the fix for simhash's band-alphabet saturation: a 6-bit
-    alphabet puts ~n/640 docs in EVERY bucket once n passes ~100k·cap,
-    and the old guard then dropped those rows wholesale).
+    """Hot-band AUTO-SPLIT candidate generation — the answer to
+    simhash's band-alphabet saturation: a 6-bit alphabet puts ~n/640
+    docs in EVERY bucket once n passes ~100k·cap, where a drop guard
+    would lose those rows wholesale.
 
-    Buckets at or under ``band_cap`` self-join as before.  Members of
+    Buckets at or under ``band_cap`` self-join.  Members of
     an over-cap bucket are NOT dropped: each hot membership is
     re-keyed by the composite (hot band value, each of the doc's
     other band values) and the composite buckets join under the
@@ -585,8 +573,7 @@ def _split_banded_candidates(bands: DataFrame,
     cool_cand = _band_self_join(cool, cool)
     # composite re-keys of an already-saturated alphabet: buckets run
     # right up to the cap, so the streaming join expansion applies
-    hot_cand = _banded_candidates(comp, band_cap, distinct=False,
-                                  expand="join")
+    hot_cand = _guarded_band_join(comp, band_cap)
     _SPLIT_STAGE1.append((_GUARD_OBSERVATIONS[-1][0], obs, fallback))
     del _SPLIT_STAGE1[:-_GUARD_KEEP]
     return cool_cand.unionByName(hot_cand)
@@ -678,8 +665,7 @@ def _hamming_pairs(fps: DataFrame, layout, max_dist: int,
         cand = _split_banded_candidates(bands, band_cap)
     else:
         # small band alphabets → cap-sized buckets: streaming join wins
-        cand = _banded_candidates(bands, band_cap, distinct=False,
-                                  expand="join")
+        cand = _guarded_band_join(bands, band_cap)
     # small band alphabets collide often on random fingerprints
     # (~n²/2⁷ candidate rows per 6-bit band), so verify-then-distinct:
     # the hamming check is an XOR+popcount per hash column against the
@@ -938,7 +924,7 @@ def jaccard_prefix_pairs(docs: DataFrame,
     grams = H.with_word_shingles(docs, n=2).cache()
     if caches is not None:
         caches.append(grams)
-    return _prefix_filtered_pairs(docs, grams, threshold, caches=caches)
+    return _prefix_filtered_pairs(grams, threshold, caches=caches)
 
 
 #: hybrid routing cap for the char-gram prefix join: grams whose
@@ -977,17 +963,16 @@ def char_jaccard_pairs(docs: DataFrame,
     ``dense_prefix_cap=None`` forces the pure-exact plan (the
     correctness twin the hybrid is property-tested against).
 
-    Billion-doc posture knobs (round-6 verdict item 4 — runnable, not
-    prose): ``dense_hint_broadcast=False`` routes the dense-gram
-    anti/semi filter through a co-partitioned shuffle join instead of
-    a broadcast; ``broadcast_sigs=False`` drops the forced broadcast
+    Billion-doc posture knobs: ``dense_hint_broadcast=False`` routes
+    the dense-gram anti/semi filter through a co-partitioned shuffle
+    join instead of a broadcast; ``broadcast_sigs=False`` drops the forced broadcast
     of the 64-byte signature index in the verify, letting AQE pick the
     join strategy from measured sizes.  Both are output-identical to
     the defaults (unit-pinned) — they change only physical planning."""
     grams = H.with_char_ngrams(docs).cache()
     if caches is not None:
         caches.append(grams)
-    return _prefix_filtered_pairs(docs, grams, threshold, caches=caches,
+    return _prefix_filtered_pairs(grams, threshold, caches=caches,
                                   dense_prefix_cap=dense_prefix_cap,
                                   band_cap=band_cap,
                                   dense_hint_broadcast=dense_hint_broadcast,
@@ -1104,20 +1089,16 @@ def _gram_signatures(sets_df: DataFrame) -> DataFrame:
 def _verified_pairs(pairs: DataFrame | list[DataFrame],
                     sets_df: DataFrame, fr,
                     kind: str = "jaccard",
-                    broadcast_sigs: bool = True,
-                    dedupe_survivors: bool = False,
-                    observe: bool = False) -> DataFrame:
+                    broadcast_sigs: bool = True) -> DataFrame:
     """Exact verification with the SAME snapped rational the candidate
     bounds used: ``inter·q ≥ p·denom`` in pure integer arithmetic, so
     bounds and verify can never disagree across a float-rounding
-    boundary (round-4 ADVICE — the previous float-threshold verify was
-    nominally laxer than the Fraction-derived bounds).  The emitted
-    measure column stays the double ratio (bit-identical to the DuckDB
-    oracle's, which applies the same integer predicate).
+    boundary.  The emitted measure column stays the double ratio
+    (bit-identical to the DuckDB oracle's, which applies the same
+    integer predicate).
 
-    Two-stage verify, both stages scale-safe (round-5; the
-    second-decade probe at sf10 = 500 k docs killed the previous
-    design's full-gram-array broadcast with
+    Two-stage verify, both stages scale-safe (a full-gram-array
+    broadcast of the set index failed at sf10 = 500 k docs with
     notEnoughMemoryToBuildAndBroadcastTableError):
 
     1. **signature pre-filter** — every candidate pair is scored
@@ -1133,19 +1114,17 @@ def _verified_pairs(pairs: DataFrame | list[DataFrame],
        10.9 M sf1 candidates), and the broadcast is docs × 64 B.
     2. **exact string verify** — the tiny survivor set (≈ true pairs)
        joins the full gram arrays by SHUFFLE join: the array index is
-       shuffled once (one row per doc), survivors are few, and no
-       broadcast of the array index ever happens — the sf10 cliff is
-       structurally gone.
+       shuffled once (one row per doc), survivors are few, and the
+       array index is never broadcast.
 
-    ``pairs`` may be a MULTISET (the raw prefix-match rows):
-    ``dedupe_survivors=True`` distincts *after* the signature filter,
-    so the dedup shuffle only ever sees the ~true-pair-sized survivor
+    ``pairs`` may be a MULTISET (the raw prefix-match rows): the
+    survivors are deduplicated *after* the signature filter, so the
+    dedup shuffle only ever sees the ~true-pair-sized survivor
     multiset instead of building keyed state over every candidate row
-    (the sf10 probe measured 375 s of the 500 s stage total in the
-    old pre-distinct pair aggregation).  ``observe=True`` counts the
-    surviving distinct pairs into :func:`last_ppjoin_metrics` — the
-    exact-verify volume is the number every pruning layer exists to
-    shrink."""
+    (a pre-filter pair aggregation took 375 s of a 500 s stage total
+    at sf10).  The surviving distinct pairs are counted into
+    :func:`last_ppjoin_metrics` — the exact-verify volume is the
+    number every pruning layer exists to shrink."""
     sigs = _gram_signatures(sets_df)
     sg = F.broadcast(sigs) if broadcast_sigs else sigs
     ga, gb = sg.alias("ga"), sg.alias("gb")
@@ -1155,8 +1134,8 @@ def _verified_pairs(pairs: DataFrame | list[DataFrame],
     # MULTISET — hundreds of millions of rows on gram-dense corpora
     # (379 M at sf1 for the char variant, where the 9 k-gram universe
     # makes the prefix filter admit ~every pair) — and plain-attribute
-    # popcounts whole-stage-codegen where the previous
-    # aggregate(zip_with(...)) lambda ran interpreted per row
+    # popcounts whole-stage-codegen where an aggregate(zip_with(...))
+    # lambda runs interpreted per row
     def only(xs, ys):
         return F.expr(" + ".join(
             f"CAST(bit_count({xs}.bm{k} & ~{ys}.bm{k}) AS BIGINT)"
@@ -1189,10 +1168,7 @@ def _verified_pairs(pairs: DataFrame | list[DataFrame],
     survivors = filtered[0]
     for extra in filtered[1:]:
         survivors = survivors.unionByName(extra)
-    if dedupe_survivors:
-        survivors = survivors.distinct()
-    if observe:
-        survivors = _observed_candidates(survivors)
+    survivors = _observed_candidates(survivors.distinct())
     a, b = sets_df.alias("sa"), sets_df.alias("sb")
     sa, sb = F.col("sa.s"), F.col("sb.s")
     inter = F.size(F.array_intersect(sa, sb)).cast("long")
@@ -1211,45 +1187,72 @@ def _verified_pairs(pairs: DataFrame | list[DataFrame],
                     (inter.cast("double") / denom).alias(out_col)))
 
 
-def _prefix_filtered_pairs(docs: DataFrame, grams: DataFrame,
+def _prefix_index(grams: DataFrame, fr) -> DataFrame:
+    """The PPJoin prefix index of a (doc_id, s=token array) set index
+    at snapped threshold ``fr``: (doc_id, g, n, rk) for each doc's
+    ``|A| − ⌈t·|A|⌉ + 1`` rarest tokens under the global (df, g)
+    order (``rk`` the 1-based rank, ``n`` = |A|; exact rational ceil,
+    see :func:`_ceil_mul`).  A qualifying jaccard pair shares a token
+    of both prefixes, and a pair at containment ≥ t leaves the smaller
+    side at most ``|A| − ⌈t·|A|⌉`` unshared tokens, so the same index
+    serves both joins.
+
+    The index is MATERIALIZED (cached, caller-released): the df
+    aggregation, df join and per-doc rank window otherwise re-run for
+    every reference and every run — the jaccard self-join reads the
+    index on both sides (measured 25 s → 4 s at sf0.1 on a
+    three-reference plan), containment's probe once per run (~0.7 s
+    at sf0.1).  Its size is ~(1−t)·Σ|doc| tokens, far smaller than
+    the corpus."""
+    ex = grams.select("doc_id", F.explode("s").alias("g"),
+                      F.size("s").alias("n"))
+    freq = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+    w = Window.partitionBy("doc_id").orderBy("df", "g")
+    return (ex.join(freq, "g")
+            .withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk")
+                    <= F.col("n") - _ceil_mul(F.col("n"), fr) + 1)
+            .select("doc_id", "g", "n", "rk")
+            .cache())
+
+
+#: char dense leg: element-sampling rate of the sampled sketch tier
+#: (see :func:`_set_bands`) and the set size from which a doc sketches
+#: sampled — P(empty sample) ≤ (1−1/4)^128 ≈ 1e-16
+DENSE_ELEMENT_MOD = 4
+DENSE_SAMPLE_FLOOR = 128
+
+
+def _prefix_filtered_pairs(grams: DataFrame,
                            threshold: float,
                            caches: list | None = None,
                            dense_prefix_cap: int | None = None,
                            band_cap: int = BAND_CAP,
-                           dense_element_mod: int = 4,
-                           dense_sample_floor: int = 128,
-                           dense_band_r: int | None = None,
                            dense_hint_broadcast: bool = True,
                            broadcast_sigs: bool = True) -> DataFrame:
     """PPJoin core over a (doc_id, s=token array) set index ``grams``
     (see :func:`jaccard_prefix_pairs` for the base filter derivations).
 
-    Round-5 restructure, driven by the second-decade probe (sf10 =
-    500 k docs: 837 M match rows, 109 M distinct candidates, 25.6 k
-    real pairs):
+    Measured on the sf10 probe (500 k docs: 837 M match rows, 109 M
+    distinct candidates, 25.6 k real pairs):
 
-    - there is NO pair-level aggregation any more.  The classic
-      PPJoin pair groupBy (count matched tokens + max ranks for the
-      pair-level positional bound) built keyed state over every
-      candidate pair — 375 s of the 500 s sf10 stage total, and the
-      bound it bought pruned little that the row-level filters had
-      not.  Instead the raw match MULTISET flows straight into the
-      signature pre-filter (:func:`_verified_pairs`): a broadcast
-      hash join against the fixed 64-byte-per-doc signature index +
-      8 popcounts per row — no keyed state, no spill — and only the
-      ~true-pair-sized survivor multiset pays a distinct;
+    - there is NO pair-level aggregation.  The classic PPJoin pair
+      groupBy (count matched tokens + max ranks for the pair-level
+      positional bound) builds keyed state over every candidate pair —
+      375 s of the 500 s sf10 stage total, and the bound it buys
+      prunes little that the row-level filters have not.  Instead the
+      raw match MULTISET flows straight into the signature pre-filter
+      (:func:`_verified_pairs`): a broadcast hash join against the
+      fixed 64-byte-per-doc signature index + 8 popcounts per row — no
+      keyed state, no spill — and only the ~true-pair-sized survivor
+      multiset pays a distinct;
     - the token-level positional filter stays (it is stateless and
       cuts the multiset ~10× before the signature join);
-    - tightenings tried and REJECTED on measurement: the PPJoin
-      short *index prefix* (|A| − ⌈2t/(1+t)·|A|⌉ + 1 on the smaller
-      side) loosened the then-existing pair-level tail bound enough
-      that candidates GREW 1.09 M → 1.88 M at sf0.1; the
-      g₁-existence filter pruned exactly 0 candidates on this
-      corpus."""
-    ex = grams.select("doc_id", F.explode("s").alias("g"),
-                      F.size("s").alias("n"))
-    freq = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "g")
+    - tightenings REJECTED on measurement: the PPJoin short *index
+      prefix* (|A| − ⌈2t/(1+t)·|A|⌉ + 1 on the smaller side) grew
+      candidates 1.09 M → 1.88 M at sf0.1 under a pair-level tail
+      bound; the g₁-existence filter pruned exactly 0 candidates on
+      this corpus."""
     # required overlap α = ⌈t/(1+t)·(|A|+|B|)⌉ — t rational makes
     # t/(1+t) rational too (p/q → p/(p+q)), so every bound below is
     # exact integer arithmetic: no epsilon, and no float product that
@@ -1257,23 +1260,7 @@ def _prefix_filtered_pairs(docs: DataFrame, grams: DataFrame,
     # prune a pair at jaccard exactly t
     fr = _snap(threshold)
     t_factor = fr / (1 + fr)
-    # The prefix index is MATERIALIZED (persisted) before the
-    # self-join: it is referenced twice downstream (the two self-join
-    # sides; the round-5 restructure removed the old third reference,
-    # the candidate re-derivation under the verify join), and
-    # recomputing the df-join + window rank per reference multiplies
-    # the pipeline cost (measured 25 s → 4 s at sf0.1 on the original
-    # three-reference plan).  This is
-    # the classic PPJoin "build the prefix index once" step; its size
-    # is ~(1−t)·Σ|doc| tokens, far smaller than the corpus.
-    prefix = (ex.join(freq, "g")
-              .withColumn("rk", F.row_number().over(w))
-              # |A| - ceil(t*|A|) + 1 rarest tokens form the prefix
-              # (exact rational ceil: see _ceil_mul)
-              .filter(F.col("rk")
-                      <= F.col("n") - _ceil_mul(F.col("n"), fr) + 1)
-              .select("doc_id", "g", "n", "rk")
-              .cache())
+    prefix = _prefix_index(grams, fr)
     if caches is not None:
         caches.append(prefix)
     na, nb = F.col("a.n"), F.col("b.n")
@@ -1295,8 +1282,8 @@ def _prefix_filtered_pairs(docs: DataFrame, grams: DataFrame,
     if dense_prefix_cap is None:
         matches = _exact_matches(prefix)
     else:
-        # DENSE-SLICE HYBRID (round-5 verdict item 3).  Partition the
-        # prefix INDEX by per-gram prefix-entry count c:
+        # DENSE-SLICE HYBRID.  Partition the prefix INDEX by per-gram
+        # prefix-entry count c:
         #
         # - grams with c ≤ cap keep the exact self-join.  Its match
         #   multiset is Σ c² ≤ cap · Σ c — LINEAR in the corpus for a
@@ -1317,15 +1304,14 @@ def _prefix_filtered_pairs(docs: DataFrame, grams: DataFrame,
         # the pair.  Otherwise EVERY shared prefix gram is dense —
         # then both docs carry a dense prefix gram, both are in the
         # cohort, and the pair reaches the banded leg, which misses it
-        # only with probability (1 − t^r)^bands — (1 − 0.7³)^21 ≈
-        # 1.5e-4 at the char threshold with the r=3 default (r=3 over
-        # r=2 trades that 4.4e-10 → 1.5e-4 worst-case detection for
-        # ~13× fewer background-similarity band collisions, the
-        # measured sf0.1 cost driver; ≥ 1−3e-7 already at j=0.8) —
-        # or through a hot-band-cap drop, which the band guard
-        # OBSERVES (last_band_guard_metrics) rather than silently
-        # losing.  Both legs feed the same exact verify, so false
-        # candidates never reach the output.
+        # only with probability (1 − t^r)^bands ≤ DENSE_MISS_BUDGET
+        # (r from :func:`_pick_band_r`: r=3 at the char threshold,
+        # (1 − 0.7³)^21 ≈ 1.5e-4, ≥ 1−3e-7 already at j=0.8, for ~13×
+        # fewer background-similarity band collisions than r=2, the
+        # measured sf0.1 cost driver) — or through a hot-band-cap drop,
+        # which the band guard OBSERVES (last_band_guard_metrics)
+        # rather than silently losing.  Both legs feed the same exact
+        # verify, so false candidates never reach the output.
         gcount = prefix.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
         # dense grams are the HEAD of the gram-frequency distribution
         # — universe-bounded (≤ alphabet⁴ for char grams) and in
@@ -1333,10 +1319,10 @@ def _prefix_filtered_pairs(docs: DataFrame, grams: DataFrame,
         # every realistic scale.  The worst-case bound |prefix|/cap is
         # weak (a pathological corpus of only-heavy grams could
         # overflow a broadcast); ``dense_hint_broadcast=False`` is the
-        # runnable billion-doc fallback (round-6 verdict item 4): drop
-        # the hint and the anti/semi joins below shuffle on g, which
-        # gcount's aggregation already co-partitioned — same rows,
-        # same output, no driver-sized relation anywhere.
+        # runnable billion-doc fallback: drop the hint and the
+        # anti/semi joins below shuffle on g, which gcount's
+        # aggregation already co-partitioned — same rows, same output,
+        # no driver-sized relation anywhere.
         dense_g = gcount.filter(F.col("c") > dense_prefix_cap).select("g")
         if dense_hint_broadcast:
             dense_g = F.broadcast(dense_g)
@@ -1348,24 +1334,23 @@ def _prefix_filtered_pairs(docs: DataFrame, grams: DataFrame,
         # small doc (an empty sampled set emits no bands): docs with
         # n ≤ K/t sketch their FULL sets (they are small — full
         # sketching is cheap exactly where sampling is risky), docs
-        # with n ≥ K sketch the mod-sampled sets (P(empty sample) ≤
-        # (1−1/mod)^K ≈ 1e-16 at K=128, mod=4).  A qualifying pair
-        # has size ratio ≥ t, so na ≤ K forces nb ≤ K/t (both in the
-        # full tier) and na > K puts both in the sampled tier — the
-        # [K, K/t] overlap zone sketches twice, and the tier tag keeps
-        # the band namespaces disjoint (a full-tier band must never
-        # equi-join a sampled-tier band: different set transforms).
-        if dense_band_r is None:
-            dense_band_r = _pick_band_r(fr)
-        small_lim = int((dense_sample_floor * fr.denominator)
+        # with n ≥ K = DENSE_SAMPLE_FLOOR sketch the mod-sampled sets.
+        # A qualifying pair has size ratio ≥ t, so na ≤ K forces
+        # nb ≤ K/t (both in the full tier) and na > K puts both in the
+        # sampled tier — the [K, K/t] overlap zone sketches twice, and
+        # the tier tag keeps the band namespaces disjoint (a full-tier
+        # band must never equi-join a sampled-tier band: different set
+        # transforms).
+        band_r = _pick_band_r(fr)
+        small_lim = int((DENSE_SAMPLE_FLOOR * fr.denominator)
                         // fr.numerator)
         tier_f = _set_bands(
             cohort_sets.filter(F.size("s") <= small_lim),
-            band_r=dense_band_r,
+            band_r=band_r,
         ).withColumn("band", F.concat(F.lit("f"), "band"))
         tier_s = _set_bands(
-            cohort_sets.filter(F.size("s") >= dense_sample_floor),
-            element_mod=dense_element_mod, band_r=dense_band_r,
+            cohort_sets.filter(F.size("s") >= DENSE_SAMPLE_FLOOR),
+            element_mod=DENSE_ELEMENT_MOD, band_r=band_r,
         ).withColumn("band", F.concat(F.lit("s"), "band"))
         # cache the band keys: the guard's observed/counted twins
         # (see _guarded_bands) otherwise each recompute the sketch —
@@ -1375,11 +1360,10 @@ def _prefix_filtered_pairs(docs: DataFrame, grams: DataFrame,
         bands = tier_f.unionByName(tier_s).cache()
         if caches is not None:
             caches.append(bands)
-        banded = _banded_candidates(bands, band_cap, distinct=False)
+        banded = _banded_candidates(bands, band_cap)
         matches = [_exact_matches(sparse), banded]
     return _verified_pairs(matches, grams, fr,
-                           broadcast_sigs=broadcast_sigs,
-                           dedupe_survivors=True, observe=True)
+                           broadcast_sigs=broadcast_sigs)
 
 
 #: containment (asymmetric overlap) threshold: |A∩B| / min(|A|,|B|)
@@ -1398,64 +1382,38 @@ def containment_pairs(docs: DataFrame,
 
     Exact, with a prefix probe: a qualifying pair leaves the smaller
     side at most ``|A| − ⌈t·|A|⌉`` unshared grams, so probing the
-    full inverted index with only each doc's ``|A| − ⌈t·|A|⌉ + 1``
-    RAREST grams (df-ordered, same global order as PPJoin; the ceil
-    computed in exact integer arithmetic — :func:`_ceil_mul`) cannot
-    miss a
-    pair — candidate volume Σ_g df(g)·prefix_df(g) instead of Σ df².
-    The smaller side always probes (ties by doc_id), and survivors
-    are verified exactly on the broadcast set index.
+    full inverted index with only each doc's PPJoin prefix at ``t``
+    (:func:`_prefix_index`) cannot miss a pair — candidate volume
+    Σ_g df(g)·prefix_df(g) instead of Σ df².  The smaller side always
+    probes (ties by doc_id), and survivors are verified exactly
+    (:func:`_verified_pairs`, same snapped threshold as the probe).
 
     Returns (doc_a, doc_b, containment) with ``doc_a`` the smaller
     (or tie-lower-id) side."""
     grams = H.with_word_shingles(docs, n=2).cache()
     if caches is not None:
         caches.append(grams)
-    ex = grams.select("doc_id", F.explode("s").alias("g"),
-                      F.size("s").alias("n"))
-    freq = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "g")
-    probe = (ex.join(freq, "g")
-             .withColumn("rk", F.row_number().over(w))
-             # allowed unshared = n − ⌈t·n⌉, exactly (float (1−t)·n
-             # under-counts at multiples of 10 for t=0.9 — see
-             # _ceil_mul)
-             .filter(F.col("rk")
-                     <= F.col("n") - _ceil_mul(F.col("n"), threshold)
-                     + 1)
-             .select("doc_id", "g", "n")
-             # the probe index is the containment analogue of the
-             # PPJoin prefix and gets the same treatment (round 11):
-             # without it every run re-pays the df aggregation, the
-             # df join and the per-doc rank window (~0.7 s at sf0.1)
-             # just to rebuild ~(1−t)·Σ|doc| probe rows.  The index
-             # side `ex` stays uncached — it is a linear explode of
-             # the already-cached gram table, no shuffle.
-             .cache())
+    fr = _snap(threshold)
+    probe = _prefix_index(grams, fr)
     if caches is not None:
         caches.append(probe)
+    # the index side stays uncached — a linear explode of the cached
+    # gram table, no shuffle
+    ex = grams.select("doc_id", F.explode("s").alias("g"),
+                      F.size("s").alias("n"))
     smaller_first = ((F.col("a.n") < F.col("b.n"))
                      | ((F.col("a.n") == F.col("b.n"))
                         & (F.col("a.doc_id") < F.col("b.doc_id"))))
+    # the raw match MULTISET flows straight into the signature
+    # pre-filter, which distincts after it (a pre-filter distinct was
+    # measured at 3.5 s on the 3.1 M candidate pairs the small shared
+    # vocabulary admits at sf0.1)
     cand = (probe.alias("a")
             .join(ex.alias("b"), "g")
             .filter(smaller_first)
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b")))
-    # the raw match MULTISET flows straight into the signature
-    # pre-filter; dedupe_survivors distincts AFTER it, so the dedup
-    # shuffle only ever sees the ~true-pair-sized survivor set — the
-    # same restructure the jaccard path got in round 5 (a pre-filter
-    # distinct was measured at 3.5 s on the 3.1 M candidate pairs the
-    # small shared vocabulary admits at sf0.1).  observe=True counts
-    # the distinct survivors — the exact-verify volume
-    # last_ppjoin_metrics documents — not the raw probe rows (which
-    # run ~10.9 M at sf1 vs a true-pair-sized survivor set).
-    # Exact-rational verify from the SAME snapped threshold as the
-    # probe bound (see _verified_pairs).
-    return _verified_pairs(cand, grams, _snap(threshold),
-                           kind="containment", dedupe_survivors=True,
-                           observe=True)
+    return _verified_pairs(cand, grams, fr, kind="containment")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:

@@ -189,7 +189,7 @@ SRP_MAX_BAND_BITS = 24
 #: long as Spark's own plan-keyed cache would be)
 _SRP_N_MEMO: dict[int, int] = {}
 
-#: last auto/explicit SRP configuration, for probe artifacts
+#: last SRP configuration, for probe artifacts
 _LAST_SRP: dict = {}
 
 
@@ -233,21 +233,10 @@ def _srp_plane_values(dim: int, n_planes: int = SRP_PLANES,
             for _ in range(n_planes)]
 
 
-def _srp_planes(spark: SparkSession, dim: int, n_planes: int = SRP_PLANES,
-                seed: int = 42) -> DataFrame:
-    """(plane_id, plane) DataFrame twin of :func:`_srp_plane_values`
-    (kept for tests/diagnostics; the production signature build uses
-    the literal projection — see :func:`embedding_neardup_pairs`)."""
-    rows = [(p, v) for p, v in
-            enumerate(_srp_plane_values(dim, n_planes, seed))]
-    return spark.createDataFrame(rows, "plane_id int, plane array<double>")
-
-
 def embedding_neardup_pairs(emb: DataFrame,
                             threshold: float = NEARDUP_THRESHOLD,
                             method: str = "exact",
-                            dim: int = 64,
-                            band_bits: int | None = None) -> DataFrame:
+                            dim: int = 64) -> DataFrame:
     """Near-duplicate pairs (a_id < b_id, cosine >= threshold) over an
     (vec_id, embedding) DataFrame — the embedding-cosine member of the
     dedup family.
@@ -263,8 +252,8 @@ def embedding_neardup_pairs(emb: DataFrame,
       sharply. Recall vs exact is pinned on planted duplicates in
       tests/test_operators.py.
 
-    ``band_bits`` (lsh only): bits per band; None auto-scales with
-    the corpus (:func:`_auto_band_bits`) so mean bucket occupancy —
+    Bits per band (lsh only) auto-scale with the corpus
+    (:func:`_auto_band_bits`) so mean bucket occupancy —
     and with it the candidate volume — stays ~constant per vector as
     n grows.  The number of bands stays SRP_N_BANDS=4, so total
     planes grow as 4·log2(n).  The recall trade is explicit: a pair
@@ -285,10 +274,7 @@ def embedding_neardup_pairs(emb: DataFrame,
         cand = (a.crossJoin(b)
                 .filter(F.col("a_id") < F.col("b_id")))
     elif method == "lsh":
-        if band_bits is None:
-            band_bits, n = _auto_band_bits(emb)
-        else:
-            n = None
+        band_bits, n = _auto_band_bits(emb)
         n_planes = SRP_N_BANDS * band_bits
         _LAST_SRP.clear()
         _LAST_SRP.update({"n": n, "band_bits": band_bits,
@@ -296,10 +282,10 @@ def embedding_neardup_pairs(emb: DataFrame,
         # signature build is a SINGLE map-side projection: the plane
         # matrix is a nested literal (n_planes × dim doubles,
         # constant-folded into the plan) and every sign bit is the
-        # same index-order double fold as the crossJoin formulation
-        # computed — identical bits, but no n×planes row explosion
-        # and, decisively, no shuffle: the original groupBy(doc, band)
-        # + collect_list re-assembled signatures through an
+        # same index-order double fold as a crossJoin formulation
+        # computes — identical bits, but no n×planes row explosion
+        # and, decisively, no shuffle: a groupBy(doc, band) +
+        # collect_list assembly re-assembles signatures through an
         # (n·planes)-row exchange, which at 10⁹ vectors × 60 planes
         # is a 6·10¹⁰-row shuffle for a computation that needs none
         # (measured on the 200k-vector probe corpus: signature stage
@@ -324,7 +310,7 @@ def embedding_neardup_pairs(emb: DataFrame,
                              for b in range(SRP_N_BANDS)]))
                          .alias("band")))
         from greenplum_dwh_spark.operators.dedup import _banded_candidates
-        pairs = _banded_candidates(bands)
+        pairs = _banded_candidates(bands).distinct()
         cand = (pairs
                 .join(a, F.col("doc_a") == F.col("a_id"))
                 .join(b, F.col("doc_b") == F.col("b_id")))

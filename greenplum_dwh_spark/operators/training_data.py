@@ -430,16 +430,15 @@ def fuzzy_doc_pairs(spark: SparkSession, sf_dir: str,
     """Blocked fuzzy matching (see module comment for the adaptive
     plain/PassJoin routing).
 
-    NOTE (round-5 ADVICE): when ``big_keys`` is None this function
-    runs an EAGER Spark job at plan-construction time — the
-    block-count aggregate below — so the FIRST call per source
-    relation pays one small job even if the returned DataFrame is
-    never executed, and the chosen routing can go stale if the
-    underlying table changes between build and execution.  The
-    result is memoized on (source plan semanticHash, split, source
-    freshness signature) — the freshness term (file count / newest
-    mtime / total bytes, round-9 ADVICE fix) invalidates the memo
-    when the table is rewritten at the same path, which the plan
+    NOTE: when ``big_keys`` is None this function runs an EAGER
+    Spark job at plan-construction time — the block-count aggregate
+    below — so the FIRST call per source relation pays one small job
+    even if the returned DataFrame is never executed, and the chosen
+    routing can go stale if the underlying table changes between
+    build and execution.  The result is memoized on (source plan
+    semanticHash, split, source freshness signature) — the freshness
+    term (file count / newest mtime / total bytes) invalidates the
+    memo when the table is rewritten at the same path, which the plan
     hash alone cannot see; ``clear_fuzzy_memo()`` forces a full
     re-plan.  Callers that want to skip the planning job entirely
     can still precompute the over-split keys once and pass them in::
@@ -451,7 +450,13 @@ def fuzzy_doc_pairs(spark: SparkSession, sf_dir: str,
         fuzzy_doc_pairs(spark, sf_dir, big_keys=keys)
 
     Pass ``big_keys=[]`` to force the classic single blocked
-    self-join (bypasses the planning job entirely)."""
+    self-join (bypasses the planning job entirely).
+
+    The verify's per-doc histogram map is ``.cache()``d whether or not
+    ``caches`` is given (:func:`_levenshtein_verify`); with
+    ``caches=None`` only LRU eviction releases it.  A long-lived
+    driver should pass ``caches=[]`` and unpersist each entry once the
+    result is consumed (``test_fuzzy_caches_ownership_contract``)."""
     d = _fuzzy_docs(spark, sf_dir)
     # driver-side stats decision (AQE-style planning from a tiny
     # aggregate): the block-count table is bounded by the KEY
@@ -489,7 +494,7 @@ def fuzzy_doc_pairs(spark: SparkSession, sf_dir: str,
     # key whose docs are all short — blk ≤ 4 — routes entirely
     # through the plain path because is_big is false for every row.)
     # The two bridge joins this replaces scanned the corpus twice to
-    # emit zero rows — 20 s of the 47 s sf10 wall (round-6 measure).
+    # emit zero rows — 20 s of the 47 s sf10 wall.
     cand = (
         # small↔small and every pair touching a short-prefix doc
         _plain_block_pairs(small, small)

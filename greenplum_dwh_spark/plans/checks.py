@@ -16,10 +16,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def full_explain(df: DataFrame) -> str:
-    return df._jdf.queryExecution().toString()
-
-
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df)
 

@@ -600,8 +600,8 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
     thr = JACCARD_THRESHOLD if threshold is None else threshold
     cap = BAND_CAP if band_cap is None else band_cap
 
-    # init the rejects table with an explicit schema at factory time
-    # (round-5 ADVICE): it is otherwise materialized only by per-batch
+    # init the rejects table with an explicit schema at factory time:
+    # it is otherwise materialized only by per-batch
     # dynamic overwrites, so a stream that never rejects anything
     # would leave no schema-bearing parquet under it and
     # store.read(rejects_table) would die on schema inference.
@@ -650,7 +650,7 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
                       .distinct(), "doc_id", "semi")
                 .select("doc_id", "text"))
         sets_all = sets.unionByName(H.with_word_shingles(base))
-        rejects = (_pairs_with_jaccard(docs, cand, sets_all)
+        rejects = (_pairs_with_jaccard(cand, sets_all)
                    .filter(F.col("jac") >= thr)
                    .select(F.col("doc_a").alias("new_doc"),
                            F.col("doc_b").alias("base_doc"), "jac"))
