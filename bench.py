@@ -15,22 +15,22 @@ run-to-run from JIT/GC/worker-pool churn — measured spread on an idle
 box: pack_documents 2.3 s vs 6.5 s with identical code).  The total is
 the sum of per-query best-of-2.
 
-The banded-LSH queries additionally report their hot-band-guard drop
-metrics (``band_guard`` key: dropped_rows / dropped_buckets /
-max_band_size per query) so a recall-losing cap change is visible in
-the artifact record, not just in timings (round-3 verdict item 5).
-Since round 7 those observables (plus the PPJoin candidate counts)
-live in the ``BENCH_observables.json`` SIDECAR, not on the stdout
-line — the driver's tail capture is ~2 KB and the observables had
-pushed the headline total out of it (round-6 verdict item 2).
+Every query additionally records the near-dup observables it
+registered (``dedup.take_observables``): ``band_guard`` (hot-band
+guard dropped_rows / dropped_buckets / max_band_size, so a
+recall-losing cap change is visible in the artifact, not just in
+timings), ``ppjoin`` (candidates that reached the exact verify) and
+``srp`` (the embedding alphabet decision), one entry per query that
+ran such a plan.  They live in the ``BENCH_observables.json`` SIDECAR,
+not on the stdout line: the driver's tail capture is ~2 KB, and the
+observables had pushed the headline total out of it.
 
-Round 12, additions only (the metric — sum of per-query best-of-2 —
-is unchanged): the stdout line and sidecar stamp the EFFECTIVE Spark
-master + $SPARK_GRAFT_CPUS (``env``), so the driver's low-core
-scaling leg is verifiable from the artifact; the sidecar additionally
-records each query's run-1 wall (``first_run``) next to the best-of,
-keeping the cold cost of the index-bearing queries (whose operator-
-internal caches make the best-of a WARM number) honest.
+The stdout line and sidecar stamp the EFFECTIVE Spark master +
+$SPARK_GRAFT_CPUS (``env``), so a low-core scaling leg is verifiable
+from the artifact; the sidecar additionally records each query's
+run-1 wall (``first_run``) next to the best-of, keeping the cold cost
+of the index-bearing queries (whose operator-internal caches make the
+best-of a WARM number) honest.
 """
 
 from __future__ import annotations
@@ -40,45 +40,6 @@ import os
 import re
 import sys
 import time
-
-#: queries whose plan runs through the hot-band guard
-#: (_guarded_bands); after each one's action, the most recent
-#: Observation is harvested into the bench JSON
-GUARDED_QUERIES = ("dedup_minhash_lsh", "dedup_simhash",
-                   # round 6: the dense-slice hybrid's banded leg —
-                   # its hot-band drops are the hybrid's only recall
-                   # exposure, so they belong in the artifact
-                   "dedup_char_jaccard",
-                   # round 10: image dHash hamming bands — drops are
-                   # the only gap between banded and brute-force
-                   "dedup_image_phash")
-
-#: queries whose plan runs the PPJoin pruning stack; after each one's
-#: action the surviving-candidate count (the exact-verify volume) is
-#: harvested into the bench JSON (round-4 verdict item 4's observable).
-#: The char and containment variants joined in round 5 once their
-#: observables measured the same thing as the word variant's —
-#: containment previously counted raw probe candidates BEFORE the
-#: signature pre-filter (review fix), which would have recorded ~10.9M
-#: at sf1 under a name documented as the exact-verify volume
-PPJOIN_QUERIES = ("dedup_jaccard_prefix", "dedup_char_jaccard",
-                  "dedup_containment")
-
-
-def band_guard_metrics_for(name: str) -> dict | None:
-    """Guard metrics of the banded query that JUST ran (call right
-    after its action), or None for non-banded queries."""
-    if name not in GUARDED_QUERIES:
-        return None
-    from greenplum_dwh_spark.operators.dedup import last_band_guard_metrics
-    return last_band_guard_metrics()
-
-
-def ppjoin_metrics_for(name: str) -> dict | None:
-    if name not in PPJOIN_QUERIES:
-        return None
-    from greenplum_dwh_spark.operators.dedup import last_ppjoin_metrics
-    return last_ppjoin_metrics()
 
 
 def bench_queries() -> dict:
@@ -358,10 +319,12 @@ def measure_all(queries: dict, spark, sf_dir: str) -> dict:
     the calm retry can run it twice."""
     timings: dict[str, float] = {}
     first_run: dict[str, float] = {}
-    band_guard: dict[str, dict] = {}
-    ppjoin: dict[str, dict] = {}
+    # family -> {query: metrics}; band_guard and ppjoin always present
+    observables: dict[str, dict] = {"band_guard": {}, "ppjoin": {}}
     per_query_load: dict[str, float] = {}
+    from greenplum_dwh_spark.operators.dedup import take_observables
     for name, fn in queries.items():
+        take_observables()      # drop what earlier code registered
         # 1-min load read BEFORE each query (round-8 verdict item 2):
         # a burst that arrives mid-run is visible per-query, not just
         # in the before/after bookends
@@ -380,12 +343,8 @@ def measure_all(queries: dict, spark, sf_dir: str) -> dict:
                 # cold cost honest without changing the metric)
                 first_run[name] = round(dt, 3)
             best = min(best, dt)
-        m = band_guard_metrics_for(name)
-        if m is not None:
-            band_guard[name] = m
-        p = ppjoin_metrics_for(name)
-        if p is not None:
-            ppjoin[name] = p
+        for family, m in take_observables().items():
+            observables.setdefault(family, {})[name] = m
         if best > 5.0:
             # a GC pause / host hiccup spanning both runs shows up as a
             # correlated outlier (observed: 12.4 s best-of-2 vs 3.3 s
@@ -407,8 +366,8 @@ def measure_all(queries: dict, spark, sf_dir: str) -> dict:
         # without it.  Storage pressure is bounded by the LRU
         # evictor; an evicted block just recomputes.
     return {"timings": timings, "first_run": first_run,
-            "band_guard": band_guard,
-            "ppjoin": ppjoin, "per_query_load": per_query_load,
+            "observables": observables,
+            "per_query_load": per_query_load,
             "after": host_load()}
 
 
@@ -466,8 +425,6 @@ def main() -> None:
             result, vs_pin, cm = retry, vs_pin2, cm2
     calm_retry = {"attempts_controls_median": attempts, "kept": kept}
     timings = result["timings"]
-    band_guard = result["band_guard"]
-    ppjoin = result["ppjoin"]
     per_query_load = result["per_query_load"]
 
     total = round(sum(timings.values()), 3)
@@ -513,7 +470,7 @@ def main() -> None:
                    "first_run": result["first_run"],
                    "per_query_load": per_query_load,
                    "vs_pin": vs_pin, "calm_retry": calm_retry,
-                   "band_guard": band_guard, "ppjoin": ppjoin},
+                   **result["observables"]},
                   f, indent=1)
         f.write("\n")
     if pin:

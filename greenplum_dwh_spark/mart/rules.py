@@ -31,26 +31,35 @@ from pyspark.sql import functions as F
 from greenplum_dwh_spark import schemas
 
 
-def rules_expired(stg: DataFrame, run_ts: dt.datetime) -> DataFrame:
-    """Rules 1–2 (Data_mart.sql:260-272)."""
-    last_day = (stg.agg(F.date_trunc("DAY", F.max("trans_date"))
-                        .alias("_d")))
-    return (stg.join(F.broadcast(last_day),
-                     F.col("trans_date") >= F.col("_d"), "inner")
-            .filter((F.col("trans_date")
-                     > F.col("passport_valid_to").cast("timestamp"))
-                    | (F.col("trans_date")
-                       > F.col("valid_to").cast("timestamp")))
+def _expired_rows(stg: DataFrame, run_ts: dt.datetime) -> DataFrame:
+    """The report rows of rules 1–2 over joined transactions: the
+    expired passport/account filter and the CASE label (passport
+    first).  Shared by the batch mart and the streaming projection,
+    each of which brings its own join."""
+    passport_expired = (F.col("trans_date")
+                        > F.col("passport_valid_to").cast("timestamp"))
+    return (stg.filter(passport_expired
+                       | (F.col("trans_date")
+                          > F.col("valid_to").cast("timestamp")))
             .select(
                 F.col("trans_date").alias("fraud_dt"),
                 F.col("passport_num").alias("passport"),
                 "fio", "phone",
-                F.when(F.col("trans_date")
-                       > F.col("passport_valid_to").cast("timestamp"),
+                F.when(passport_expired,
                        F.lit(schemas.FRAUD_EXPIRED_PASSPORT))
                  .otherwise(F.lit(schemas.FRAUD_EXPIRED_ACCOUNT))
                  .alias("fraud_type"),
                 F.lit(run_ts).alias("report_dt")))
+
+
+def rules_expired(stg: DataFrame, run_ts: dt.datetime) -> DataFrame:
+    """Rules 1–2 (Data_mart.sql:260-272) on the last day."""
+    last_day = (stg.agg(F.date_trunc("DAY", F.max("trans_date"))
+                        .alias("_d")))
+    return _expired_rows(
+        stg.join(F.broadcast(last_day),
+                 F.col("trans_date") >= F.col("_d"), "inner"),
+        run_ts)
 
 
 def rule_city_hop(stg: DataFrame, run_ts: dt.datetime) -> DataFrame:

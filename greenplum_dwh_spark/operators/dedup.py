@@ -41,15 +41,23 @@ suffix-array ``dedup_repeated_spans``.
 
 Every candidate path is filter → verify, with one implementation per
 step.  Banded candidates come from the hot-band guard
-(``_guarded_bands``, metrics via ``last_band_guard_metrics``) and one
-of two expansions, each called directly by its family: the group
-expansion ``_banded_candidates`` (wide alphabets: minhash, embedding
-SRP in ``similarity``, the char dense leg) or the bucket self-join
-``_guarded_band_join`` (the hamming kernel's narrow alphabets).  The
-PPJoin family (word and char jaccard, containment) shares one prefix
-index (``_prefix_index``) and one two-stage verify
-(``_verified_pairs``: signature pre-filter, then exact set measure,
-counted into ``last_ppjoin_metrics``).
+(``_guarded_bands``) and one of two expansions, each called directly
+by its family: the group expansion ``_banded_candidates`` (wide
+alphabets: minhash, embedding SRP in ``similarity``, the char dense
+leg) or the bucket self-join ``_guarded_band_join`` (the hamming
+kernel's narrow alphabets).  The PPJoin family (word and char
+jaccard, containment) shares one prefix index (``_prefix_index``) and
+one two-stage verify (``_verified_pairs``: signature pre-filter, then
+exact set measure).
+
+Their observables live in one registry (``_OBSERVABLES``) holding the
+newest entry of each family: ``band_guard`` (guard drops, plus the hot
+split's stage-1 saturation), ``ppjoin`` (candidates that reached the
+exact verify) and ``srp`` (the embedding alphabet decision).  One
+helper (``_observed``) attaches each Observation with its fallback
+plan; one reader serves ``last_band_guard_metrics``,
+``last_ppjoin_metrics``, ``similarity.last_srp_config`` and
+``take_observables``, the per-query record ``bench.py`` harvests.
 
 All hot paths are pure Spark SQL expressions (whole-stage codegen);
 no Python UDFs.
@@ -114,65 +122,97 @@ def _pairs_with_jaccard(pairs: DataFrame,
                     H.jaccard(F.col("sa.s"), F.col("sb.s")).alias("jac")))
 
 
-#: guard observations from the most recent banded-LSH actions, newest
-#: last: ``(Observation, band_cap)`` pairs.  Read via
-#: :func:`last_band_guard_metrics` *after* an action has run on the
-#: operator's output — the recall trade the guard makes is then
-#: observable instead of silent (dropped rows/buckets, max bucket).
-_GUARD_OBSERVATIONS: list = []
-_GUARD_KEEP = 8
+#: the newest registration of each near-dup metric family, keyed by
+#: family: ``band_guard`` (:func:`_guarded_bands`, plus the hot split's
+#: stage 1), ``ppjoin`` (:func:`_verified_pairs`) and ``srp`` (the
+#: embedding alphabet decision in ``similarity``).  An entry is a tuple
+#: of parts, each an ``(Observation, fallback)`` pair from
+#: :func:`_observed` or a dict of values known when the plan was
+#: built.  Process-wide, newest wins: foreachBatch handlers register on
+#: the py4j callback thread while their callers read on the main
+#: thread.  Read by the ``last_*`` readers and :func:`take_observables`.
+_OBSERVABLES: dict[str, tuple] = {}
+
+
+def _observed(df: DataFrame, aggs: list, family: str | None = None,
+              rides: tuple = ()):
+    """Attach an Observation of ``aggs`` to ``df`` → ``(observed df,
+    part)``, where ``part`` pairs the Observation with ``df.agg(*aggs)``,
+    the metric-free fallback a reader recomputes when AQE pruned the
+    observed node away (zero rows reached it).  With ``family``, the
+    part and the ``rides`` parts become that family's newest
+    :data:`_OBSERVABLES` entry.  The observed node must appear exactly
+    ONCE in the executed plan."""
+    from pyspark.sql import Observation
+    obs = Observation()
+    observed = df.observe(obs, *aggs)
+    part = (obs, df.agg(*aggs))
+    if family is not None:
+        _OBSERVABLES[family] = (part, *rides)
+    return observed, part
+
+
+def _as_ints(stats: dict) -> dict:
+    """Observed stats as ints.  A NULL aggregate reads 0 (an EMPTY
+    observed leg, e.g. the split's stage 2 when no composite bucket
+    exists, observes max = NULL), and ``dropped_buckets_frac`` — each
+    member of a dropped bucket adds 1/``_bn`` — rounds to
+    ``dropped_buckets``."""
+    m = {k: int(v or 0) for k, v in stats.items()
+         if k != "dropped_buckets_frac"}
+    if "dropped_buckets_frac" in stats:
+        m["dropped_buckets"] = int(round(stats["dropped_buckets_frac"]
+                                         or 0.0))
+    return m
+
+
+def _read(family: str) -> dict | None:
+    """Metrics of ``family``'s newest entry, or None if none is
+    registered; call *after* the action that ran the plan.  An
+    Observation whose node AQE's empty-relation propagation pruned
+    never fires, so its part is recomputed from the retained fallback
+    plan (one extra small job, diagnostics path only)."""
+    entry = _OBSERVABLES.get(family)
+    if entry is None:
+        return None
+    m: dict = {}
+    for part in entry:
+        if isinstance(part, dict):
+            m.update(part)
+            continue
+        obs, fallback = part
+        try:
+            m.update(obs.get)
+        except Exception:
+            m.update(fallback.first().asDict())
+    return _as_ints(m)
+
+
+def take_observables() -> dict:
+    """``{family: metrics}`` of every registered family, then empty the
+    registry — the per-query record: call it before a query runs and
+    again after its action to get exactly what that query
+    registered."""
+    out = {family: _read(family) for family in list(_OBSERVABLES)}
+    _OBSERVABLES.clear()
+    return out
 
 
 def last_band_guard_metrics() -> dict | None:
     """Metrics of the most recent hot-band-guard evaluation:
-    ``{"dropped_rows", "dropped_buckets", "max_band_size"}`` —
+    ``{"dropped_rows", "max_band_size", "dropped_buckets"}`` —
     populated by the Spark action that executed the guarded plan
     (``Observation``-based: zero extra jobs on the hot path).
     ``None`` if no banded operator has run yet; call *after* the
     action on the operator's output has finished.
 
-    When AQE's empty-relation propagation prunes the observed subtree
-    (zero candidate pairs survive the guard + join), the observation
-    comes back empty — the stats are then recomputed directly from the
-    retained counted plan (one extra small job, diagnostics path
-    only)."""
-    if not _GUARD_OBSERVATIONS:
-        return None
-    obs, cap, fallback = _GUARD_OBSERVATIONS[-1]
-    try:
-        m = dict(obs.get)
-    except Exception:
-        # AQE pruned the observed subtree — recompute from the
-        # registration's metric-free fallback aggregate (every site
-        # registers through _guarded_bands, over per-membership rows)
-        m = fallback.first().asDict()
-    # each row of a dropped bucket contributes 1/_bn → buckets count
-    m["dropped_buckets"] = int(round(m.pop("dropped_buckets_frac") or 0.0))
-    m["dropped_rows"] = int(m["dropped_rows"] or 0)
-    # an EMPTY guarded leg (e.g. simhash's hot-split stage 2 when no
-    # band is hot) observes max = NULL — report 0, not None
-    m["max_band_size"] = int(m["max_band_size"] or 0)
-    # if the latest guard entry was registered by the hot-band SPLIT,
-    # fold in its stage-1 saturation face: dropped_* above are then
-    # the COMPOSITE residual, and rerouted_rows/max_raw_band_size
-    # carry the raw single-band saturation the split absorbed (so a
-    # round-over-round artifact diff sees the alphabet saturating,
-    # not a guard that mysteriously stopped firing)
-    entry = next((e for e in reversed(_SPLIT_STAGE1)
-                  if e[0] is obs), None)
-    if entry is not None:
-        _, stage1, stage1_fallback = entry
-        try:
-            s = dict(stage1.get)
-        except Exception:
-            # mirror the stage-2 fallback above: recompute from the
-            # retained hot plan instead of reporting 0 — an artifact
-            # that reads "no saturation" exactly when the metric was
-            # lost is the misreading this surface exists to prevent
-            s = stage1_fallback.first().asDict()
-        m["rerouted_rows"] = int(s.get("rerouted_rows") or 0)
-        m["max_raw_band_size"] = int(s.get("max_raw_band_size") or 0)
-    return m
+    When the hot-band SPLIT registered the guard, dropped_* are the
+    stage-2 COMPOSITE residual, and ``rerouted_rows`` /
+    ``max_raw_band_size`` carry the raw single-band saturation its
+    stage 1 absorbed (so a round-over-round artifact diff sees the
+    alphabet saturating, not a guard that mysteriously stopped
+    firing)."""
+    return _read("band_guard")
 
 
 def _guard_aggs(band_cap: int) -> list:
@@ -187,7 +227,7 @@ def _guard_aggs(band_cap: int) -> list:
         F.max("_bn").alias("max_band_size")]
 
 
-def _guarded_bands(bands: DataFrame, band_cap: int):
+def _guarded_bands(bands: DataFrame, band_cap: int, rides: tuple = ()):
     """Shared hot-band guard: windowed per-band count + Observation
     metrics.  Returns ``(observed, counted, keep)`` where ``observed``
     carries the CollectMetrics node (must appear exactly ONCE in the
@@ -195,15 +235,12 @@ def _guarded_bands(bands: DataFrame, band_cap: int):
     is the metric-free twin for the other side, and ``keep`` is the
     under-cap predicate.  Both the self-join and the asymmetric
     incremental probe build on this, so band-cap drops are observable
-    (``last_band_guard_metrics``) on every banded path."""
-    from pyspark.sql import Observation
+    (``last_band_guard_metrics``) on every banded path; ``rides`` are
+    extra parts of the same entry (the split's stage 1)."""
     w = Window.partitionBy("band")
-    obs = Observation()
     counted = bands.withColumn("_bn", F.count(F.lit(1)).over(w))
-    guard_aggs = _guard_aggs(band_cap)
-    observed = counted.observe(obs, *guard_aggs)
-    _GUARD_OBSERVATIONS.append((obs, band_cap, counted.agg(*guard_aggs)))
-    del _GUARD_OBSERVATIONS[:-_GUARD_KEEP]
+    observed, _ = _observed(counted, _guard_aggs(band_cap), "band_guard",
+                            rides)
     return observed, counted, F.col("_bn") <= band_cap
 
 
@@ -288,7 +325,8 @@ def _banded_candidates(bands: DataFrame,
             .filter(F.col("doc_a") < F.col("doc_b")))
 
 
-def _guarded_band_join(bands: DataFrame, band_cap: int) -> DataFrame:
+def _guarded_band_join(bands: DataFrame, band_cap: int,
+                       rides: tuple = ()) -> DataFrame:
     """(doc_id, band) → candidate MULTISET (doc_a < doc_b, one row per
     shared under-cap bucket) by streaming bucket self-join under the
     hot-band guard — the expansion for small fixed band alphabets
@@ -300,8 +338,9 @@ def _guarded_band_join(bands: DataFrame, band_cap: int) -> DataFrame:
     full verify chains: simhash 0.90 s join vs 1.25 s group; minhash
     0.83 s group vs 1.29 s join.  Only the probe side carries the
     guard's Observation: a CollectMetrics node duplicated by the
-    self-join breaks metric retrieval."""
-    observed, counted, keep = _guarded_bands(bands, band_cap)
+    self-join breaks metric retrieval.  ``rides`` as in
+    :func:`_guarded_bands`."""
+    observed, counted, keep = _guarded_bands(bands, band_cap, rides)
     return _band_self_join(observed.filter(keep), counted.filter(keep))
 
 
@@ -481,17 +520,6 @@ def _hamming_verify(cand: DataFrame, cols, max_dist: int,
             .filter(F.col("hamming") <= max_dist))
 
 
-#: (stage-2 guard Observation, stage-1 Observation, fallback) triples
-#: for the hot-band split's saturation metrics — paired by the
-#: stage-2 obs OBJECT IDENTITY (an index into _GUARD_OBSERVATIONS
-#: would go stale the moment the registry's truncation clamps its
-#: length), so last_band_guard_metrics consults a stage-1 observation
-#: only for the exact split plan whose stage-2 entry it is reporting.
-#: The fallback, the same aggregates over the metric-free hot plan,
-#: recomputes them when the stage-1 Observation never fired (e.g. AQE
-#: pruned the observed node).
-_SPLIT_STAGE1: list = []
-
 #: (fps-plan semanticHash, band_cap) → bool(hot), so repeated
 #: hamming-band calls on the same fingerprint relation decide the
 #: hot-split plan shape without re-running the decision jobs (see the
@@ -508,32 +536,24 @@ def _split_routing(bands: DataFrame, band_cap: int,
     probe's rescued-pair leg, so the probe can never drift into
     grading a join the operator no longer runs.
 
-    Returns ``(cool, comp, obs, fallback)``: under-cap (doc_id, band)
+    Returns ``(cool, comp, stage1)``: under-cap (doc_id, band)
     memberships; over-cap memberships re-keyed by the composite (hot
     band value, each of the doc's other band values) under the SAME
-    ``band`` column name; the stage-1 Observation (or None); and the
-    rerouted_rows/max_raw_band_size aggregate over the metric-free
-    hot plan (the metrics fallback when the Observation never
-    fired).  The per-band size table is alphabet-bounded
-    (≤ n_bands · 2^bits rows), so it broadcasts — the routing costs
-    no corpus shuffle on top of the join's own.  ``observe_hot``
-    attaches the stage-1 saturation Observation
-    (rerouted_rows / max_raw_band_size) to the hot leg."""
-    from pyspark.sql import Observation
+    ``band`` column name; and, with ``observe_hot``, the
+    :func:`_observed` part of the stage-1 saturation metrics
+    (rerouted_rows / max_raw_band_size) on the hot leg, else None.
+    The per-band size table is alphabet-bounded (≤ n_bands · 2^bits
+    rows), so it broadcasts — the routing costs no corpus shuffle on
+    top of the join's own."""
     sizes = bands.groupBy("band").agg(F.count(F.lit(1)).alias("_bn"))
     bz = bands.join(F.broadcast(sizes), "band")
     cool = bz.filter(F.col("_bn") <= band_cap).select("doc_id", "band")
     hot = bz.filter(F.col("_bn") > band_cap)
-    stage1_aggs = [F.count(F.lit(1)).alias("rerouted_rows"),
-                   F.max("_bn").alias("max_raw_band_size")]
-    # the fallback aggregates the observation-free hot plan —
-    # recomputing through the SAME Observation object is exactly the
-    # path that already failed when the fallback fires
-    fallback = hot.agg(*stage1_aggs)
-    obs = None
+    stage1 = None
     if observe_hot:
-        obs = Observation()
-        hot = hot.observe(obs, *stage1_aggs)
+        hot, stage1 = _observed(
+            hot, [F.count(F.lit(1)).alias("rerouted_rows"),
+                  F.max("_bn").alias("max_raw_band_size")])
     other = bands.select("doc_id", F.col("band").alias("band2"))
     # band strings carry their band index ("<i>:<value>"), so
     # band2 != band excludes exactly the same-index row of the doc
@@ -541,7 +561,7 @@ def _split_routing(bands: DataFrame, band_cap: int,
             .filter(F.col("band2") != F.col("band"))
             .select("doc_id",
                     F.concat_ws("|", "band", "band2").alias("band")))
-    return cool, comp, obs, fallback
+    return cool, comp, stage1
 
 
 def _split_banded_candidates(bands: DataFrame,
@@ -568,14 +588,14 @@ def _split_banded_candidates(bands: DataFrame,
     :func:`last_band_guard_metrics` so artifact readers see the
     saturation signal AND the residual exposure, not one renamed as
     the other."""
-    cool, comp, obs, fallback = _split_routing(bands, band_cap,
-                                               observe_hot=True)
+    cool, comp, stage1 = _split_routing(bands, band_cap,
+                                        observe_hot=True)
     cool_cand = _band_self_join(cool, cool)
     # composite re-keys of an already-saturated alphabet: buckets run
-    # right up to the cap, so the streaming join expansion applies
-    hot_cand = _guarded_band_join(comp, band_cap)
-    _SPLIT_STAGE1.append((_GUARD_OBSERVATIONS[-1][0], obs, fallback))
-    del _SPLIT_STAGE1[:-_GUARD_KEEP]
+    # right up to the cap, so the streaming join expansion applies;
+    # stage 1 rides in the stage-2 guard's entry, so a later guard
+    # replaces both
+    hot_cand = _guarded_band_join(comp, band_cap, rides=(stage1,))
     return cool_cand.unionByName(hot_cand)
 
 
@@ -763,8 +783,7 @@ def _binom_count_ub(x: int, p: float, alpha: float = 0.05) -> int:
 
 
 def _hamming_guard_probe(fps: DataFrame, layout, max_dist: int,
-                         band_cap: int, sample_mod: int = 4,
-                         count_emitted: bool = True) -> dict:
+                         band_cap: int, sample_mod: int = 4) -> dict:
     """Grade the hamming-band guard's recall loss instead of only
     counting it (round-4 verdict item 2: at sf1 the simhash cap drops
     58k rows and nobody knew how many true pairs that cost) — the one
@@ -796,24 +815,23 @@ def _hamming_guard_probe(fps: DataFrame, layout, max_dist: int,
 
     Returns ``{raw_overcap_rows, overcap_buckets, max_band_size,
     sampled_lost_pairs, est_pairs_lost, est_pairs_lost_ub,
-    sample_mod[, emitted_pairs, est_recall, est_recall_lb]}``;
+    sample_mod, emitted_pairs, est_recall, est_recall_lb}``;
     ``est_pairs_lost_ub`` is the exact-binomial 95% upper bound on
     the loss (:func:`_binom_count_ub` — a sampled count of zero is
-    not an upper bound of zero), and ``count_emitted=True``
-    additionally runs the guarded operator to turn point estimate and
-    bound into ``est_recall`` / ``est_recall_lb`` =
-    ``emitted / (emitted + loss)``."""
+    not an upper bound of zero), and the guarded operator's emitted
+    pairs turn point estimate and bound into ``est_recall`` /
+    ``est_recall_lb`` = ``emitted / (emitted + loss)``."""
     split_ok = _hamming_rules(layout, max_dist)
     fps = fps.cache()
     bands = _hamming_bands(fps, *layout)
     w = Window.partitionBy("band")
     counted = bands.withColumn("_bn", F.count(F.lit(1)).over(w)).cache()
     hot = counted.filter(F.col("_bn") > band_cap)
-    stats = counted.agg(*_guard_aggs(band_cap)).first()
-    out = {"raw_overcap_rows": int(stats["dropped_rows"] or 0),
-           "overcap_buckets": int(round(
-               stats["dropped_buckets_frac"] or 0.0)),
-           "max_band_size": int(stats["max_band_size"] or 0),
+    stats = _as_ints(counted.agg(*_guard_aggs(band_cap)).first()
+                     .asDict())
+    out = {"raw_overcap_rows": stats["dropped_rows"],
+           "overcap_buckets": stats["dropped_buckets"],
+           "max_band_size": stats["max_band_size"],
            "sample_mod": sample_mod}
     sampled = hot.filter(
         F.pmod(F.xxhash64("doc_id"), F.lit(sample_mod)) == 0)
@@ -860,19 +878,17 @@ def _hamming_guard_probe(fps: DataFrame, layout, max_dist: int,
         0 if out["raw_overcap_rows"] == 0
         else _binom_count_ub(int(sampled_lost),
                              1.0 / (sample_mod * sample_mod)))
-    if count_emitted:
-        # reuse this probe's cached fingerprints — a fresh operator
-        # call on docs would rebuild AND pin a second corpus-sized
-        # fingerprint cache
-        emitted = _hamming_pairs(fps, layout, max_dist,
-                                 band_cap).count()
-        out["emitted_pairs"] = int(emitted)
-        denom = emitted + out["est_pairs_lost"]
-        out["est_recall"] = (1.0 if denom == 0
-                             else round(emitted / denom, 6))
-        denom_ub = emitted + out["est_pairs_lost_ub"]
-        out["est_recall_lb"] = (1.0 if denom_ub == 0
-                                else round(emitted / denom_ub, 6))
+    # reuse this probe's cached fingerprints — a fresh operator call
+    # on docs would rebuild AND pin a second corpus-sized fingerprint
+    # cache
+    emitted = _hamming_pairs(fps, layout, max_dist, band_cap).count()
+    out["emitted_pairs"] = int(emitted)
+    denom = emitted + out["est_pairs_lost"]
+    out["est_recall"] = (1.0 if denom == 0
+                         else round(emitted / denom, 6))
+    denom_ub = emitted + out["est_pairs_lost_ub"]
+    out["est_recall_lb"] = (1.0 if denom_ub == 0
+                            else round(emitted / denom_ub, 6))
     counted.unpersist()
     fps.unpersist()
     return out
@@ -881,14 +897,13 @@ def _hamming_guard_probe(fps: DataFrame, layout, max_dist: int,
 def simhash_band_guard_probe(docs: DataFrame,
                              max_dist: int = SIMHASH_MAX_DIST,
                              band_cap: int = BAND_CAP,
-                             sample_mod: int = 4,
-                             count_emitted: bool = True) -> dict:
+                             sample_mod: int = 4) -> dict:
     """Recall probe of :func:`simhash_pairs`' hot-band guard: the
     kernel's :func:`_hamming_guard_probe` over the corpus' simhash
     fingerprints."""
     return _hamming_guard_probe(simhash_fingerprints(docs),
                                 _SIMHASH_LAYOUT, max_dist, band_cap,
-                                sample_mod, count_emitted)
+                                sample_mod)
 
 
 def jaccard_prefix_pairs(docs: DataFrame,
@@ -1011,38 +1026,13 @@ def _ceil_mul(n, threshold):
     return ((num - num % q) / q).cast("long")
 
 
-#: candidate-count observations from the most recent PPJoin-family
-#: runs, newest last — same pattern as the band guard: the pruning
-#: layers' effectiveness is an observable of the run, not a guess
-_PPJOIN_OBSERVATIONS: list = []
-
-
 def last_ppjoin_metrics() -> dict | None:
     """``{"n_candidates": ...}`` of the most recent PPJoin-family plan
     (jaccard/char/containment) — the number of pairs that survived
     every pruning layer and paid the exact verify.  Collected for free
     by whatever action executed the plan; call *after* the action.
     ``None`` until a PPJoin operator has run."""
-    if not _PPJOIN_OBSERVATIONS:
-        return None
-    obs, counted = _PPJOIN_OBSERVATIONS[-1]
-    try:
-        m = dict(obs.get)
-    except Exception:
-        # AQE pruned the observed subtree (zero candidates) —
-        # recompute from the retained twin (diagnostics path only)
-        m = {"n_candidates": counted.count()}
-    m["n_candidates"] = int(m.get("n_candidates") or 0)
-    return m
-
-
-def _observed_candidates(cand: DataFrame) -> DataFrame:
-    from pyspark.sql import Observation
-    obs = Observation()
-    out = cand.observe(obs, F.count(F.lit(1)).alias("n_candidates"))
-    _PPJOIN_OBSERVATIONS.append((obs, cand))
-    del _PPJOIN_OBSERVATIONS[:-_GUARD_KEEP]
-    return out
+    return _read("ppjoin")
 
 
 #: gram-signature width for the verify pre-filter: 8 longs = 512 bits
@@ -1168,7 +1158,9 @@ def _verified_pairs(pairs: DataFrame | list[DataFrame],
     survivors = filtered[0]
     for extra in filtered[1:]:
         survivors = survivors.unionByName(extra)
-    survivors = _observed_candidates(survivors.distinct())
+    survivors, _ = _observed(survivors.distinct(),
+                             [F.count(F.lit(1)).alias("n_candidates")],
+                             "ppjoin")
     a, b = sets_df.alias("sa"), sets_df.alias("sb")
     sa, sb = F.col("sa.s"), F.col("sb.s")
     inter = F.size(F.array_intersect(sa, sb)).cast("long")

@@ -148,8 +148,7 @@ def image_phash_pairs(docs: DataFrame,
 def image_phash_guard_probe(docs: DataFrame,
                             max_dist: int = PHASH_MAX_DIST,
                             band_cap: int | None = None,
-                            sample_mod: int = 4,
-                            count_emitted: bool = True) -> dict:
+                            sample_mod: int = 4) -> dict:
     """Grade the phash split plan's residual recall loss instead of
     only counting dropped memberships: the hamming-band kernel's
     recall probe (:func:`dedup._hamming_guard_probe`, shared with
@@ -159,8 +158,7 @@ def image_phash_guard_probe(docs: DataFrame,
     return D._hamming_guard_probe(
         image_dhashes(pack_image_payloads(docs, width=16))
         .filter(F.col("h1").isNotNull()), _PHASH_LAYOUT, max_dist,
-        D.BAND_CAP if band_cap is None else band_cap, sample_mod,
-        count_emitted)
+        D.BAND_CAP if band_cap is None else band_cap, sample_mod)
 
 
 def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:

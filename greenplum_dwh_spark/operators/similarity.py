@@ -189,16 +189,15 @@ SRP_MAX_BAND_BITS = 24
 #: long as Spark's own plan-keyed cache would be)
 _SRP_N_MEMO: dict[int, int] = {}
 
-#: last SRP configuration, for probe artifacts
-_LAST_SRP: dict = {}
-
 
 def last_srp_config() -> dict:
     """{n, band_bits, n_planes} of the most recent LSH plan built by
-    :func:`embedding_neardup_pairs` — the decade probe records it
-    next to the band-guard occupancy so the alphabet-scaling decision
-    is visible in the artifact."""
-    return dict(_LAST_SRP)
+    :func:`embedding_neardup_pairs` (the ``srp`` entry of the
+    ``dedup`` observables registry; {} if none) — the decade probe
+    records it next to the band-guard occupancy so the
+    alphabet-scaling decision is visible in the artifact."""
+    from greenplum_dwh_spark.operators.dedup import _read
+    return _read("srp") or {}
 
 
 def _auto_band_bits(emb: DataFrame) -> tuple[int, int]:
@@ -276,9 +275,9 @@ def embedding_neardup_pairs(emb: DataFrame,
     elif method == "lsh":
         band_bits, n = _auto_band_bits(emb)
         n_planes = SRP_N_BANDS * band_bits
-        _LAST_SRP.clear()
-        _LAST_SRP.update({"n": n, "band_bits": band_bits,
-                          "n_planes": n_planes})
+        from greenplum_dwh_spark.operators import dedup as D
+        D._OBSERVABLES["srp"] = ({"n": n, "band_bits": band_bits,
+                                  "n_planes": n_planes},)
         # signature build is a SINGLE map-side projection: the plane
         # matrix is a nested literal (n_planes × dim doubles,
         # constant-folded into the plan) and every sign bit is the
@@ -309,8 +308,7 @@ def embedding_neardup_pairs(emb: DataFrame,
                                              band_bits))
                              for b in range(SRP_N_BANDS)]))
                          .alias("band")))
-        from greenplum_dwh_spark.operators.dedup import _banded_candidates
-        pairs = _banded_candidates(bands).distinct()
+        pairs = D._banded_candidates(bands).distinct()
         cand = (pairs
                 .join(a, F.col("doc_a") == F.col("a_id"))
                 .join(b, F.col("doc_b") == F.col("b_id")))

@@ -85,19 +85,7 @@ def stream_expired_rules(stream: DataFrame, dims: dict[str, DataFrame],
     stg = (tx.join(cards, "card_num")
            .join(accounts, "account_num")
            .join(clients, accounts["client"] == clients["client_id"]))
-    return (stg.filter(
-                (F.col("trans_date")
-                 > F.col("passport_valid_to").cast("timestamp"))
-                | (F.col("trans_date") > F.col("valid_to").cast("timestamp")))
-            .select(F.col("trans_date").alias("fraud_dt"),
-                    F.col("passport_num").alias("passport"),
-                    "fio", "phone",
-                    F.when(F.col("trans_date")
-                           > F.col("passport_valid_to").cast("timestamp"),
-                           F.lit(schemas.FRAUD_EXPIRED_PASSPORT))
-                    .otherwise(F.lit(schemas.FRAUD_EXPIRED_ACCOUNT))
-                    .alias("fraud_type"),
-                    F.lit(run_ts).alias("report_dt")))
+    return rules._expired_rows(stg, run_ts)
 
 
 def city_hop_foreach_batch(wh, run_ts: dt.datetime):

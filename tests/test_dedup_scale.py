@@ -543,24 +543,6 @@ def test_incremental_guard_metrics_observed(spark):
     assert m["dropped_rows"] > 0 and m["dropped_buckets"] > 0
 
 
-def test_bench_band_guard_plumbing(spark, sf_dir):
-    """bench.py harvests guard metrics per banded headline query
-    (round-3 verdict item 5: the BENCH artifact must carry the
-    recall-trade observables).  Simulate the bench loop: run a guarded
-    query through the noop sink, then harvest via the same helper the
-    bench uses — the metrics dict must carry all three keys, and a
-    non-banded query must harvest nothing."""
-    import bench
-    df = dedup.dedup_minhash_lsh(spark, sf_dir)
-    df.write.mode("overwrite").format("noop").save()
-    m = bench.band_guard_metrics_for("dedup_minhash_lsh")
-    assert m is not None
-    assert set(m) == {"dropped_rows", "dropped_buckets",
-                      "max_band_size"}, m
-    assert all(isinstance(v, int) for v in m.values()), m
-    assert bench.band_guard_metrics_for("q1_pricing_summary") is None
-
-
 def test_containment_exact_threshold_boundary_pair(spark):
     """Round-3 ADVICE regression: a pair at containment EXACTLY 0.9
     whose single unshared gram is the smaller doc's rarest must be
@@ -601,21 +583,6 @@ def test_jaccard_size_ratio_boundary_pair(spark):
            .collect()}
     assert (0, 1) in got, got
     assert abs(got[(0, 1)] - 0.8) < 1e-12
-
-
-def test_bench_ppjoin_candidate_observable(spark, sf_dir):
-    """Round-4 verdict item 4: the PPJoin candidate count (the exact-
-    verify volume every pruning layer is trying to shrink) must be an
-    observable of the run, harvested by bench.py the same way the
-    band-guard metrics are."""
-    import bench
-    df = dedup.dedup_jaccard_prefix(spark, sf_dir)
-    df.write.mode("overwrite").format("noop").save()
-    m = bench.ppjoin_metrics_for("dedup_jaccard_prefix")
-    assert m is not None and m["n_candidates"] > 0, m
-    # candidates are an upper bound on emitted pairs (verify only drops)
-    assert m["n_candidates"] >= df.count()
-    assert bench.ppjoin_metrics_for("q1_pricing_summary") is None
 
 
 def test_two_stage_verify_keeps_exact_threshold_pair(spark):
@@ -1505,3 +1472,81 @@ def test_vs_pin_block_sf_mismatch_none(tmp_path):
         json.dump({"value": 4.0, "sf": 0.1, "queries": {"q": 1.0}}, f)
     assert bench.vs_pin_block({"q": 2.0}, p, sf=0.001) is None
     assert bench.vs_pin_block({"q": 2.0}, p, sf=0.1) is not None
+
+
+def _bench_harvest(spark, sf_dir, names):
+    """One bench measurement pass over ``names`` (plus a non-near-dup
+    query) → the observables it recorded, family → {query: metrics}."""
+    import bench
+    from greenplum_dwh_spark.operators import relational
+    qs = {n: getattr(dedup, n) for n in names}
+    qs["q1_pricing_summary"] = relational.q1_pricing_summary
+    return bench.measure_all(qs, spark, sf_dir)["observables"]
+
+
+def test_bench_harvests_band_guard_per_query(spark, sf_dir):
+    """bench.py records every family a query registered, with no list
+    of query names: a banded query's guard metrics carry all three
+    keys as ints, and a non-banded query records nothing."""
+    obs = _bench_harvest(spark, sf_dir, ["dedup_minhash_lsh"])
+    assert set(obs) == {"band_guard", "ppjoin"}, obs
+    m = obs["band_guard"]["dedup_minhash_lsh"]
+    assert set(m) == {"dropped_rows", "dropped_buckets",
+                      "max_band_size"}, m
+    assert all(isinstance(v, int) for v in m.values()), m
+    assert obs["ppjoin"] == {}
+    assert all("q1_pricing_summary" not in f for f in obs.values())
+
+
+def test_bench_harvests_ppjoin_per_query(spark, sf_dir):
+    """The PPJoin candidate count (the exact-verify volume every
+    pruning layer shrinks) is recorded for the query that ran it, and
+    bounds that query's output from above."""
+    obs = _bench_harvest(spark, sf_dir, ["dedup_jaccard_prefix"])
+    m = obs["ppjoin"]["dedup_jaccard_prefix"]
+    assert m["n_candidates"] > 0, m
+    assert m["n_candidates"] >= dedup.dedup_jaccard_prefix(
+        spark, sf_dir).count()
+    assert obs["band_guard"] == {}
+    assert all("q1_pricing_summary" not in f for f in obs.values())
+
+
+def test_observables_absent_after_non_banded_operator(spark):
+    """An emptied registry stays empty through an operator that
+    registers nothing: neither reader invents a stale entry."""
+    dedup.take_observables()
+    docs = _docs_df(spark, ["a b c d", "a b c d", "e f g h"])
+    assert dedup.exact_dedup(docs).count() == 2
+    assert dedup.last_band_guard_metrics() is None
+    assert dedup.last_ppjoin_metrics() is None
+    assert dedup.take_observables() == {}
+
+
+def test_observables_families_per_operator(spark):
+    """minhash registers only the band guard; the char hybrid
+    registers both its dense leg's guard and the PPJoin count."""
+    docs = _docs_df(spark, _boilerplate_corpus(n=40))
+    dedup.take_observables()
+    dedup.minhash_pairs(docs).count()
+    assert set(dedup.take_observables()) == {"band_guard"}
+    dedup.char_jaccard_pairs(docs).count()
+    got = dedup.take_observables()
+    assert set(got) == {"band_guard", "ppjoin"}, got
+    assert got["ppjoin"]["n_candidates"] >= 0
+
+
+def test_plain_guard_replaces_split_stage1(spark):
+    """The split's stage-1 metrics ride in its own stage-2 guard
+    entry, so a later plain guard's reading carries no
+    rerouted_rows."""
+    rows = [(i, (i * 0x9E3779B97F4A7C15) & ((1 << 60) - 1))
+            for i in range(70)]
+    fps = spark.createDataFrame(rows, "doc_id long, fp long")
+    # cap 1 < 70 docs over a 6-bit alphabet: every band is hot
+    dedup.simhash_pairs(None, band_cap=1, fps=fps).count()
+    assert dedup.last_band_guard_metrics()["rerouted_rows"] > 0
+    dedup.simhash_pairs(None, band_cap=1, fps=fps,
+                        hot_split=False).count()
+    g = dedup.last_band_guard_metrics()
+    assert "rerouted_rows" not in g and "max_raw_band_size" not in g
+    assert g["dropped_rows"] > 0
