@@ -77,11 +77,11 @@ def bench_mart_stream(spark, tmp: str) -> dict:
 
     from greenplum_dwh_spark.etl import normalize_transactions
     from greenplum_dwh_spark.mart import add_report_data
+    from greenplum_dwh_spark.mart.staging import current_dims
     from greenplum_dwh_spark.sources import load_landing_file
     from greenplum_dwh_spark.sources.landing import last_day_filter
     from greenplum_dwh_spark.streaming.mart_stream import (
         stream_expired_rules, stream_landing)
-    from greenplum_dwh_spark.streaming.pipeline import current_dims
     from greenplum_dwh_spark.warehouse import Warehouse
 
     wh = Warehouse(spark, os.path.join(tmp, "wh"))

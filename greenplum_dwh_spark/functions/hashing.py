@@ -73,6 +73,19 @@ def word_shingles(tokens_col: str = "toks", n: int = 3) -> Column:
         f"i -> array_join(slice({t}, i + 1, {n}), ' ')))")
 
 
+def explode_word_ngrams(tokens_col: str, n: int) -> Column:
+    """One row per word n-gram OCCURRENCE (not distinct, unlike
+    :func:`word_shingles`) over a pre-split token array column — the
+    gram builder of the decontamination operators, batch and stream.
+    Same branch-free short-text guard: for size < n,
+    sequence(1, greatest(size-n+1, 1)) = [1] and slice truncates, so a
+    degenerate doc contributes its whole text as the single gram."""
+    t = tokens_col
+    return F.explode(F.expr(
+        f"transform(sequence(1, greatest(size({t}) - {n - 1}, 1)),"
+        f" i -> concat_ws(' ', slice({t}, i, {n})))"))
+
+
 def with_word_shingles(docs, out: str = "s", n: int = 3,
                        text_col: str = "text"):
     """(doc_id, <out>=shingle array) projection of a documents table.

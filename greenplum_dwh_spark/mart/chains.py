@@ -24,6 +24,10 @@ Semantics preserved exactly:
   strictly decreasing amounts, cumulative sec budget < 1200, ended by a
   success, which is the flagged row; success resets; non-decreasing
   amount or blown budget restarts the chain at the current row.
+
+The transitions are written once, as :func:`chain_fold`: the batch rule
+folds each client's day from ``CHAIN_START``, the streaming detector
+(``streaming.mart_stream``) each micro-batch from ``GroupState``.
 """
 
 from __future__ import annotations
@@ -53,21 +57,20 @@ REPORT_SCHEMA = T.StructType([
 ])
 
 
-def detect_chains_pd(pdf: pd.DataFrame, run_ts: dt.datetime,
-                     min_declines: int = CHAIN_MIN_DECLINES,
-                     sec_budget: int = CHAIN_SEC_BUDGET) -> pd.DataFrame:
-    """Pure-pandas port of the cursor loop for ONE client's rows.
+#: (counter, sec_count, zero_on_prev, prev trans_date, prev amount)
+CHAIN_START = (0, 0, False, None, None)
 
-    ``pdf`` needs columns trans_date, amount, oper_result, passport_num,
-    fio, phone. Testable without Spark (SURVEY.md §5). The reference's
-    constants (≥3 declines, 1200 s budget) are the defaults; the events
-    variant passes corpus-appropriate values.
-    """
-    pdf = pdf.sort_values("trans_date", kind="mergesort")
-    counter, sec_count, zero_on_prev = 0, 0, False
-    prev_ts, prev_amt = None, None
+
+def chain_fold(state: tuple, rows, min_declines: int = CHAIN_MIN_DECLINES,
+               sec_budget: int = CHAIN_SEC_BUDGET) -> tuple[tuple, list]:
+    """The cursor loop over ONE client's ``itertuples`` rows (trans_date,
+    amount, oper_result), sorted by trans_date: ``(state, rows) ->
+    (state, flagged rows)``. The state keeps the previous row's exact
+    timestamp and decimal amount, so any split of the rows into folds
+    flags what one fold flags."""
+    counter, sec_count, zero_on_prev, prev_ts, prev_amt = state
     out = []
-    for row in pdf.itertuples(index=False):
+    for row in rows:
         ts, amt, res = row.trans_date, row.amount, row.oper_result
         if prev_ts is None:
             amount_diff, sec_diff = Decimal(-1), 0
@@ -85,8 +88,7 @@ def detect_chains_pd(pdf: pd.DataFrame, run_ts: dt.datetime,
             if (counter >= min_declines
                     and res == schemas.RESULT_SUCCESS
                     and sec_count < sec_budget):        # :75-82
-                out.append((ts, row.passport_num, row.fio, row.phone,
-                            schemas.FRAUD_AMOUNT_GUESS, run_ts))
+                out.append(row)
                 counter, sec_count, zero_on_prev = 0, 0, True
             elif res == schemas.RESULT_SUCCESS:        # :84-87
                 counter, sec_count, zero_on_prev = 0, 0, True
@@ -95,9 +97,27 @@ def detect_chains_pd(pdf: pd.DataFrame, run_ts: dt.datetime,
             elif (amount_diff < 0 and sec_count < sec_budget
                   and res == schemas.RESULT_DECLINED):  # :94-96
                 counter, zero_on_prev = counter + 1, False
+    return (counter, sec_count, zero_on_prev, prev_ts, prev_amt), out
+
+
+def detect_chains_pd(pdf: pd.DataFrame, run_ts: dt.datetime,
+                     min_declines: int = CHAIN_MIN_DECLINES,
+                     sec_budget: int = CHAIN_SEC_BUDGET) -> pd.DataFrame:
+    """Pure-pandas port of the cursor loop for ONE client's rows.
+
+    ``pdf`` needs columns trans_date, amount, oper_result, passport_num,
+    fio, phone. Testable without Spark (SURVEY.md §5). The reference's
+    constants (≥3 declines, 1200 s budget) are the defaults; the events
+    variant passes corpus-appropriate values.
+    """
+    pdf = pdf.sort_values("trans_date", kind="mergesort")
+    _, hits = chain_fold(CHAIN_START, pdf.itertuples(index=False),
+                         min_declines, sec_budget)
     return pd.DataFrame(
-        out, columns=["fraud_dt", "passport", "fio", "phone",
-                      "fraud_type", "report_dt"])
+        [(r.trans_date, r.passport_num, r.fio, r.phone,
+          schemas.FRAUD_AMOUNT_GUESS, run_ts) for r in hits],
+        columns=["fraud_dt", "passport", "fio", "phone",
+                 "fraud_type", "report_dt"])
 
 
 def detect_amount_guessing(stg: DataFrame, run_ts: dt.datetime) -> DataFrame:

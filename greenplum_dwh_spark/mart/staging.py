@@ -42,6 +42,30 @@ def fact_max_day(wh) -> dt.datetime | None:
     return dt.datetime.combine(row["d"], dt.time.min)
 
 
+def current_dims(wh, scd_type: str = "scd2") -> dict[str, DataFrame]:
+    """Current-version dim DataFrames, resolved NOW. The stream calls
+    this per micro-batch — never cache across batches, because dim
+    rewrites vacuum old version directories."""
+    if scd_type == "scd2":
+        return {n: wh.read(m["hist"]).filter(F.col("end_dt").isNull())
+                for n, m in _DIMS.items()}
+    return {n: wh.read(m["scd1"]) for n, m in _DIMS.items()}
+
+
+def project_dims(cur: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """The fraud rules' columns of whichever dims ``cur`` holds."""
+    cols = {
+        "terminals": ["terminal_id", "terminal_city"],
+        "cards": ["card_num", "account_num"],
+        "accounts": ["account_num", "valid_to", "client"],
+        "clients": ["client_id",
+                    F.concat_ws(" ", "last_name", "first_name",
+                                "patronymic").alias("fio"),
+                    "phone", "passport_valid_to", "passport_num"],
+    }
+    return {n: df.select(*cols[n]) for n, df in cur.items()}
+
+
 def mart_staging(wh, scd_type: str) -> DataFrame | None:
     """Build the denormalized mart input for 'scd2' or 'scd1'."""
     if scd_type not in ("scd2", "scd1"):
@@ -59,19 +83,9 @@ def mart_staging(wh, scd_type: str) -> DataFrame | None:
           .select("trans_id", "trans_date", "card_num", "amt",
                   "oper_result", "terminal"))
 
-    if scd_type == "scd2":
-        cur = {n: wh.read(m["hist"]).filter(F.col("end_dt").isNull())
-               for n, m in _DIMS.items()}
-    else:
-        cur = {n: wh.read(m["scd1"]) for n, m in _DIMS.items()}
-
-    terminals = cur["terminals"].select("terminal_id", "terminal_city")
-    cards = cur["cards"].select("card_num", "account_num")
-    accounts = cur["accounts"].select("account_num", "valid_to", "client")
-    clients = cur["clients"].select(
-        "client_id",
-        F.concat_ws(" ", "last_name", "first_name", "patronymic").alias("fio"),
-        "phone", "passport_valid_to", "passport_num")
+    dims = project_dims(current_dims(wh, scd_type))
+    terminals, cards = dims["terminals"], dims["cards"]
+    accounts, clients = dims["accounts"], dims["clients"]
 
     return (tx
             .join(F.broadcast(terminals),

@@ -70,18 +70,10 @@ def _tok(col: str = "text"):
 # pass over the corpus against a broadcast eval-gram set.
 def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
-    # branch-free guard (see hashing.word_shingles): a CASE WHEN around
-    # a higher-order function drops the map stage out of codegen; for
-    # size < n, sequence(1, greatest(size-n+1, 1)) = [1] and slice
-    # truncates, so a degenerate doc contributes its whole text as the
-    # single gram — same fallback the shingle builders use
     grams = (t.documents
              .select("doc_id", _tok().alias("t"))
-             .select("doc_id", F.explode(F.expr(
-                 f"transform("
-                 f"sequence(1, greatest(size(t) - {DECON_N - 1}, 1)),"
-                 f" i -> concat_ws(' ', slice(t, i, {DECON_N})))"))
-                 .alias("g")))
+             .select("doc_id",
+                     H.explode_word_ngrams("t", DECON_N).alias("g")))
     ev = (grams.filter(F.col("doc_id") % 97 == 0)
           .select("g").distinct())
     tr = grams.filter(F.col("doc_id") % 97 != 0)
@@ -118,11 +110,7 @@ def decontaminate_ngrams8_planted(spark: SparkSession,
                        .otherwise(F.col("text")).alias("text")))
     grams = (planted
              .select("doc_id", _tok().alias("t"))
-             .select("doc_id", F.explode(F.expr(
-                 f"transform("
-                 f"sequence(1, greatest(size(t) - {n - 1}, 1)),"
-                 f" i -> concat_ws(' ', slice(t, i, {n})))"))
-                 .alias("g")))
+             .select("doc_id", H.explode_word_ngrams("t", n).alias("g")))
     ev = (grams.filter(F.col("doc_id") % 97 == 0)
           .select("g").distinct())
     tr = grams.filter(F.col("doc_id") % 97 != 0)
@@ -907,10 +895,8 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # calibration as decontaminate_ngrams: doc_id % 97 eval slice,
     # DECON_N-gram overlap, broadcast eval grams)
     grams = (d3.select("doc_id", _tok().alias("t"))
-             .select("doc_id", F.explode(F.expr(
-                 f"transform(sequence(1, greatest(size(t) - "
-                 f"{DECON_N - 1}, 1)), i -> concat_ws(' ', "
-                 f"slice(t, i, {DECON_N})))")).alias("g")))
+             .select("doc_id",
+                     H.explode_word_ngrams("t", DECON_N).alias("g")))
     ev = grams.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
     contaminated = (grams.filter(F.col("doc_id") % 97 != 0)
                     .join(F.broadcast(ev), "g")

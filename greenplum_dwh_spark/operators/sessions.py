@@ -9,8 +9,8 @@ at sf0.1 vs <1 s for the window plan). The applyInPandas execution
 shape for genuinely non-relational per-key state machines is covered by
 the fraud chain detector (mart/chains.py, operators/chains_events.py).
 
-``sessionize_pd`` (pure pandas, identical semantics) is kept for unit
-tests and as the kernel for the streaming variant
+``session_fold`` (pure Python, identical semantics) is the kernel of
+``sessionize_pd``, used by unit tests, and of the streaming variant
 (applyInPandasWithState).
 
 Gap semantics: new session when the per-operand-floored epoch-second
@@ -47,17 +47,41 @@ def sessionize(events: DataFrame) -> DataFrame:
                  F.max("ts").alias("end_ts")))
 
 
+#: (session_id, n_events, start_ts, last_ts) of the open session
+SESSION_START = (0, 0, None, None)
+
+
+def session_fold(state: tuple, ts_sorted) -> tuple[tuple, list]:
+    """The gap rule over ONE user's event times, sorted by (ts,
+    event_id): ``(state, times) -> (state, closed sessions)``, each
+    closed session ``(session_id, n_events, start_ts, end_ts)`` with
+    exact times."""
+    session_id, n_events, start_ts, last_ts = state
+    last_sec = (None if last_ts is None
+                else pd.Timestamp(last_ts).value // 1_000_000_000)
+    closed = []
+    for ts in ts_sorted:
+        sec = ts.value // 1_000_000_000  # floor epoch sec
+        if last_sec is None or sec - last_sec > SESSION_GAP_SEC:
+            if session_id:
+                closed.append((session_id, n_events, start_ts, last_ts))
+            session_id, n_events, start_ts = session_id + 1, 0, ts
+        n_events += 1
+        last_ts, last_sec = ts, sec
+    return (session_id, n_events, start_ts, last_ts), closed
+
+
 def sessionize_pd(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pure-pandas per-user sessionizer — identical semantics; used by
-    unit tests and the streaming stateful variant."""
+    """Pure-pandas per-user sessionizer: the fold, then a flush of the
+    open session."""
     pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-    sec = pdf["ts"].astype("int64") // 1_000_000_000  # floor epoch sec
-    new_session = (sec - sec.shift(1)).fillna(0) > SESSION_GAP_SEC
-    sid = new_session.cumsum().astype("int32") + 1
-    g = pdf.assign(session_id=sid).groupby("session_id", as_index=False)
-    out = g.agg(user_id=("user_id", "first"), n_events=("ts", "size"),
-                start_ts=("ts", "min"), end_ts=("ts", "max"))
-    return out[["user_id", "session_id", "n_events", "start_ts", "end_ts"]]
+    last, closed = session_fold(SESSION_START, pdf["ts"])
+    if last[0]:
+        closed.append(last)
+    out = pd.DataFrame(closed, columns=["session_id", "n_events",
+                                        "start_ts", "end_ts"])
+    out.insert(0, "user_id", pdf["user_id"].iloc[0] if len(pdf) else None)
+    return out.astype({"session_id": "int32"})
 
 
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,14 +22,14 @@ Implementation choices:
 - ``stream_expired_rules`` — rules 1–2 as a stateless streaming
   projection joined against static current dims (stream-static join:
   supported without watermark, dims re-read per micro-batch).
-- ``stream_city_hops`` — rule 3 needs ordered per-client lag; streams
-  can't host ordered windows, so it runs as ``foreachBatch`` over the
-  accumulated batch using the SAME batch operators (rules.py) — the
-  canonical Spark pattern for window-over-stream logic with bounded
-  batch scope.
-- ``stream_sessionize`` — per-user session state via
-  ``applyInPandasWithState`` with processing-time timeouts, using the
-  session gap semantics of operators/sessions.py.
+- ``city_hop_foreach_batch`` — rule 3 needs ordered per-client lag;
+  streams can't host ordered windows, so it runs as ``foreachBatch``
+  over the accumulated batch using the SAME batch operators (rules.py)
+  — the canonical Spark pattern for window-over-stream logic with
+  bounded batch scope.
+- ``stream_chain_detector`` / ``stream_sessionize`` — per-key state via
+  ``applyInPandasWithState``; the handlers run the batch kernels
+  (``chains.chain_fold``, ``sessions.session_fold``) from GroupState.
 """
 
 from __future__ import annotations
@@ -46,7 +46,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from greenplum_dwh_spark import schemas
 from greenplum_dwh_spark.mart import rules
-from greenplum_dwh_spark.operators.sessions import SESSION_GAP_SEC
+from greenplum_dwh_spark.mart.chains import CHAIN_START, chain_fold
+from greenplum_dwh_spark.mart.staging import project_dims
+from greenplum_dwh_spark.operators.sessions import SESSION_START, session_fold
 
 
 def stream_landing(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -61,7 +63,8 @@ def stream_expired_rules(stream: DataFrame, dims: dict[str, DataFrame],
                          run_ts: dt.datetime) -> DataFrame:
     """Rules 1–2 as a stateless streaming projection.
 
-    ``dims`` carries the static current-version dimension DataFrames.
+    ``dims`` carries the static current-version dimension DataFrames
+    (``staging.current_dims``), projected like the batch mart's.
     NOTE two deliberate divergences from the batch mart at this API
     level (both closed by the production wiring in pipeline.py):
 
@@ -75,16 +78,11 @@ def stream_expired_rules(stream: DataFrame, dims: dict[str, DataFrame],
       when the caller built them; ``run_streaming_mart`` re-resolves
       current versions inside each micro-batch via foreachBatch."""
     tx = stream.select("trans_id", "trans_date", "card_num")
-    cards = dims["cards"].select("card_num", "account_num")
-    accounts = dims["accounts"].select("account_num", "valid_to", "client")
-    clients = dims["clients"].select(
-        "client_id",
-        F.concat_ws(" ", "last_name", "first_name", "patronymic")
-        .alias("fio"),
-        "phone", "passport_valid_to", "passport_num")
-    stg = (tx.join(cards, "card_num")
-           .join(accounts, "account_num")
-           .join(clients, accounts["client"] == clients["client_id"]))
+    d = project_dims(dims)
+    stg = (tx.join(d["cards"], "card_num")
+           .join(d["accounts"], "account_num")
+           .join(d["clients"],
+                 d["accounts"]["client"] == d["clients"]["client_id"]))
     return rules._expired_rows(stg, run_ts)
 
 
@@ -182,25 +180,25 @@ def stream_decontaminate(docs_stream: DataFrame,
     map-only (split → explode → broadcast semi-join) and the per-doc
     aggregation is batch-scoped, so no streaming state accumulates at
     all.  ``eval_grams`` needs one ``g`` column (e.g. produced by the
-    batch operator's gram builder over the eval corpus)."""
+    batch operator's gram builder, ``hashing.explode_word_ngrams``,
+    over the eval corpus)."""
+    from greenplum_dwh_spark.functions.hashing import explode_word_ngrams
     from greenplum_dwh_spark.operators.curation import DECON_N
     grams = (docs_stream
              .select("doc_id", "ts", F.split("text", " ").alias("t"))
-             .select("doc_id", "ts", F.explode(F.expr(
-                 f"transform("
-                 f"sequence(1, greatest(size(t) - {DECON_N - 1}, 1)),"
-                 f" i -> concat_ws(' ', slice(t, i, {DECON_N})))"))
-                 .alias("g")))
+             .select("doc_id", "ts",
+                     explode_word_ngrams("t", DECON_N).alias("g")))
     return (grams.join(F.broadcast(eval_grams), "g")
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_hits")))
 
 
+#: ``session_fold``'s state; NTZ round-trips naive pandas times as-is
 _SESSION_STATE_SCHEMA = T.StructType([
-    T.StructField("last_sec", T.LongType()),
     T.StructField("session_id", T.IntegerType()),
     T.StructField("n_events", T.LongType()),
-    T.StructField("start_sec", T.LongType()),
+    T.StructField("start_ts", T.TimestampNTZType()),
+    T.StructField("last_ts", T.TimestampNTZType()),
 ])
 
 SESSION_OUT_SCHEMA = T.StructType([
@@ -213,27 +211,16 @@ SESSION_OUT_SCHEMA = T.StructType([
 
 
 def _session_update(key, pdfs, state: GroupState):
-    """applyInPandasWithState update fn: per-user running session."""
+    """applyInPandasWithState update fn: ``session_fold`` from the
+    user's state; emits the sessions it closed."""
     (user_id,) = key
-    if state.exists:
-        last_sec, session_id, n_events, start_sec = state.get
-    else:
-        last_sec, session_id, n_events, start_sec = -1, 0, 0, -1
-    rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-    closed = []
-    for r in rows.itertuples(index=False):
-        sec = r.ts.value // 1_000_000_000
-        if last_sec < 0 or sec - last_sec > SESSION_GAP_SEC:
-            if session_id > 0:
-                closed.append((user_id, session_id, n_events,
-                               pd.Timestamp(start_sec, unit="s"),
-                               pd.Timestamp(last_sec, unit="s")))
-            session_id += 1
-            n_events, start_sec = 0, sec
-        n_events += 1
-        last_sec = sec
-    state.update((last_sec, session_id, n_events, start_sec))
-    yield pd.DataFrame(closed, columns=[f.name for f in SESSION_OUT_SCHEMA])
+    rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"],
+                                             kind="mergesort")
+    start = state.get if state.exists else SESSION_START
+    last, closed = session_fold(start, rows["ts"])
+    state.update(last)
+    yield pd.DataFrame([(user_id, *c) for c in closed],
+                       columns=[f.name for f in SESSION_OUT_SCHEMA])
 
 
 def stream_sessionize(events_stream: DataFrame) -> DataFrame:
@@ -250,8 +237,8 @@ _CHAIN_STATE_SCHEMA = T.StructType([
     T.StructField("counter", T.IntegerType()),
     T.StructField("sec_count", T.LongType()),
     T.StructField("zero_on_prev", T.BooleanType()),
-    T.StructField("last_sec", T.LongType()),
-    T.StructField("last_amt_cents", T.LongType()),
+    T.StructField("prev_ts", T.TimestampNTZType()),
+    T.StructField("prev_amt", T.DecimalType(18, 2)),
 ])
 
 CHAIN_OUT_SCHEMA = T.StructType([
@@ -262,58 +249,26 @@ CHAIN_OUT_SCHEMA = T.StructType([
 
 
 def _chain_update(key, pdfs, state: GroupState):
-    """Streaming port of the fn_find_summ_frauds transitions
-    (Data_mart.sql:49-97): per-client state survives micro-batches, so
-    a chain that starts in one batch and completes in the next is still
-    flagged — the streaming equivalent of the batch 20-minute
-    previous-day lookback (Data_mart.sql:33-34). Assumes per-key
-    event-time-ordered arrival (one day per trigger, like the
-    reference's daily loads)."""
-    from greenplum_dwh_spark.mart.chains import (CHAIN_MIN_DECLINES,
-                                                 CHAIN_SEC_BUDGET)
+    """applyInPandasWithState update fn: rule 4's ``chain_fold`` from
+    the client's state. State survives micro-batches, so a chain that
+    starts in one batch and completes in the next is still flagged —
+    the streaming equivalent of the batch 20-minute previous-day
+    lookback (Data_mart.sql:33-34). Assumes per-key event-time-ordered
+    arrival (one day per trigger, like the reference's daily loads)."""
     (client,) = key
-    if state.exists:
-        counter, sec_count, zero_on_prev, last_sec, last_cents = state.get
-    else:
-        counter, sec_count, zero_on_prev, last_sec, last_cents = \
-            0, 0, False, -1, -1
-    rows = pd.concat(list(pdfs)).sort_values("trans_date")
-    out = []
-    for r in rows.itertuples(index=False):
-        sec = r.trans_date.value // 1_000_000_000
-        cents = int(round(float(r.amount) * 100))
-        if last_sec < 0:
-            amount_diff, sec_diff = -1, 0
-        else:
-            amount_diff = cents - last_cents
-            sec_diff = (sec - last_sec) % 86400
-        last_sec, last_cents = sec, cents
-        if zero_on_prev and r.oper_result == schemas.RESULT_DECLINED:
-            counter, zero_on_prev = 1, False
-        elif zero_on_prev and r.oper_result == schemas.RESULT_SUCCESS:
-            sec_count, counter, zero_on_prev = 0, 0, True
-        elif not zero_on_prev:
-            sec_count += sec_diff
-            if (counter >= CHAIN_MIN_DECLINES
-                    and r.oper_result == schemas.RESULT_SUCCESS
-                    and sec_count < CHAIN_SEC_BUDGET):
-                out.append((client, r.trans_date,
-                            schemas.FRAUD_AMOUNT_GUESS))
-                counter, sec_count, zero_on_prev = 0, 0, True
-            elif r.oper_result == schemas.RESULT_SUCCESS:
-                counter, sec_count, zero_on_prev = 0, 0, True
-            elif amount_diff >= 0 or sec_count >= CHAIN_SEC_BUDGET:
-                counter, sec_count, zero_on_prev = 1, 0, False
-            elif (amount_diff < 0 and sec_count < CHAIN_SEC_BUDGET
-                  and r.oper_result == schemas.RESULT_DECLINED):
-                counter, zero_on_prev = counter + 1, False
-    state.update((counter, sec_count, zero_on_prev, last_sec, last_cents))
-    yield pd.DataFrame(out, columns=[f.name for f in CHAIN_OUT_SCHEMA])
+    rows = pd.concat(list(pdfs)).sort_values("trans_date", kind="mergesort")
+    start = state.get if state.exists else CHAIN_START
+    last, hits = chain_fold(start, rows.itertuples(index=False))
+    state.update(last)
+    yield pd.DataFrame(
+        [(client, r.trans_date, schemas.FRAUD_AMOUNT_GUESS) for r in hits],
+        columns=[f.name for f in CHAIN_OUT_SCHEMA])
 
 
 def stream_chain_detector(tx_stream: DataFrame) -> DataFrame:
     """Rule-4 amount-guessing chains over an unbounded transaction
-    stream; needs columns (client, trans_date, amount, oper_result)."""
+    stream; needs columns (client, trans_date, amount decimal(18,2),
+    oper_result)."""
     return (tx_stream
             .select("client", "trans_date", "amount", "oper_result")
             .groupBy("client")

@@ -6,12 +6,12 @@ continuously running variant of the reference's daily
 load→normalize→mart cadence. The rules run inside ``foreachBatch`` so
 each micro-batch
 
-- re-resolves the CURRENT dimension versions through the warehouse
-  (``current_dims(wh)`` is called per batch): SCD rewrites committed by
-  the batch ETL between triggers are picked up, and the vacuum in
-  ``TableStore.overwrite_versioned`` (which removes directories older
-  than v-1) can never strand a long-running stream on a deleted
-  version directory;
+- re-resolves the CURRENT dimension versions through the mart
+  staging's ``current_dims(wh)``, called per batch: SCD rewrites
+  committed by the batch ETL between triggers are picked up, and the
+  vacuum in ``TableStore.overwrite_versioned`` (which removes
+  directories older than v-1) can never strand a long-running stream
+  on a deleted version directory;
 - applies the reference's last-day restriction for rules 1–2
   (``trans_date >= day_start(max(trans_date))`` per batch,
   Data_mart.sql:271-272) — with one landing file per trigger a batch is
@@ -28,25 +28,12 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
+from greenplum_dwh_spark.mart.staging import current_dims
 from greenplum_dwh_spark.sources.landing import last_day_filter
 from greenplum_dwh_spark.streaming.mart_stream import (stream_expired_rules,
                                                        stream_landing)
-
-
-def current_dims(wh) -> dict:
-    """Current-version dim DataFrames, resolved NOW. Call per micro-batch
-    (inside foreachBatch) — never cache across batches, because dim
-    rewrites vacuum old version directories."""
-    return {
-        "cards": wh.read("dim_cards_hist")
-                   .filter(F.col("end_dt").isNull()),
-        "accounts": wh.read("dim_accounts_hist")
-                      .filter(F.col("end_dt").isNull()),
-        "clients": wh.read("dim_clients_hist")
-                     .filter(F.col("end_dt").isNull()),
-    }
 
 
 def run_streaming_mart(wh, landing_dir: str, out_dir: str,

@@ -63,12 +63,11 @@ def run(spark, sf_dir: str) -> dict:
 
     # 3. benchmark decontamination: drop docs overlapping the eval
     # slice (doc_id % 97 == 0 stands in for the benchmark suite)
+    from greenplum_dwh_spark.functions.hashing import explode_word_ngrams
     from greenplum_dwh_spark.operators.curation import DECON_N
     grams = (docs.select("doc_id", F.split("text", " ").alias("t"))
-             .select("doc_id", F.explode(F.expr(
-                 f"transform(sequence(1, greatest(size(t) - "
-                 f"{DECON_N - 1}, 1)), i -> concat_ws(' ', "
-                 f"slice(t, i, {DECON_N})))")).alias("g")))
+             .select("doc_id",
+                     explode_word_ngrams("t", DECON_N).alias("g")))
     ev = (grams.filter(F.col("doc_id") % 97 == 0)
           .select("g").distinct())
     contaminated = (grams.filter(F.col("doc_id") % 97 != 0)
