@@ -14,9 +14,12 @@ day_start(max(trans_date)) − interval '1 hour'``
 (Data_mart.sql:138-139; the `to_timestamp(max, 'YYYY-MM-DD 00:00:00')`
 format hack is the reference's day-truncation idiom, SURVEY.md §2.11.3).
 
-Scale shape: dims are broadcast (≤ entity cardinality, orders below the
-fact) so the 5-way join is 4 broadcast hash joins with zero fact
-shuffles. The max-day scalar comes from the **partition column** —
+Scale shape: each dim's join side is chosen by size against the one
+limit (``session.join_side``): its manifest row count times the width
+of its projected row, which starts no job. Dims sit orders below the
+fact, so on the reference's data the 5-way join is 4 broadcast hash
+joins with zero fact shuffles; a dim past the limit joins by sort-merge
+instead of being broadcast from the driver. The max-day scalar comes from the **partition column** —
 ``day_start(max(trans_date)) == max(trans_dt_day)`` — so on a real
 cluster it resolves from partition listings/column stats instead of a
 full scan, and the threshold literal enables static partition pruning
@@ -31,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from greenplum_dwh_spark.schemas import DIMENSIONS as _DIMS
+from greenplum_dwh_spark.session import join_side, row_bytes
 
 
 def fact_max_day(wh) -> dt.datetime | None:
@@ -83,16 +87,20 @@ def mart_staging(wh, scd_type: str) -> DataFrame | None:
           .select("trans_id", "trans_date", "card_num", "amt",
                   "oper_result", "terminal"))
 
-    dims = project_dims(current_dims(wh, scd_type))
+    # a SCD2 table's count includes closed versions, so it bounds the
+    # current one
+    kind = "hist" if scd_type == "scd2" else "scd1"
+    dims = {n: join_side(df, wh.row_count(_DIMS[n][kind]) * row_bytes(df))
+            for n, df in project_dims(current_dims(wh, scd_type)).items()}
     terminals, cards = dims["terminals"], dims["cards"]
     accounts, clients = dims["accounts"], dims["clients"]
 
     return (tx
-            .join(F.broadcast(terminals),
+            .join(terminals,
                   tx["terminal"] == terminals["terminal_id"], "inner")
-            .join(F.broadcast(cards), "card_num", "inner")
-            .join(F.broadcast(accounts), "account_num", "inner")
-            .join(F.broadcast(clients),
+            .join(cards, "card_num", "inner")
+            .join(accounts, "account_num", "inner")
+            .join(clients,
                   accounts["client"] == clients["client_id"], "inner")
             .select("terminal_city", "trans_id", "trans_date", "card_num",
                     F.col("amt").alias("amount"), "oper_result", "valid_to",

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from greenplum_dwh_spark.functions import hashing as H
 from greenplum_dwh_spark.functions.hashing import md5_bucket
+from greenplum_dwh_spark.session import join_side, row_bytes
 from greenplum_dwh_spark.sources.tpch import Tables
 
 #: Word-n-gram order for decontamination overlap.  Real pipelines use
@@ -871,26 +872,38 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan at each boundary; an ID set is a few longs per surviving
     doc, the expensive work (clustering, span scan, gram mass, LM) is
     captured inside it, and each stage rebuilds as parquet scan + k
-    broadcast-sized id joins — the query form of what a production
-    funnel materializes to storage between stages (measured 11.5 s at
-    sf0.1)."""
+    id joins — the query form of what a production funnel materializes
+    to storage between stages (measured 11.5 s at sf0.1).
+
+    Each id join's side is chosen by size against the one limit
+    (``session.join_side``), sized by the row count of the checkpointed
+    id set it is (or is a subset of): a checkpoint keeps only the
+    ESTIMATED statistics of its input (a 14,286-row checkpoint read as
+    800 KB, the size of its 100,000-row input), so the count is
+    taken."""
     from greenplum_dwh_spark.operators.dedup import (
         drop_repeated_span_dups, exact_dedup, keep_best_per_cluster)
     from greenplum_dwh_spark.operators.text_analysis import dup_ngram_mass
+
+    def ids_side(ids: DataFrame, rows: int) -> DataFrame:
+        return join_side(ids, rows * row_bytes(ids))
 
     docs0 = (Tables(spark, sf_dir).documents
              .select("doc_id", "text", "n_chars"))
     ids1 = (exact_dedup(docs0)
             .select(F.col("rep_doc_id").alias("doc_id"))
             .localCheckpoint())
-    d1 = docs0.join(ids1, "doc_id")
+    n1 = ids1.count()
+    d1 = docs0.join(ids_side(ids1, n1), "doc_id")
     ids2 = (keep_best_per_cluster(d1)
             .select(F.col("keep_doc_id").alias("doc_id"))
             .localCheckpoint())
-    d2 = d1.join(ids2, "doc_id")
+    n2 = ids2.count()
+    d2 = d1.join(ids_side(ids2, n2), "doc_id")
     ids3 = (drop_repeated_span_dups(d2, min_len=15)
             .select("doc_id").localCheckpoint())
-    d3 = d2.join(ids3, "doc_id")
+    n3 = ids3.count()
+    d3 = d2.join(ids_side(ids3, n3), "doc_id")
     # benchmark decontamination on the surviving slice (same
     # calibration as decontaminate_ngrams: doc_id % 97 eval slice,
     # DECON_N-gram overlap, broadcast eval grams)
@@ -902,23 +915,27 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .join(F.broadcast(ev), "g")
                     .select("doc_id").distinct())
     ids4 = (d3.filter(F.col("doc_id") % 97 != 0)
-            .join(contaminated, "doc_id", "left_anti")
+            .join(ids_side(contaminated, n3), "doc_id", "left_anti")
             .select("doc_id").localCheckpoint())
-    d4 = d3.join(ids4, "doc_id")
+    n4 = ids4.count()
+    d4 = d3.join(ids_side(ids4, n4), "doc_id")
     # duplicated-n-gram cut: drop the top-2% most duplicated docs
     m5 = _scored_global_rank(dup_ngram_mass(d4), "dup_bps")
     drop5 = (m5.filter(50 * F.col("rk") > 49 * F.col("n"))
              .select("doc_id"))
     ids5 = (d4.select("doc_id")
-            .join(drop5, "doc_id", "left_anti").localCheckpoint())
-    d5 = d4.join(ids5, "doc_id")
+            .join(ids_side(drop5, n4), "doc_id", "left_anti")
+            .localCheckpoint())
+    n5 = ids5.count()
+    d5 = d4.join(ids_side(ids5, n5), "doc_id")
     # LM-quality cut over the survivors' own bigram LM: drop the
     # bottom-5% scoring tail
     m6 = _scored_global_rank(lm_score(d5), "lm_score_avg")
     drop6 = m6.filter(20 * F.col("rk") <= F.col("n")).select("doc_id")
     ids6 = (d5.select("doc_id")
-            .join(drop6, "doc_id", "left_anti").localCheckpoint())
-    d6 = d5.join(ids6, "doc_id")
+            .join(ids_side(drop6, n5), "doc_id", "left_anti")
+            .localCheckpoint())
+    d6 = d5.join(ids_side(ids6, ids6.count()), "doc_id")
     train = d6.filter(md5_bucket(F.col("doc_id"), 10000) < 9800)
     chunks = chunk_docs(train)
     shards = shard_order(train).select("shard").distinct()

@@ -8,12 +8,46 @@ showing up at 100 TB.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
+
+#: (pattern, replacement) pairs that take out of a plan's text what
+#: changes from run to run of one plan: expression ids, exchange plan
+#: ids, query-stage and codegen-stage numbers, CollectMetrics UUIDs.
+#: A metadata field Spark cut short (``DataFilters: [...]...``) is cut
+#: at a length that counts the ids' digits, so it is dropped whole.
+_RUN_IDS = (
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"(QueryStage|ReusedExchange|Reused) \d+"), r"\1"),
+    (re.compile(r"\*\(\d+\)"), "*()"),
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-"
+                r"[0-9a-f]{12}"), "<uuid>"),
+    (re.compile(r"(\w+): (?:(?!, \w+: ).)*?\.\.\.(?=, \w+: |$)",
+                re.M), r"\1: ..."),
+)
 
 
 def physical_plan(df: DataFrame) -> str:
     """Executed (physical) plan as text, AQE-resolved where possible."""
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def normalize_plan(text: str) -> str:
+    """Plan text with the per-run ids taken out (:data:`_RUN_IDS`), so
+    two runs of one plan read the same text and two plans differ only
+    where their operators do."""
+    for pattern, repl in _RUN_IDS:
+        text = pattern.sub(repl, text)
+    return text
+
+
+def executed_plan_text(df: DataFrame) -> str:
+    """:func:`normalize_plan` of the plan a run of ``df`` executed,
+    with the build plans of the caches it read; call after an action
+    on ``df`` itself, so AQE's plan is final."""
+    return normalize_plan(physical_plan(df))
 
 
 def has_broadcast_join(df: DataFrame) -> bool:

@@ -15,8 +15,16 @@ from __future__ import annotations
 import os
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
+
+#: The one join-side limit: a join side whose size bound is at or under
+#: it is broadcast, any other joins by sort-merge (:func:`join_side`),
+#: and Spark's own broadcast threshold is the same number.  Dims in the
+#: reference are <=101 rows and TPC-H sf0.1 region/nation/supplier are
+#: tiny, so every dim join broadcasts; at 100 TB a fact side never does.
+BROADCAST_LIMIT_BYTES = 32 * 1024 * 1024
 
 #: Defaults chosen for local[32] testing but expressed so they transfer
 #: to a 1000-executor cluster: AQE handles post-shuffle coalescing and
@@ -27,10 +35,7 @@ _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # dims in the reference are <=101 rows; on TPC-H sf0.1 region/nation/
-    # supplier are tiny. 32 MB broadcast threshold keeps every dim join a
-    # broadcast hash join; at 100 TB the fact side never broadcasts.
-    "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+    "spark.sql.autoBroadcastJoinThreshold": str(BROADCAST_LIMIT_BYTES),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.parquet.compression.codec": "zstd",
@@ -75,6 +80,27 @@ def get_spark(app_name: str = "greenplum_dwh_spark", master: str | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def row_bytes(df: DataFrame) -> int:
+    """Spark's default width of one row of ``df`` (20 B a string, 8 B
+    a long, ...): the width a size bound multiplies a row count by.
+    Reads the schema only, so it starts no job."""
+    return int(df._jdf.schema().defaultSize())
+
+
+def join_side(df: DataFrame, size_bytes: int) -> DataFrame:
+    """``df`` as one side of a join, its strategy fixed from an upper
+    bound on its size: broadcast at or under
+    :data:`BROADCAST_LIMIT_BYTES`, else sort-merge.  Both are hints, so
+    AQE cannot swap the build side or turn a sort-merge join into a
+    broadcast at run time: one code path runs one executed plan.  The
+    bound comes from what the caller already knows (manifest row
+    counts, a filled cache's measured bytes), never from Catalyst's
+    estimates, which read a 97-row aggregate as 7.7 MB."""
+    if size_bytes <= BROADCAST_LIMIT_BYTES:
+        return F.broadcast(df)
+    return df.hint("merge")
 
 
 def run_concurrently(spark: SparkSession, *thunks) -> None:

@@ -538,7 +538,7 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
     of rejecting docs against their own half-committed bands."""
     from greenplum_dwh_spark.operators.dedup import (
         BAND_CAP, JACCARD_THRESHOLD, _minhash_bands,
-        _new_vs_base_candidates, _pairs_with_jaccard)
+        _new_vs_base_candidates, _pairs_with_jaccard, _set_stats)
 
     thr = JACCARD_THRESHOLD if threshold is None else threshold
     cap = BAND_CAP if band_cap is None else band_cap
@@ -586,14 +586,19 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
         # CollectMetrics node must execute exactly once per plan or
         # metric retrieval breaks — materializing the (small)
         # candidate list runs the guard once and hands both consumers
-        # plain rows
-        cand = _new_vs_base_candidates(tagged, cap).localCheckpoint()
+        # plain rows.  The new side is the batch's cached bands,
+        # counted (a job over the batch only) to size its join side
+        cand = _new_vs_base_candidates(tagged, cap,
+                                       bands.count()).localCheckpoint()
         base = (store.read(corpus_table)
                 .join(cand.select(F.col("doc_b").alias("doc_id"))
                       .distinct(), "doc_id", "semi")
                 .select("doc_id", "text"))
-        sets_all = sets.unionByName(H.with_word_shingles(base))
-        rejects = (_pairs_with_jaccard(cand, sets_all)
+        # cached and measured, like the batch operator's set index:
+        # the aggregate fills the cache both verify sides then read
+        sets_all = sets.unionByName(H.with_word_shingles(base)).cache()
+        _, _, sets_bytes = _set_stats(sets_all)
+        rejects = (_pairs_with_jaccard(cand, sets_all, sets_bytes)
                    .filter(F.col("jac") >= thr)
                    .select(F.col("doc_a").alias("new_doc"),
                            F.col("doc_b").alias("base_doc"), "jac"))
@@ -620,6 +625,7 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
                                    "doc_id", "left_anti"))
         bands.unpersist()
         sets.unpersist()
+        sets_all.unpersist()
 
     return handle
 
@@ -719,7 +725,8 @@ def phash_ingest_foreach_batch(store, corpus_table: str,
         tagged = (bands_new.withColumn("is_new", F.lit(True))
                   .unionByName(bands_idx
                                .withColumn("is_new", F.lit(False))))
-        cand = D._new_vs_base_candidates(tagged, cap).localCheckpoint()
+        cand = D._new_vs_base_candidates(
+            tagged, cap, bands_new.count()).localCheckpoint()
         rejects = (D._hamming_verify(cand, _PHASH_LAYOUT[0], dist, fps,
                                      base=idx)
                    .select(F.col("doc_a").alias("new_doc"),

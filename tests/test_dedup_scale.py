@@ -1151,14 +1151,16 @@ def test_char_jaccard_hybrid_matches_exact_twin(spark):
     assert pairs(dedup.CHAR_DENSE_PREFIX_CAP) == exact
 
 
-def test_char_jaccard_billion_doc_fallback_paths(spark):
-    """Round-6 verdict item 4: the billion-doc fallbacks must be
-    runnable code paths, not comments.  ``dense_hint_broadcast=False``
-    (dense-gram filter as a co-partitioned shuffle anti/semi join) and
-    ``broadcast_sigs=False`` (verify's signature index join strategy
-    left to AQE) — separately and together — must be byte-identical to
-    the default broadcast plans on a fixture whose dense leg really
-    fires (cap=2 routes most grams dense)."""
+def test_char_jaccard_merge_sides_match_broadcast_sides(spark,
+                                                       monkeypatch):
+    """Every join side of the char jaccard path is sized against the
+    one broadcast limit (``session.join_side``).  With the limit at 0
+    each side takes the sort-merge branch — the plan a corpus past the
+    limit runs — and must give the default (broadcast) run's output,
+    on a fixture whose dense leg really fires (cap=2 routes most grams
+    dense).  No join, cache builds included, may broadcast."""
+    from greenplum_dwh_spark import session
+    from greenplum_dwh_spark.plans import checks
     rng = random.Random(11)
     texts = []
     for i in range(24):
@@ -1168,17 +1170,22 @@ def test_char_jaccard_billion_doc_fallback_paths(spark):
             texts.append(s[:57] + "zzz")       # planted near-dup
     docs = _docs_df(spark, texts)
 
-    def pairs(**kw):
-        return {(r["doc_a"], r["doc_b"], round(r["jac"], 9))
-                for r in dedup.char_jaccard_pairs(
-                    docs, dense_prefix_cap=2, **kw).collect()}
+    def run():
+        df = dedup.char_jaccard_pairs(docs, dense_prefix_cap=2)
+        got = {(r["doc_a"], r["doc_b"], round(r["jac"], 9))
+               for r in df.collect()}
+        return got, checks.physical_plan(df)
 
-    default = pairs()
+    spark.catalog.clearCache()
+    default, plan = run()
     assert len(default) >= 6                    # non-vacuous fixture
-    assert pairs(dense_hint_broadcast=False) == default
-    assert pairs(broadcast_sigs=False) == default
-    assert pairs(dense_hint_broadcast=False,
-                 broadcast_sigs=False) == default
+    assert "BroadcastHashJoin" in plan
+    monkeypatch.setattr(session, "BROADCAST_LIMIT_BYTES", 0)
+    spark.catalog.clearCache()
+    merged, plan = run()
+    assert merged == default
+    assert "SortMergeJoin" in plan
+    assert "BroadcastHashJoin" not in plan
 
 
 def test_char_jaccard_hybrid_random_sweep(spark):

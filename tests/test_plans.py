@@ -49,10 +49,43 @@ def test_mart_staging_broadcasts_dims_and_prunes_partitions(
         normalize_transactions(wh)
     stg = mart_staging(wh, "scd2")
     plan = checks.physical_plan(stg)
-    assert plan.count("BroadcastHashJoin") >= 4
+    assert plan.count("BroadcastHashJoin") == 4
     assert not checks.has_sort_merge_join(stg)
     # static partition pruning on the day-partitioned fact
     assert "trans_dt_day" in checks.partition_filters(stg)
+
+
+def test_mart_staging_joins_a_dim_past_the_limit_by_sort_merge(
+        spark, tmp_path, monkeypatch):
+    """Each dim's join side is sized by its manifest row count times its
+    projected row width.  With the broadcast limit just under the
+    largest dim's size, that dim joins by sort-merge and the other
+    three still broadcast."""
+    from greenplum_dwh_spark import schemas, session
+    from greenplum_dwh_spark.etl import normalize_transactions
+    from greenplum_dwh_spark.mart.staging import (current_dims,
+                                                  mart_staging,
+                                                  project_dims)
+    from greenplum_dwh_spark.sources import load_landing_file
+    from greenplum_dwh_spark.warehouse import Warehouse
+    from tests import bank_fixture as bf
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    for p in bf.write_extracts(spark, str(tmp_path / "ex")):
+        load_landing_file(wh, p)
+        normalize_transactions(wh)
+    dims = project_dims(current_dims(wh, "scd2"))
+    size = {n: wh.row_count(schemas.DIMENSIONS[n]["hist"])
+            * session.row_bytes(df) for n, df in dims.items()}
+    big, second = sorted(size, key=size.get, reverse=True)[:2]
+    assert size[big] > size[second]             # one dim alone is over
+    monkeypatch.setattr(session, "BROADCAST_LIMIT_BYTES", size[second])
+    plan = checks.physical_plan(mart_staging(wh, "scd2"))
+    assert plan.count("BroadcastHashJoin") == 3
+    smj = [ln for ln in plan.splitlines() if "SortMergeJoin" in ln]
+    assert len(smj) == 1
+    key = {"terminals": "terminal_id", "cards": "card_num",
+           "accounts": "account_num", "clients": "client_id"}[big]
+    assert key in smj[0], (big, smj[0])
 
 
 def test_range_join_rewrite_is_equi_not_bnlj(spark, sf_dir):
@@ -346,33 +379,52 @@ def test_image_phash_is_banded_single_python_stage(spark, sf_dir):
     assert "MapInPandas" in plan
 
 
-def _run_plan_counts(df) -> tuple:
+_COUNTED = ("Exchange", "BroadcastHashJoin", "SortMergeJoin", "Window",
+            "InMemoryTableScan")
+
+
+def _run_plan_counts(df) -> tuple[tuple, tuple]:
     """(shuffle exchanges, BroadcastHashJoin, SortMergeJoin, Window,
-    InMemoryTableScan) among the operators a run of ``df`` executes.
-    Only children are walked: a cached table's build plan is an inner
-    child of its scan, planned adaptively once when the cache fills,
-    and its join choices vary from run to run with the order its
-    stages finish in (a count over the plan text read 30 or 32
-    exchanges for the same warm dedup_jaccard_prefix plan)."""
-    counts = dict.fromkeys(("Exchange", "BroadcastHashJoin",
-                            "SortMergeJoin", "Window",
-                            "InMemoryTableScan"), 0)
-    stack = [df._jdf.queryExecution().executedPlan().executedPlan()]
+    InMemoryTableScan) among the operators a run of ``df`` executes,
+    then the same counts summed over the build plans of the caches it
+    reads.  A cached table's build plan is an inner child of its scan,
+    planned adaptively once when the cache fills; each distinct cache
+    counts once, through its query stages and the caches it reads in
+    turn."""
+    jvm = df.sparkSession._jvm
+    run = dict.fromkeys(_COUNTED, 0)
+    builds = dict.fromkeys(_COUNTED, 0)
+    seen: set[int] = set()
+    stack = [(df._jdf.queryExecution().executedPlan().executedPlan(), run)]
     while stack:
-        node = stack.pop()
-        if node.nodeName() in counts:
-            counts[node.nodeName()] += 1
+        node, counts = stack.pop()
+        name = node.nodeName()
+        if name in counts:
+            counts[name] += 1
+        if name == "InMemoryTableScan":
+            cached = node.relation().cacheBuilder().cachedPlan()
+            key = jvm.System.identityHashCode(cached)
+            if key not in seen:
+                seen.add(key)
+                stack.append((cached, builds))
+        if name == "AdaptiveSparkPlan":
+            stack.append((node.executedPlan(), counts))
+            continue
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            stack.append((node.plan(), counts))
+            continue
         kids = node.children()
-        stack += [kids.apply(i) for i in range(kids.size())]
-    return tuple(counts.values())
+        stack += [(kids.apply(i), counts) for i in range(kids.size())]
+    return tuple(run.values()), tuple(builds.values())
 
 
 def test_near_dup_plan_shapes_pinned(spark, sf_dir):
     """Pinned plan shapes of the banded and prefix-filtered near-dup
     queries at sf0.01: shuffle exchanges, join kinds, Window nodes and
-    cached-table scans of the warm plan.  Each query runs once first,
-    so its caches are materialized and the pin reads the plan every
-    later run executes, whatever ran earlier in the session."""
+    cached-table scans of the warm plan, and of the build plans of the
+    caches it reads.  Each query runs once first, so its caches are
+    materialized and the pin reads the plan every later run executes,
+    whatever ran earlier in the session."""
     import os
 
     from greenplum_dwh_spark.operators import dedup
@@ -381,14 +433,38 @@ def test_near_dup_plan_shapes_pinned(spark, sf_dir):
     from greenplum_dwh_spark.operators.similarity import (
         dedup_embedding_lsh)
     sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
-    want = {dedup.dedup_simhash: (3, 3, 0, 2, 4),
-            dedup_image_phash: (3, 3, 0, 2, 4),
-            dedup.dedup_minhash_lsh: (2, 2, 0, 1, 3),
-            dedup.dedup_incremental: (3, 3, 0, 2, 4),
-            dedup.dedup_jaccard_prefix: (0, 5, 0, 0, 6),
-            dedup.dedup_char_jaccard: (4, 9, 0, 1, 11),
-            dedup.dedup_containment: (0, 5, 0, 0, 6),
-            dedup_embedding_lsh: (2, 2, 0, 1, 0)}
+    shingles = (1, 0, 0, 0, 0)                 # the set-index cache
+    prefix = (2, 1, 0, 1, 2)                   # and the PPJoin prefix index
+    want = {dedup.dedup_simhash: ((3, 3, 0, 2, 4), shingles),
+            dedup_image_phash: ((3, 3, 0, 2, 4), (0, 0, 0, 0, 0)),
+            dedup.dedup_minhash_lsh: ((2, 2, 0, 1, 3), shingles),
+            dedup.dedup_incremental: ((3, 3, 0, 2, 4), shingles),
+            dedup.dedup_jaccard_prefix: ((0, 5, 0, 0, 6), prefix),
+            dedup.dedup_char_jaccard: ((4, 9, 0, 1, 11), prefix),
+            dedup.dedup_containment: ((0, 5, 0, 0, 6), prefix),
+            dedup_embedding_lsh: ((2, 2, 0, 1, 0), (0, 0, 0, 0, 0))}
     for query, shape in want.items():
         query(spark, sf01).count()
         assert _run_plan_counts(query(spark, sf01)) == shape, query.__name__
+
+
+def test_each_query_executes_one_plan(spark, sf_dir):
+    """Queries whose join sides AQE used to choose at run time execute
+    one plan: five cold runs (caches cleared before each) give one
+    normalised executed-plan text per query, cache builds included.
+    Run it after any change to a join."""
+    import os
+
+    from greenplum_dwh_spark.operators import dedup
+    from greenplum_dwh_spark.operators.curation import (
+        curation_funnel_counts)
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    for query in (dedup.dedup_jaccard_prefix, dedup.dedup_incremental,
+                  curation_funnel_counts):
+        texts = set()
+        for _ in range(5):
+            spark.catalog.clearCache()
+            df = query(spark, sf01)
+            df.collect()
+            texts.add(checks.executed_plan_text(df))
+        assert len(texts) == 1, query.__name__
