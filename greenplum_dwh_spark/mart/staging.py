@@ -15,11 +15,12 @@ day_start(max(trans_date)) − interval '1 hour'``
 format hack is the reference's day-truncation idiom, SURVEY.md §2.11.3).
 
 Scale shape: each dim's join side is chosen by size against the one
-limit (``session.join_side``): its manifest row count times the width
-of its projected row, which starts no job. Dims sit orders below the
-fact, so on the reference's data the 5-way join is 4 broadcast hash
-joins with zero fact shuffles; a dim past the limit joins by sort-merge
-instead of being broadcast from the driver. The max-day scalar comes from the **partition column** —
+limit (``session.join_side``): its manifest row count times Spark's
+default width of its projected row, an estimate that starts no job.
+Dims sit orders below the fact, so on the reference's data the 5-way
+join is 4 broadcast hash joins with zero fact shuffles; a dim past the
+limit joins by sort-merge instead of being broadcast from the driver.
+The max-day scalar comes from the **partition column** —
 ``day_start(max(trans_date)) == max(trans_dt_day)`` — so on a real
 cluster it resolves from partition listings/column stats instead of a
 full scan, and the threshold literal enables static partition pruning

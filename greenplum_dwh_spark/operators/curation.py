@@ -880,9 +880,10 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     id set it is (or is a subset of): a checkpoint keeps only the
     ESTIMATED statistics of its input (a 14,286-row checkpoint read as
     800 KB, the size of its 100,000-row input), so the count is
-    taken."""
+    observed by each checkpoint's own job (``dedup._checkpointed``)."""
     from greenplum_dwh_spark.operators.dedup import (
-        drop_repeated_span_dups, exact_dedup, keep_best_per_cluster)
+        _checkpointed, drop_repeated_span_dups, exact_dedup,
+        keep_best_per_cluster)
     from greenplum_dwh_spark.operators.text_analysis import dup_ngram_mass
 
     def ids_side(ids: DataFrame, rows: int) -> DataFrame:
@@ -890,19 +891,14 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs0 = (Tables(spark, sf_dir).documents
              .select("doc_id", "text", "n_chars"))
-    ids1 = (exact_dedup(docs0)
-            .select(F.col("rep_doc_id").alias("doc_id"))
-            .localCheckpoint())
-    n1 = ids1.count()
+    ids1, n1 = _checkpointed(exact_dedup(docs0)
+                             .select(F.col("rep_doc_id").alias("doc_id")))
     d1 = docs0.join(ids_side(ids1, n1), "doc_id")
-    ids2 = (keep_best_per_cluster(d1)
-            .select(F.col("keep_doc_id").alias("doc_id"))
-            .localCheckpoint())
-    n2 = ids2.count()
+    ids2, n2 = _checkpointed(keep_best_per_cluster(d1)
+                             .select(F.col("keep_doc_id").alias("doc_id")))
     d2 = d1.join(ids_side(ids2, n2), "doc_id")
-    ids3 = (drop_repeated_span_dups(d2, min_len=15)
-            .select("doc_id").localCheckpoint())
-    n3 = ids3.count()
+    ids3, n3 = _checkpointed(drop_repeated_span_dups(d2, min_len=15)
+                             .select("doc_id"))
     d3 = d2.join(ids_side(ids3, n3), "doc_id")
     # benchmark decontamination on the surviving slice (same
     # calibration as decontaminate_ngrams: doc_id % 97 eval slice,
@@ -914,28 +910,27 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     contaminated = (grams.filter(F.col("doc_id") % 97 != 0)
                     .join(F.broadcast(ev), "g")
                     .select("doc_id").distinct())
-    ids4 = (d3.filter(F.col("doc_id") % 97 != 0)
-            .join(ids_side(contaminated, n3), "doc_id", "left_anti")
-            .select("doc_id").localCheckpoint())
-    n4 = ids4.count()
+    ids4, n4 = _checkpointed(
+        d3.filter(F.col("doc_id") % 97 != 0)
+        .join(ids_side(contaminated, n3), "doc_id", "left_anti")
+        .select("doc_id"))
     d4 = d3.join(ids_side(ids4, n4), "doc_id")
     # duplicated-n-gram cut: drop the top-2% most duplicated docs
     m5 = _scored_global_rank(dup_ngram_mass(d4), "dup_bps")
     drop5 = (m5.filter(50 * F.col("rk") > 49 * F.col("n"))
              .select("doc_id"))
-    ids5 = (d4.select("doc_id")
-            .join(ids_side(drop5, n4), "doc_id", "left_anti")
-            .localCheckpoint())
-    n5 = ids5.count()
+    ids5, n5 = _checkpointed(
+        d4.select("doc_id")
+        .join(ids_side(drop5, n4), "doc_id", "left_anti"))
     d5 = d4.join(ids_side(ids5, n5), "doc_id")
     # LM-quality cut over the survivors' own bigram LM: drop the
     # bottom-5% scoring tail
     m6 = _scored_global_rank(lm_score(d5), "lm_score_avg")
     drop6 = m6.filter(20 * F.col("rk") <= F.col("n")).select("doc_id")
-    ids6 = (d5.select("doc_id")
-            .join(ids_side(drop6, n5), "doc_id", "left_anti")
-            .localCheckpoint())
-    d6 = d5.join(ids_side(ids6, ids6.count()), "doc_id")
+    ids6, n6 = _checkpointed(
+        d5.select("doc_id")
+        .join(ids_side(drop6, n5), "doc_id", "left_anti"))
+    d6 = d5.join(ids_side(ids6, n6), "doc_id")
     train = d6.filter(md5_bucket(F.col("doc_id"), 10000) < 9800)
     chunks = chunk_docs(train)
     shards = shard_order(train).select("shard").distinct()

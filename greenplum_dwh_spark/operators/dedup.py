@@ -65,6 +65,8 @@ no Python UDFs.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -102,20 +104,41 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
                  F.min("doc_id").alias("rep_doc_id")))
 
 
+def _cache_stats(cached: DataFrame) -> tuple[int, int]:
+    """(rows, bytes) of a FILLED cache.  A filled cache's statistics
+    are measured, not estimated (500 set-index rows read 594 KB at
+    sf0.01), so reading them starts no job."""
+    stats = (cached.select("*")._jdf.queryExecution().optimizedPlan()
+             .stats())
+    return int(stats.rowCount().get()), int(stats.sizeInBytes())
+
+
 def _set_stats(sets_df: DataFrame, *aggs) -> tuple:
     """(docs, Σ|s|, bytes, *aggs) of a CACHED (doc_id, s) set index,
     from one aggregate over it: the job fills the cache the operator's
-    action would fill anyway, and a filled cache's statistics are
-    measured, so ``bytes`` is the cache's exact size (500 docs read
-    594 KB at sf0.01).  The size bounds of the family's join sides
-    (:func:`~greenplum_dwh_spark.session.join_side`) all come from
-    this one read."""
-    row = sets_df.agg(F.count(F.lit(1)),
-                      F.coalesce(F.sum(F.size("s")), F.lit(0)),
+    action would fill anyway, and the filled cache's measured rows and
+    bytes (:func:`_cache_stats`) size the family's join sides
+    (:func:`~greenplum_dwh_spark.session.join_side`)."""
+    row = sets_df.agg(F.coalesce(F.sum(F.size("s")), F.lit(0)),
                       *aggs).first()
-    size = (sets_df.select("*")._jdf.queryExecution().optimizedPlan()
-            .stats().sizeInBytes())
-    return (row[0], row[1], int(size), *row[2:])
+    docs, size = _cache_stats(sets_df)
+    return (docs, row[0], size, *row[1:])
+
+
+def _gram_freq(grams: DataFrame) -> tuple:
+    """(freq, freq bytes, stats) of a CACHED (doc_id, s) set index:
+    ``freq`` is its cached gram document-frequency table (g, df), and
+    ``stats`` is (docs, Σ|s|, set bytes) as :func:`_set_stats` reads
+    them.  One aggregate over ``freq`` fills both caches, so every size
+    is measured: the df table is one row per DISTINCT gram, which a
+    bound of Σ|s| rows overstated ~350× (word 2-grams) and ~1,700×
+    (char 4-grams) at the derived sf1."""
+    freq = (grams.select(F.explode("s").alias("g"))
+            .groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+            .cache())
+    n_elems = freq.agg(F.coalesce(F.sum("df"), F.lit(0))).first()[0]
+    docs, sets_bytes = _cache_stats(grams)
+    return freq, _cache_stats(freq)[1], (docs, n_elems, sets_bytes)
 
 
 def _pairs_with_jaccard(pairs: DataFrame, sets_df: DataFrame,
@@ -127,11 +150,12 @@ def _pairs_with_jaccard(pairs: DataFrame, sets_df: DataFrame,
     Under it the index is broadcast: a shuffle join here moves one
     shingle *array* per candidate row (~1 KB each — measured 16 GB
     shuffled and 90 s for 10.9 M candidates at the derived sf1), while
-    the index itself is one row per doc (~1 KB/doc — 50 MB at 50 k
-    docs).  Broadcast attaches the arrays map-side and the select
-    drops them immediately after the measure, so nothing array-sized
-    is ever exchanged.  Past the limit it joins by sort-merge rather
-    than broadcast an index the driver cannot hold."""
+    the index itself is one row per doc (~1 KB/doc — its filled cache
+    reads 71 MB at the derived sf1's 50 k docs, under the limit).
+    Broadcast attaches the arrays map-side and the select drops them
+    immediately after the measure, so nothing array-sized is ever
+    exchanged.  Past the limit it joins by sort-merge rather than
+    broadcast an index the driver cannot hold."""
     sets = join_side(sets_df, sets_bytes)
     a = sets.alias("sa")
     b = sets.alias("sb")
@@ -172,6 +196,27 @@ def _observed(df: DataFrame, aggs: list, family: str | None = None,
     return observed, part
 
 
+def _metrics(part) -> dict:
+    """Metrics of one ``part`` of :func:`_observed`; call *after* the
+    action that ran the plan.  An Observation whose node AQE's
+    empty-relation propagation pruned never fires, so its metrics are
+    recomputed from the retained fallback plan (one extra small job)."""
+    obs, fallback = part
+    try:
+        return obs.get
+    except Exception:
+        return fallback.first().asDict()
+
+
+def _checkpointed(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` local-checkpointed, and its row count.  The count is
+    observed by the checkpoint's own job, so it starts no job of its
+    own (:func:`_metrics`)."""
+    observed, part = _observed(df, [F.count(F.lit(1)).alias("n")])
+    checkpoint = observed.localCheckpoint()
+    return checkpoint, int(_metrics(part)["n"])
+
+
 def _as_ints(stats: dict) -> dict:
     """Observed stats as ints.  A NULL aggregate reads 0 (an EMPTY
     observed leg, e.g. the split's stage 2 when no composite bucket
@@ -188,23 +233,14 @@ def _as_ints(stats: dict) -> dict:
 
 def _read(family: str) -> dict | None:
     """Metrics of ``family``'s newest entry, or None if none is
-    registered; call *after* the action that ran the plan.  An
-    Observation whose node AQE's empty-relation propagation pruned
-    never fires, so its part is recomputed from the retained fallback
-    plan (one extra small job, diagnostics path only)."""
+    registered; call *after* the action that ran the plan
+    (:func:`_metrics`)."""
     entry = _OBSERVABLES.get(family)
     if entry is None:
         return None
     m: dict = {}
     for part in entry:
-        if isinstance(part, dict):
-            m.update(part)
-            continue
-        obs, fallback = part
-        try:
-            m.update(obs.get)
-        except Exception:
-            m.update(fallback.first().asDict())
+        m.update(part if isinstance(part, dict) else _metrics(part))
     return _as_ints(m)
 
 
@@ -1110,7 +1146,7 @@ def _verified_pairs(pairs: DataFrame | list[DataFrame],
        against an index of fixed 64-byte gram signatures
        (:func:`_gram_signatures`), whose join side is chosen by size
        against the one limit (``session.join_side``: docs × its
-       76-byte row) — broadcast up to ~440 k docs, sort-merge past
+       76-byte row) — broadcast up to ~1.7 M docs, sort-merge past
        them.  The bound is EXACT, not
        probabilistic: a gram of A whose bit is absent from B's bitmap
        cannot be in B, and each such bit carries ≥ 1 gram, so
@@ -1126,7 +1162,7 @@ def _verified_pairs(pairs: DataFrame | list[DataFrame],
        past it a SHUFFLE join, where the array index is shuffled once
        (one row per doc) and survivors are few.
 
-    ``stats`` is :func:`_set_stats` of ``sets_df``.
+    ``stats`` is (docs, Σ|s|, bytes) of ``sets_df`` (:func:`_gram_freq`).
 
     ``pairs`` may be a MULTISET (the raw prefix-match rows): the
     survivors are deduplicated *after* the signature filter, so the
@@ -1202,7 +1238,8 @@ def _verified_pairs(pairs: DataFrame | list[DataFrame],
                     (inter.cast("double") / denom).alias(out_col)))
 
 
-def _prefix_index(grams: DataFrame, fr, n_elems: int) -> DataFrame:
+def _prefix_index(grams: DataFrame, fr, freq: DataFrame,
+                  freq_bytes: int) -> DataFrame:
     """The PPJoin prefix index of a (doc_id, s=token array) set index
     at snapped threshold ``fr``: (doc_id, g, n, rk) for each doc's
     ``|A| − ⌈t·|A|⌉ + 1`` rarest tokens under the global (df, g)
@@ -1218,18 +1255,26 @@ def _prefix_index(grams: DataFrame, fr, n_elems: int) -> DataFrame:
     index on both sides (measured 25 s → 4 s at sf0.1 on a
     three-reference plan), containment's probe once per run (~0.7 s
     at sf0.1).  Its size is ~(1−t)·Σ|doc| tokens, far smaller than
-    the corpus.  The df table has at most ``n_elems`` = Σ|s| rows,
-    which sizes its join side (``session.join_side``)."""
+    the corpus, and :func:`_prefix_rows` bounds its rows.  ``freq`` is
+    the cached df table of :func:`_gram_freq`, whose measured
+    ``freq_bytes`` size its join side (``session.join_side``)."""
     ex = grams.select("doc_id", F.explode("s").alias("g"),
                       F.size("s").alias("n"))
-    freq = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "g")
-    return (ex.join(join_side(freq, n_elems * row_bytes(freq)), "g")
+    return (ex.join(join_side(freq, freq_bytes), "g")
             .withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk")
                     <= F.col("n") - _ceil_mul(F.col("n"), fr) + 1)
             .select("doc_id", "g", "n", "rk")
             .cache())
+
+
+def _prefix_rows(stats: tuple, fr) -> int:
+    """Bound on the rows of :func:`_prefix_index` at ``fr`` from the
+    set index's ``stats`` (docs, Σ|s|, bytes): a doc of n tokens keeps
+    n − ⌈t·n⌉ + 1 ≤ (1 − t)·n + 1 of them."""
+    n_docs, n_elems, _ = stats
+    return math.ceil((1 - fr) * n_elems) + n_docs
 
 
 #: char dense leg: element-sampling rate of the sampled sketch tier
@@ -1246,11 +1291,14 @@ def _prefix_filtered_pairs(grams: DataFrame,
                            band_cap: int = BAND_CAP) -> DataFrame:
     """PPJoin core over a CACHED (doc_id, s=token array) set index
     ``grams`` (see :func:`jaccard_prefix_pairs` for the base filter
-    derivations).  One aggregate over the cache (:func:`_set_stats`)
-    sizes every join side the core fixes — the df table, the prefix
-    self-join, the dense-gram and cohort filters, the signature index
-    and the gram arrays: each broadcasts under the one limit and joins
-    by sort-merge past it (``session.join_side``).
+    derivations).  One aggregate (:func:`_gram_freq`) fills the set
+    index and its df table and sizes every join side the core fixes,
+    each broadcast under the one limit and joined by sort-merge past
+    it (``session.join_side``): the df table and the gram arrays by
+    their caches' measured bytes; the prefix self-join, the dense-gram
+    filter (a dense gram holds more than ``dense_prefix_cap`` prefix
+    rows) and the cohort filter by row-count bounds (:func:`_prefix_rows`,
+    docs) times the row width; the signature index by docs × its row.
 
     Measured on the sf10 probe (500 k docs: 837 M match rows, 109 M
     distinct candidates, 25.6 k real pairs):
@@ -1279,11 +1327,12 @@ def _prefix_filtered_pairs(grams: DataFrame,
     # prune a pair at jaccard exactly t
     fr = _snap(threshold)
     t_factor = fr / (1 + fr)
-    stats = _set_stats(grams)
-    n_docs, n_elems, _ = stats
-    prefix = _prefix_index(grams, fr, n_elems)
+    freq, freq_bytes, stats = _gram_freq(grams)
+    n_docs = stats[0]
+    prefix_rows = _prefix_rows(stats, fr)
+    prefix = _prefix_index(grams, fr, freq, freq_bytes)
     if caches is not None:
-        caches.append(prefix)
+        caches += [freq, prefix]
     na, nb = F.col("a.n"), F.col("b.n")
     ra, rb = F.col("a.rk"), F.col("b.rk")
     alpha = _ceil_mul(na + nb, t_factor)
@@ -1292,8 +1341,8 @@ def _prefix_filtered_pairs(grams: DataFrame,
         # both sides read one cached index: only the hint fixes which
         # side builds
         return (px.alias("a")
-                .join(join_side(px, n_elems * row_bytes(px)).alias("b"),
-                      "g")
+                .join(join_side(px, prefix_rows * row_bytes(px))
+                      .alias("b"), "g")
                 .filter((F.col("a.doc_id") < F.col("b.doc_id"))
                         # size-ratio prune: j >= t forces t|A| <= |B| <= |A|/t
                         & (nb >= _ceil_mul(na, fr))
@@ -1340,13 +1389,15 @@ def _prefix_filtered_pairs(grams: DataFrame,
         gcount = prefix.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
         # dense grams are the HEAD of the gram-frequency distribution
         # — universe-bounded (≤ alphabet⁴ for char grams) and in
-        # practice thousands of keys.  The side is sized by the weak
-        # bound, Σ|s| rows: under the limit it broadcasts; past it the
-        # anti/semi joins below shuffle on g, which gcount's
-        # aggregation already co-partitioned — same rows, same output,
-        # no driver-sized relation anywhere.
+        # practice thousands of keys.  Each holds more than the cap's
+        # prefix rows, so the side is sized by prefix rows / (cap + 1):
+        # under the limit it broadcasts; past it the anti/semi joins
+        # below shuffle on g, which gcount's aggregation already
+        # co-partitioned — same rows, same output, no driver-sized
+        # relation anywhere.
         dense_g = gcount.filter(F.col("c") > dense_prefix_cap).select("g")
-        dense_g = join_side(dense_g, n_elems * row_bytes(dense_g))
+        dense_g = join_side(dense_g, prefix_rows // (dense_prefix_cap + 1)
+                            * row_bytes(dense_g))
         sparse = prefix.join(dense_g, "g", "left_anti")
         cohort = (prefix.join(dense_g, "g", "left_semi")
                   .select("doc_id").distinct())
@@ -1416,11 +1467,10 @@ def containment_pairs(docs: DataFrame,
     if caches is not None:
         caches.append(grams)
     fr = _snap(threshold)
-    stats = _set_stats(grams)
-    n_elems = stats[1]
-    probe = _prefix_index(grams, fr, n_elems)
+    freq, freq_bytes, stats = _gram_freq(grams)
+    probe = _prefix_index(grams, fr, freq, freq_bytes)
     if caches is not None:
-        caches.append(probe)
+        caches += [freq, probe]
     # the index side stays uncached — a linear explode of the cached
     # gram table, no shuffle
     ex = grams.select("doc_id", F.explode("s").alias("g"),
@@ -1431,9 +1481,11 @@ def containment_pairs(docs: DataFrame,
     # the raw match MULTISET flows straight into the signature
     # pre-filter, which distincts after it (a pre-filter distinct was
     # measured at 3.5 s on the 3.1 M candidate pairs the small shared
-    # vocabulary admits at sf0.1)
+    # vocabulary admits at sf0.1).  The probe, at most (1 − t) of the
+    # index's rows plus one a doc, is the side the hint sizes
+    probe = join_side(probe, _prefix_rows(stats, fr) * row_bytes(probe))
     cand = (probe.alias("a")
-            .join(join_side(ex, n_elems * row_bytes(ex)).alias("b"), "g")
+            .join(ex.alias("b"), "g")
             .filter(smaller_first)
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b")))

@@ -19,12 +19,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-#: The one join-side limit: a join side whose size bound is at or under
-#: it is broadcast, any other joins by sort-merge (:func:`join_side`),
-#: and Spark's own broadcast threshold is the same number.  Dims in the
+#: The one join-side limit: a join side whose size is at or under it
+#: is broadcast, any other joins by sort-merge (:func:`join_side`), and
+#: Spark's own broadcast threshold is the same number.  Dims in the
 #: reference are <=101 rows and TPC-H sf0.1 region/nation/supplier are
 #: tiny, so every dim join broadcasts; at 100 TB a fact side never does.
-BROADCAST_LIMIT_BYTES = 32 * 1024 * 1024
+#: 128 MiB broadcasts the near-dup set indexes at the derived sf1 (the
+#: minhash index's filled cache reads 71 MB there), where a sort-merge
+#: verify would ship one shingle array per candidate row; past it
+#: (sf10: ~10x that) they join by sort-merge.
+BROADCAST_LIMIT_BYTES = 128 * 1024 * 1024
 
 #: Defaults chosen for local[32] testing but expressed so they transfer
 #: to a 1000-executor cluster: AQE handles post-shuffle coalescing and
@@ -83,21 +87,24 @@ def get_spark(app_name: str = "greenplum_dwh_spark", master: str | None = None,
 
 
 def row_bytes(df: DataFrame) -> int:
-    """Spark's default width of one row of ``df`` (20 B a string, 8 B
-    a long, ...): the width a size bound multiplies a row count by.
+    """Spark's default width of one row of ``df`` (8 B a long, 20 B a
+    string, one element an array, ...): the width a row-count bound
+    multiplies to estimate a side's bytes.  It undercounts long strings
+    and arrays, so a size made with it is an estimate, not a bound.
     Reads the schema only, so it starts no job."""
     return int(df._jdf.schema().defaultSize())
 
 
 def join_side(df: DataFrame, size_bytes: int) -> DataFrame:
-    """``df`` as one side of a join, its strategy fixed from an upper
-    bound on its size: broadcast at or under
-    :data:`BROADCAST_LIMIT_BYTES`, else sort-merge.  Both are hints, so
-    AQE cannot swap the build side or turn a sort-merge join into a
-    broadcast at run time: one code path runs one executed plan.  The
-    bound comes from what the caller already knows (manifest row
-    counts, a filled cache's measured bytes), never from Catalyst's
-    estimates, which read a 97-row aggregate as 7.7 MB."""
+    """``df`` as one side of a join, its strategy fixed from its size:
+    broadcast at or under :data:`BROADCAST_LIMIT_BYTES`, else
+    sort-merge.  Both are hints, so AQE cannot swap the build side or
+    turn a sort-merge join into a broadcast at run time: one code path
+    runs one executed plan.  The size comes from what the caller
+    already knows (a filled cache's measured bytes, or a row-count
+    bound from a manifest or an aggregate the caller runs anyway, times
+    :func:`row_bytes`), never from Catalyst's estimates, which read a
+    97-row aggregate as 7.7 MB."""
     if size_bytes <= BROADCAST_LIMIT_BYTES:
         return F.broadcast(df)
     return df.hint("merge")

@@ -538,7 +538,8 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
     of rejecting docs against their own half-committed bands."""
     from greenplum_dwh_spark.operators.dedup import (
         BAND_CAP, JACCARD_THRESHOLD, _minhash_bands,
-        _new_vs_base_candidates, _pairs_with_jaccard, _set_stats)
+        _checkpointed, _new_vs_base_candidates, _pairs_with_jaccard,
+        _set_stats)
 
     thr = JACCARD_THRESHOLD if threshold is None else threshold
     cap = BAND_CAP if band_cap is None else band_cap
@@ -562,11 +563,16 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         from greenplum_dwh_spark.functions import hashing as H
-        if not batch_df.take(1):
-            return
         docs = (batch_df.select("doc_id", "text")
                 .dropDuplicates(["doc_id"]))
         bands, sets = _minhash_bands(docs)
+        # one aggregate over the batch's set index: it fills the cache
+        # every later step reads, tells an empty batch, and measures
+        # the bytes and docs the join sides are sized from
+        n_docs, _, sets_bytes = _set_stats(sets)
+        if not n_docs:
+            sets.unpersist()
+            return
         bands = bands.cache()
         batch_ids = docs.select("doc_id")
         idx = (store.read(index_table)
@@ -586,19 +592,18 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
         # CollectMetrics node must execute exactly once per plan or
         # metric retrieval breaks — materializing the (small)
         # candidate list runs the guard once and hands both consumers
-        # plain rows.  The new side is the batch's cached bands,
-        # counted (a job over the batch only) to size its join side
-        cand = _new_vs_base_candidates(tagged, cap,
-                                       bands.count()).localCheckpoint()
+        # plain rows.  The new side holds the batch's docs × bands
+        cand, n_cand = _checkpointed(_new_vs_base_candidates(
+            tagged, cap, n_docs * (H.MINHASH_PERMS // H.MINHASH_BAND_R)))
         base = (store.read(corpus_table)
                 .join(cand.select(F.col("doc_b").alias("doc_id"))
                       .distinct(), "doc_id", "semi")
                 .select("doc_id", "text"))
-        # cached and measured, like the batch operator's set index:
-        # the aggregate fills the cache both verify sides then read
-        sets_all = sets.unionByName(H.with_word_shingles(base)).cache()
-        _, _, sets_bytes = _set_stats(sets_all)
-        rejects = (_pairs_with_jaccard(cand, sets_all, sets_bytes)
+        sets_all = sets.unionByName(H.with_word_shingles(base))
+        # the batch's measured bytes, plus at most one base doc per
+        # candidate at the batch's mean set size: an estimate
+        all_bytes = sets_bytes + n_cand * -(-sets_bytes // n_docs)
+        rejects = (_pairs_with_jaccard(cand, sets_all, all_bytes)
                    .filter(F.col("jac") >= thr)
                    .select(F.col("doc_a").alias("new_doc"),
                            F.col("doc_b").alias("base_doc"), "jac"))
@@ -625,7 +630,6 @@ def neardup_ingest_foreach_batch(store, corpus_table: str,
                                    "doc_id", "left_anti"))
         bands.unpersist()
         sets.unpersist()
-        sets_all.unpersist()
 
     return handle
 
@@ -712,9 +716,9 @@ def phash_ingest_foreach_batch(store, corpus_table: str,
         # never banded or indexed — no pixels to be near anything;
         # unreachable for text packed by pack_image_payloads,
         # load-bearing for raw-payload sources
-        fps = (image_dhashes(pack_image_payloads(docs, width=16))
-               .filter(F.col("h1").isNotNull())
-               .localCheckpoint())
+        fps, n_fps = D._checkpointed(
+            image_dhashes(pack_image_payloads(docs, width=16))
+            .filter(F.col("h1").isNotNull()))
         bands_new = D._hamming_bands(fps, *_PHASH_LAYOUT)
         idx = (store.read(index_table)
                .filter(F.col("_batch_id") != int(batch_id))
@@ -725,8 +729,10 @@ def phash_ingest_foreach_batch(store, corpus_table: str,
         tagged = (bands_new.withColumn("is_new", F.lit(True))
                   .unionByName(bands_idx
                                .withColumn("is_new", F.lit(False))))
+        cols, col_bits, band_bits = _PHASH_LAYOUT
         cand = D._new_vs_base_candidates(
-            tagged, cap, bands_new.count()).localCheckpoint()
+            tagged, cap,
+            n_fps * len(cols) * (col_bits // band_bits)).localCheckpoint()
         rejects = (D._hamming_verify(cand, _PHASH_LAYOUT[0], dist, fps,
                                      base=idx)
                    .select(F.col("doc_a").alias("new_doc"),

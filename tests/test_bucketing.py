@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from greenplum_dwh_spark.plans import checks
+from greenplum_dwh_spark.session import BROADCAST_LIMIT_BYTES
 from greenplum_dwh_spark.sources.tpch import Tables
 
 
@@ -46,7 +47,7 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
         assert joined.count() > 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(32 * 1024 * 1024))
+                       str(BROADCAST_LIMIT_BYTES))
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 

@@ -1255,8 +1255,8 @@ def test_hybrid_band_r_adapts_to_threshold(spark):
 
 def test_ppjoin_caches_ownership_contract(spark):
     """Round-5 ADVICE: the PPJoin family's pinned intermediates
-    (grams + prefix index) must be releasable by the caller — the
-    ``caches`` list contract from dup_ngram_mass.  A long-lived
+    (grams, df table and prefix index) must be releasable by the
+    caller — the ``caches`` list contract from dup_ngram_mass.  A long-lived
     session composing these verbs otherwise accumulates pinned
     storage until LRU eviction."""
     rng = random.Random(11)
@@ -1269,7 +1269,7 @@ def test_ppjoin_caches_ownership_contract(spark):
     caches: list = []
     out = dedup.jaccard_prefix_pairs(docs, caches=caches).collect()
     assert len(out) >= 1
-    assert len(caches) == 2                   # grams + prefix index
+    assert len(caches) == 3                   # grams + df table + prefix index
     assert all(df.storageLevel.useMemory for df in caches)
     for df in caches:
         df.unpersist()
@@ -1277,7 +1277,7 @@ def test_ppjoin_caches_ownership_contract(spark):
 
     caches = []
     dedup.containment_pairs(docs, caches=caches).collect()
-    assert len(caches) == 2                   # grams + probe index (r11)
+    assert len(caches) == 3                   # grams + df table + probe index
     assert all(df.storageLevel.useMemory for df in caches)
     for df in caches:
         df.unpersist()

@@ -434,7 +434,7 @@ def test_near_dup_plan_shapes_pinned(spark, sf_dir):
         dedup_embedding_lsh)
     sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     shingles = (1, 0, 0, 0, 0)                 # the set-index cache
-    prefix = (2, 1, 0, 1, 2)                   # and the PPJoin prefix index
+    prefix = (2, 1, 0, 1, 3)                   # the df table, the prefix index
     want = {dedup.dedup_simhash: ((3, 3, 0, 2, 4), shingles),
             dedup_image_phash: ((3, 3, 0, 2, 4), (0, 0, 0, 0, 0)),
             dedup.dedup_minhash_lsh: ((2, 2, 0, 1, 3), shingles),
